@@ -32,8 +32,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Output is EXACTLY the single-partition window's (the shard
   * function is monotone in the order key, ties share a shard), so
   * DuckDB hash-oracles written against the logical window still
-  * match. At 100 TB, persist `df` before calling (two scans
-  * otherwise); at test scale the double scan is cheaper than a cache.
+  * match. `runningSum` scans `df` twice (phase 1 and phase 3); a
+  * caller that also derives the shard function from the data scans it
+  * more ([[Router.microBatch]]'s quantile bounds make three passes), so
+  * at 100 TB persist `df` before calling; at test scale the repeated
+  * scan is cheaper than a cache. An input that fits ONE shard takes
+  * [[runningSumOneShard]] instead: one scan, nothing eager.
   */
 object ShardedWindow {
 
@@ -86,13 +90,35 @@ object ShardedWindow {
     val offsets = spark.createDataFrame(
       spark.sparkContext.parallelize(offRows, 1), offSchema)
     // phase 3: shard-local window + broadcast offset add
-    val w = Window.partitionBy(col(group), col("__shard"))
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tagged.join(broadcast(offsets), Seq(group, "__shard"))
-      .withColumn(out, sum(value).over(w) + col("__off"))
+      .withColumn(out, sum(value).over(shardWindow(group, order)) + col("__off"))
       .drop("__shard", "__off")
   }
+
+  /** Constant-shard fast path of [[runningSum]], for an input the
+    * caller sized at ONE shard: with no earlier shard every offset is
+    * 0, so phases 1-2 vanish — no totals collect, no offsets
+    * broadcast, nothing runs eagerly; the running sum is one window in
+    * the consuming job. The window still partitions by
+    * (group, __shard), and the output has [[runningSum]]'s schema
+    * (group column first, as its USING join leaves it).
+    *
+    * @param shard constant-valued per row; it may carry a per-row
+    *              guard (e.g. `raise_error` on an invalid order key),
+    *              which also keeps it non-foldable, so the optimizer
+    *              cannot drop it from the window's partitioning
+    */
+  def runningSumOneShard(df: DataFrame, group: String, shard: Column,
+                         order: Seq[Column], value: Column,
+                         out: String): DataFrame =
+    df.withColumn("__shard", shard.cast("long"))
+      .select(col(group) +: df.columns.toSeq.filter(_ != group).map(c => col(s"`$c`")) :+
+        sum(value).over(shardWindow(group, order)).as(out): _*)
+
+  private def shardWindow(group: String, order: Seq[Column]) =
+    Window.partitionBy(col(group), col("__shard"))
+      .orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
   /** Distributed per-group top-k — the scale-safe form of
     * `ROW_NUMBER() OVER (PARTITION BY group ORDER BY …) <= k`.

@@ -32,6 +32,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object HttpIngress {
 
+  /** Largest request body the gateway reads (bytes). The read stops
+    * one byte past it, so a hostile or runaway client costs at most
+    * this much heap per in-flight request; a longer body is answered
+    * 413 `Request size exceeds max limit` and never spooled. */
+  val MaxBodyBytes: Int = 4 << 20
+
   /** Start the gateway on `port` (0 = ephemeral). Returns the server;
     * `stop(0)` it when done. `isAuthorized` is consulted per request
     * with the envelope's writeKey (401 on refusal, as gateway.go's
@@ -81,9 +87,13 @@ object HttpIngress {
         else if (!permits.tryAcquire()) // shed before reading the body
           answer(exchange, TooManyRequests)
         else try {
-          val body = new String(exchange.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          if (body.isEmpty) answer(exchange, RequestBodyNil)
+          val in = exchange.getRequestBody
+          val bytes = in.readNBytes(MaxBodyBytes + 1)
+          lazy val body = new String(bytes, StandardCharsets.UTF_8)
+          if (bytes.length > MaxBodyBytes) {
+            discard(in, 4L * MaxBodyBytes)
+            answer(exchange, RequestBodyTooLarge)
+          } else if (bytes.isEmpty) answer(exchange, RequestBodyNil)
           else extractWriteKey(body) match {
             case None => answer(exchange, NoWriteKeyInBasicAuth)
             case Some(wk) if !isAuthorized(wk) => answer(exchange, InvalidWriteKey)
@@ -157,6 +167,17 @@ object HttpIngress {
   private[sources] def extractWriteKey(body: String): Option[String] = {
     val m = """"writeKey"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(body)
     m.map(_.group(1))
+  }
+
+  /** Read and drop up to `limit` more bytes of an oversized body, in a
+    * fixed buffer: a client still sending then reads the 413 instead
+    * of a connection reset. Past `limit` the connection is cut. */
+  private def discard(in: java.io.InputStream, limit: Long): Unit = {
+    val buf = new Array[Byte](64 << 10)
+    var left = limit
+    var n = 0
+    while (left > 0 && { n = in.read(buf, 0, math.min(buf.length.toLong, left).toInt); n > 0 })
+      left -= n
   }
 
   private def respond(exchange: HttpExchange, code: Int, msg: String): Unit = {

@@ -335,4 +335,26 @@ class HttpLoopSpec extends SparkSpec {
       assert(delivered == 6, s"delivered=$delivered")
     } finally { gateway.stop(0); dests.stop(0) }
   }
+
+  test("HTTP ingress: a body over MaxBodyBytes is answered 413 and never spooled") {
+    val spool = java.nio.file.Files.createTempDirectory("graft_spool_413").toString
+    val server = HttpIngress.start(0, spool, _ == "wk-live")
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"
+      // a valid envelope padded with whitespace to an exact byte size
+      def sized(n: Int): String = {
+        val head = """{"writeKey":"wk-live","batch":[{"messageId":"m1","userId":"u1"}]}"""
+        head + " " * (n - head.length)
+      }
+      def spooled: Int =
+        new java.io.File(spool).listFiles().count(_.getName.endsWith(".json"))
+      assert(post(base, sized(HttpIngress.MaxBodyBytes + 1)) == 413)
+      assert(post(base, sized(2 * HttpIngress.MaxBodyBytes)) == 413)
+      assert(spooled == 0)
+      // the cap is inclusive, and the gateway keeps serving after a 413
+      assert(post(base, sized(HttpIngress.MaxBodyBytes)) == 200)
+      assert(post(base, sized(100)) == 200)
+      assert(spooled == 2)
+    } finally server.stop(0)
+  }
 }
