@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line per run (driver contract).
   * Session is warmed (codegen caches, parquet footers, broadcast
   * machinery) before any query is timed so the first query doesn't
@@ -14,21 +12,13 @@ object Bench {
     val only = args.toSet
     def wanted(name: String): Boolean = only.isEmpty || only(name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // load disclosure (r19 verdict #6): the 1-minute system load at
     // bench start, BEFORE this JVM adds its own — a board timed under
     // campaign load (the r19 _store drift) is self-describing instead
     // of needing a prose caveat. ≲ cpus/4 reads as idle at local[32].
     val load1Start = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
 
     // warm-up: touch every table + exercise join/agg/window codegen
     try {
@@ -68,16 +58,13 @@ object Bench {
     // untimed so every family query below reports MARGINAL cost (its
     // min-of-2 is warm-store by design: that is the per-query cost a
     // session that built the store once actually pays).
-    // SPARK_GRAFT_REBUILD_STORES=named (opt-in, N×-campaign subset
-    // runs): rebuild only the stores named in args — at 1000× the
-    // rebuild-all loop pays ~20 min for stores (shingle overlap,
-    // minhash) no key in the subset reads. The caller then owns
-    // naming EVERY store its subset queries consume, or those
+    // A subset run rebuilds only the stores named in its args — at
+    // 1000× the rebuild-all loop pays ~20 min for stores (shingle
+    // overlap, minhash) no key in the subset reads. The caller then
+    // owns naming EVERY store its subset queries consume, or those
     // queries absorb the build into their min-of-2.
-    val rebuildNamed =
-      sys.env.get("SPARK_GRAFT_REBUILD_STORES").contains("named")
     graft.queries.LlmData.storeBuilders.iterator
-      .filter { case (n, _) => !(rebuildNamed && only.nonEmpty) || only(n) }
+      .filter { case (n, _) => wanted(n) }
       .foreach { case (_, fn) =>
         try fn(spark, sfDir) catch { case _: Throwable => () } }
 

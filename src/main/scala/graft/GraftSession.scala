@@ -2,38 +2,37 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned SparkSession factory for the graft engine.
+/** The one SparkSession factory for the graft engine: Bench, Verify,
+  * Demo, the tools and the test suites all build their session here.
   *
-  * Scale notes (100 TB): AQE handles runtime coalescing/skew-splits;
-  * `shuffle.partitions` is only the pre-AQE upper bound (32 locally,
-  * thousands on a real cluster via `SPARK_GRAFT_CPUS`). Events parquet
-  * carries INT64 TIMESTAMP(NANOS) which vanilla Spark rejects —
-  * `nanosAsLong` reads it losslessly as epoch-nanos (see
-  * sources.Tables which normalizes it).
+  * Scale notes (100 TB): AQE (on by default in Spark 4) handles
+  * runtime coalescing/skew-splits; `shuffle.partitions` is only the
+  * pre-AQE upper bound (the local core count here, thousands on a real
+  * cluster). Events parquet carries INT64 TIMESTAMP(NANOS) which
+  * vanilla Spark rejects — `nanosAsLong` reads it losslessly as
+  * epoch-nanos (see sources.Tables which normalizes it).
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every available
+    * processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def builder(cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.ui.enabled", "false")
 
-  /** Apply graft runtime confs to an externally-built session (the
-    * driver's Verify/Bench sessions). Static confs (nanosAsLong is
-    * read per-query, so runtime-settable) applied best-effort. */
+  /** Apply graft's runtime confs to a caller-built session.
+    * [[SparkEntry.queries]] runs every query through this, so a
+    * session not built by [[builder]] still reads events as UTC
+    * instants (the NTZ→timestamp cast in `Tables` depends on it). */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // GRAFT_AQE=off: dev attribution knob (r22 fast-tail experiment)
-    spark.conf.set("spark.sql.adaptive.enabled",
-      (!sys.env.get("GRAFT_AQE").contains("off")).toString)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }

@@ -9,11 +9,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each runs
+    * on [[GraftSession.tune]]d confs, so a caller-built session reads
+    * the tables exactly as a [[GraftSession]] one does. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
+    (graft.queries.Relational.queries ++
       graft.queries.Pipeline.queries ++
-      graft.queries.LlmData.queries
+      graft.queries.LlmData.queries).map { case (name, fn) =>
+      name -> ((s: SparkSession, d: String) => fn(GraftSession.tune(s), d))
+    }
 
   /** DuckDB-equivalent SQL for the driver's correctness gate. Keys
     * absent here get a weaker rows-only check (non-SQL-expressible). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,14 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only the named queries (dev spot-checks)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     // A SUBSET run re-trains this JVM's trained-family artifacts
     // (IVF/PQ/classifier), which need not bit-match the trainings an
     // EXISTING full dump's oracle JSON interpolates — overwriting its

@@ -196,7 +196,7 @@ object TextFunctions {
     * margin — and hence any keep = (logit ≥ 0) decision — is
     * bit-identical across engines. */
   def classifierLogit(toks: Column, weights: Seq[Double], bias: Double): Column = {
-    // Shape chosen by measurement (ClassifierProbe, 500k docs):
+    // Shape chosen by measurement (500k docs):
     // 1. the weight lookup rides a unary transform() — element_at
     //    (literal) inside the BINARY aggregate lambda evaluates ~25×
     //    slower (76 s vs 3 s over the corpus; the md5 bucket itself
@@ -224,11 +224,11 @@ object TextFunctions {
     * (graft.plans.ClassifierMargin, string child) — normalize +
     * tokenize + unigram+bigram hash → weight lookup → exact dyadic
     * sum → /n_features + bias in ONE byte scan per row (the regex
-    * normalize alone cost more than the whole fused kernel —
-    * ClassifierProbe). Bit-identical to
+    * normalize alone cost more than the whole fused kernel, as
+    * measured over 500k docs). Bit-identical to
     * [[classifierLogit]]([[classifierFeatures]](text)) (spec-pinned
     * parity — same md5-prefix bucket, same exact sum, same two IEEE
-    * roundings), ~15× faster (ClassifierProbe): the HOF formulation
+    * roundings), ~15× faster on the same measurement: the HOF formulation
     * stays as the semantic cross-check and the oracle's algebra. */
   def classifierMargin(textCol: Column, weights: Seq[Double], bias: Double,
                        bigrams: Boolean = true): Column =

@@ -49,23 +49,6 @@ object Classifier {
     def weightSeq: Seq[Double] = weights.toSeq
   }
 
-  /** Dev instrumentation: when GRAFT_EXPLAIN_EPOCH names a directory,
-    * the first epoch's margin-pass and gradient-pass physical plans
-    * are dumped there (plans/r22 audit artifacts — the epoch loop is
-    * not a declared query, so its plans are not reachable through
-    * ExplainAudit). No effect when the env var is unset. */
-  private def explainEpoch(margins: org.apache.spark.sql.DataFrame,
-                           grads: org.apache.spark.sql.DataFrame): Unit =
-    sys.env.get("GRAFT_EXPLAIN_EPOCH").foreach { dir =>
-      def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, name),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-      dump("classifier_epoch_margins.txt", margins)
-      dump("classifier_epoch_grads.txt", grads)
-    }
-
   private val Grid = 1048576.0 // 2^20
   private def snap(x: Double): Double = {
     val s = math.rint(x * Grid) / Grid
@@ -117,8 +100,8 @@ object Classifier {
     // array three times and HOFs get no codegen subexpression
     // elimination — spec-pinned identical output). featsCol overrides
     // the stream entirely (a caller-supplied array<string> feature
-    // column — the ValProbe grid's lever for probing NEW feature
-    // families before they earn kernel/oracle plumbing); scoring must
+    // column — the lever for probing NEW feature families before
+    // they earn kernel/oracle plumbing); scoring must
     // then feed classifierLogit the same stream.
     val baseToks = split(TextFunctions.normalize(col(textCol)), " ")
     val toks = featsCol.getOrElse(
@@ -295,7 +278,6 @@ object Classifier {
             .unionByName(resid.select(lit(-3L).as("_b"), lit(1.0).as("_x")))
             .groupBy("_b")
             .agg(sum(col("_x")).as("_g"))
-          if (e == 0) explainEpoch(margins, combined)
           val sums = combined
             .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
           if (e == 0) { n = sums.getOrElse(-3L, 0.0).toLong; requireN() }

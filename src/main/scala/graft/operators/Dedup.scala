@@ -97,8 +97,8 @@ object Dedup {
     // Release the store-owned checkpoint/cache BLOCKS too: clearing
     // the maps only drops the references, and localCheckpoint blocks
     // then linger in executor storage until ContextCleaner GC — which
-    // under a large heap may be minutes away. The r17 OverlapProbe
-    // measured the SECOND cold signature-store build in one JVM at
+    // under a large heap may be minutes away. r17 measured the
+    // SECOND cold signature-store build in one JVM at
     // 1.75× the first (71 → 125 s at 100×) from exactly this eviction
     // pressure. Scope (r18, was a global getPersistentRDDs sweep):
     // only RDDs CLAIMED by store builds via [[trackOwned]] are

@@ -211,7 +211,7 @@ object Multimodal {
     * .getAudioInputStream re-runs the whole provider loop on EVERY
     * call — for a homogeneous corpus that is 2-3 thrown-and-caught
     * UnsupportedAudioFileExceptions per record from the non-matching
-    * readers, which AudioProbe measured at ~71 s of m_audio_real's
+    * readers, measured at ~71 s of m_audio_real's
     * ~125 s decode wall over 500k docs at 100×. Caching the reader
     * that accepted the last payload (the public
     * javax.sound.sampled.spi extension point — the same providers

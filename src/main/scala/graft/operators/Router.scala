@@ -52,8 +52,8 @@ object Router {
     *    quantile bounds track the density by construction). No task
     *    ever holds a whole destination: with a handful of destinations
     *    at 100 TB the plain `partitionBy(dest)` window is a single-task
-    *    sort; this shape is flat under that skew (see ScaleSmoke's
-    *    ONE-destination and clustered-key entries). That path scans
+    *    sort; this shape is flat under that skew (measured with ONE
+    *    destination and with clustered keys). That path scans
     *    the input three times (bounds agg, per-shard totals, window):
     *    persist `df` first at volume.
     *

@@ -976,16 +976,6 @@ object Similarity {
         col("prnk").cast("long").as("pr"), col("qcdot"))
   }
 
-  /** Row-local cell assignment against trained centroid LITERALS —
-    * what a delta append runs at ingest: no training, no shuffle,
-    * identical rounding/tiebreak to [[kmeansCells]] so appended rows
-    * land in exactly the cells a full rebuild would give them. */
-  def assignCellsLiteral(df: DataFrame, idCol: String, vecCol: String,
-                         cents: Array[Array[Double]]): DataFrame =
-    df.select(col(idCol),
-      cellAssignOn(col(vecCol), cents, replayExact = true)
-        .cast("long").as("cell"))
-
   /** Broadcast per-query ADC lookup tables: lut_m[j] = ⟨q_slice_m,
     * codebook_m[j]⟩ — m·ks dot products per query, kilobytes total. */
   private[operators] def pqQueryLut(queries: DataFrame, idCol: String, vecCol: String,

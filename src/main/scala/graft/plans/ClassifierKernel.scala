@@ -47,8 +47,8 @@ case class ClassifierMargin(child: Expression, weights: IndexedSeq[Double],
   // structural: two ClassifierMargins built independently from the
   // same fit canonicalize equal and whole-stage CSE computes the
   // kernel ONCE per row (an Array field compares by reference —
-  // ClassifierProbe measured the three-output projection at 3× the
-  // single-margin wall before this). The kernel itself indexes a
+  // the three-output projection measured 3× the single-margin wall
+  // before this). The kernel itself indexes a
   // plain array.
   @transient private lazy val wArr: Array[Double] = weights.toArray
 

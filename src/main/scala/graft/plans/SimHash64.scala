@@ -49,8 +49,4 @@ object SimHash64 {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", (exprs: Seq[Expression]) => SimHash64(exprs.head), "built-in")
-
-  /** Hamming distance between two simhash fingerprints as a Column
-    * expression (bit_count of xor — codegen'd builtins). */
-  def hammingExpr(a: String, b: String): String = s"bit_count($a ^ $b)"
 }

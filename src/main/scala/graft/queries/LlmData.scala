@@ -129,7 +129,6 @@ object LlmData {
   // the row-local fold is bit-identical to the groupBy signature).
   private val streamNearDup: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    graft.GraftSession.tune(s)
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val streamDir = java.nio.file.Files
       .createTempDirectory("graft_neardup_stream").toString
@@ -1816,7 +1815,6 @@ object LlmData {
   // loses nothing vs the nightly batch pass.
   private val streamPqDedup: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    graft.GraftSession.tune(s)
     val books = trainPq(s, d)
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
     val streamDir = java.nio.file.Files
@@ -1874,7 +1872,6 @@ object LlmData {
   // raw-PQ row.
   private val streamPqDedupRes: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    graft.GraftSession.tune(s)
     val (cents, books) = trainIvfPqResidual(s, d)
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
     val streamDir = java.nio.file.Files
@@ -2628,8 +2625,8 @@ object LlmData {
   // at 100 TB the classifier is a projection over the corpus scan,
   // exactly like t_quality; training cost is bounded by the epoch
   // count × two partial-agg passes (timed as _store_classifier).
-  // D / epochs / lr chosen by held-out measurement (ValProbe over the
-  // (d, epochs, lr, bigrams) grid at sf0.01): r16 — with the fused
+  // D / epochs / lr chosen by held-out measurement (a grid over
+  // (d, epochs, lr, bigrams) at sf0.01): r16 — with the fused
   // ClassifierMargin kernel paying for capacity, the grid re-ran at
   // D ∈ {1024..16384} plus char-3/4/5-gram and word∪char3 streams
   // (the langid-shaped alternatives): char families rank no better
@@ -2675,8 +2672,8 @@ object LlmData {
     // no collapse barrier needed anymore: the fused native kernel is
     // codegen-capable, so when CollapseProject inlines the logit into
     // the three output expressions, whole-stage codegen's COMMON
-    // SUBEXPRESSION ELIMINATION computes it once (ClassifierProbe
-    // pins three-outputs ≈ one-output wall; the old interpreted HOF
+    // SUBEXPRESSION ELIMINATION computes it once (measured:
+    // three-outputs ≈ one-output wall; the old interpreted HOF
     // fold was codegen-opaque and recomputed ~3× — the r14 barrier
     // bought single-pass at the price of a corpus-wide exchange)
     Tables.documents(s, d).select(col("doc_id"), col("source"),
@@ -2810,8 +2807,8 @@ object LlmData {
   // one partial agg onto (source, margin), and the global cumulative
   // runs through ShardedWindow (range-sharded prefix sum — no
   // single-task global sort).
-  // re-pinned r18 BELOW the measured seed-task ceiling: ValProbe at
-  // sf0.1 (954 val docs, ±0.03 CI vs sf0.01's ±0.06) measured the
+  // re-pinned r18 BELOW the measured seed-task ceiling: a held-out
+  // grid at sf0.1 (954 val docs, ±0.03 CI vs sf0.01's ±0.06) measured the
   // Bayes AUC of ANY text-only model on the lang-agreement seed at
   // ≈ 0.54 at measurement scale (flat 0.50–0.54 across 4–40× training
   // data; the label is near-independent of the text's marker
@@ -3005,7 +3002,7 @@ object LlmData {
   // The QUALITY-COMPOSITE seed (r18 — the verdict's "better seed"
   // rung landed): the lang-agreement seed's Bayes ceiling is ≈0.54
   // because the generator's lang column is ~independent of the text
-  // (r17 ValProbe), so the DCLM-style next seed is the output of a
+  // (measured r17), so the DCLM-style next seed is the output of a
   // STRONGER FILTER for the model to distill — here the full
   // t_filter_chain verdict with the language stage on T.langId
   // (deterministic IN TEXT; the chain's metadata-lang stage would
@@ -3013,13 +3010,13 @@ object LlmData {
   //   label = [n_tok ≥ 20] ∧ [langId(text)='en'] ∧ [quality ≥ 0.5]
   //         ∧ [dup-2gram coverage ≤ 0.2].
   // The word bag alone cannot express the filter's thresholds (its
-  // features are length-NORMALIZED counts — ValProbe seed2 measured
+  // features are length-NORMALIZED counts — the held-out grid measured
   // the word-only ceiling at 0.54–0.56): the feature stream appends
   // four QUANTIZED-STATISTIC tokens (log2-length bucket via binary-
   // string length — no libm-log2 boundary hazard; repetition-coverage
   // decile; quality decile; the langId verdict), every one an
   // existing oracle-replayable formula, and the linear model then
-  // distills the conjunction: ValProbe at sf0.1 (954 val docs, ±0.03
+  // distills the conjunction: the held-out grid at sf0.1 (954 val docs, ±0.03
   // CI) measured val AUC 0.8627 for word+stats (stats-only
   // oracle-feature ceiling 0.9661; word-only 0.5593). Same split
   // discipline as t_classifier_val (md5 'cvsplit:' bucket 0 = val),
@@ -3991,11 +3988,6 @@ object LlmData {
       }
     }(Encoders.product[Multimodal.MediaRecord])
   }
-
-  /** Probe access to the audio generator (AudioProbe stage isolation). */
-  def audioPayloadProbe(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[Multimodal.MediaRecord] =
-    attachAudioPayload(s, d)
 
   private val audioReal: Q = (s, d) =>
     Multimodal.audioChunksReal(attachAudioPayload(s, d), chunkMs = 50)

@@ -1066,7 +1066,6 @@ object Pipeline {
   // Sentinel sessions themselves (start >= sentinel ts) are dropped.
   private val streamSessions: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    graft.GraftSession.tune(s)
     // stage a stream dir holding the NORMALIZED event projection plus
     // one sentinel file — projecting through Tables.events (instead
     // of a raw-file copy) keeps the replay independent of the

@@ -19,7 +19,6 @@ object CatalogReader {
       options: Map[String, String] = Map.empty)
 
   def read(spark: SparkSession, spec: SourceSpec): DataFrame = {
-    graft.GraftSession.tune(spark)
     val r0 = spark.read.format(spec.format).options(spec.options)
     val r = spec.schema.fold(r0)(r0.schema)
     spec.format match {
@@ -45,7 +44,6 @@ object CatalogReader {
       options: Map[String, String] = Map.empty)
 
   def readStream(spark: SparkSession, spec: StreamSpec): DataFrame = {
-    graft.GraftSession.tune(spark)
     val r0 = spark.readStream.format(spec.format).options(spec.options)
     val r = spec.schema.fold(r0)(r0.schema)
     spec.format match {

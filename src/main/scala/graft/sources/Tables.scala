@@ -36,7 +36,6 @@ object Tables {
     (SparkSession, String, String), DataFrame]
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.GraftSession.tune(spark)
     if (frameMemo.size > 512) frameMemo.clear()
     frameMemo.computeIfAbsent((spark, dir, name), _ => {
       val df = spark.read.parquet(s"$dir/$name.parquet")
@@ -57,8 +56,9 @@ object Tables {
     *    `spark.sql.legacy.parquet.nanosAsLong` (older generator).
     *  - TimestampNTZType: TIMESTAMP_MICROS(isAdjustedToUTC=false)
     *    (current generator). The session timezone is pinned to UTC
-    *    (GraftSession), so casting NTZ→TimestampType reinterprets the
-    *    wall-clock value as UTC — the same instant the nanos path and
+    *    (GraftSession builds every graft session that way and
+    *    SparkEntry.queries tunes a caller's), so casting
+    *    NTZ→TimestampType reinterprets the wall-clock value as UTC — the same instant the nanos path and
     *    the DuckDB oracle (naive-UTC) derive.
     *  - TimestampType: already instant-typed; derive ts_ms directly.
     * Idempotent: a corpus WRITTEN from this frame (the replicated

@@ -1,10 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Prints formatted plans for representative queries and greps the
   * scale-relevant facts: PushedFilters reaching the scan, pruned
   * ReadSchema, broadcast joins on dims, WholeStageCodegen spans.
+  * Each frame is executed through a noop write first, so the printed
+  * plan is AQE's FINAL one (isFinalPlan=true) — ReusedExchange and
+  * coalesced reads only appear there, never in the static plan.
   *   sbt "runMain graft.tools.ExplainAudit [sfDir] [name...]"
   */
 object ExplainAudit {
@@ -16,16 +23,23 @@ object ExplainAudit {
         "t_repetition", "d_substr_dup", "t_filter_chain", "d_semdedup",
         "p_scd2", "p_salted_agg", "d_bloom_contam", "t_zipf")
     val spark = graft.GraftSession.get()
-    // GRAFT_EXPLAIN_EXEC=1: execute the frame first so the printed
-    // plan is AQE's FINAL one (isFinalPlan=true) — ReusedExchange /
-    // coalesced reads only appear there, never in the static plan
-    val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
+    // the noop write runs on its own QueryExecution; the listener
+    // hands it back (parquet staging writes inside a query are V1
+    // commands, so only the noop write matches)
+    val written = new LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) written.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     names.foreach { n =>
       println(s"\n========== $n ==========")
       val df = graft.SparkEntry.queries(n)(spark, sf)
-      if (exec) df.collect()
-      val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+      written.clear()
+      df.write.format("noop").mode("overwrite").save()
+      val qe = written.poll(60, TimeUnit.SECONDS)
+      require(qe != null, s"$n: no noop-write plan reached the listener")
+      val plan = qe.explainString(FormattedMode)
       println(plan)
       val facts = plan.linesIterator.filter(l =>
         l.contains("PushedFilters") || l.contains("ReadSchema") ||

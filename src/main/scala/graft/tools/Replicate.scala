@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Dev tool: build an N×-replicated sf directory in the Tables /
   * check.py layout (`<out>/<table>.parquet`) so the FULL gate and
-  * QueryProbe run unmodified against 10× volume. Fact tables
+  * `graft.Bench <keys>` run unmodified against N× volume. Fact tables
   * (lineitem, orders, events, documents, embeddings) replicate with
   * disjoint key spaces; dimension tables (region, nation, customer,
   * supplier, part) symlink to the originals — at scale, facts grow
   * and dims stay broadcast-able, so this is the realistic regime.
   * Replica token/vector spaces stay disjoint (token prefix /
-  * Rademacher diagonal — ScaleSmoke's scheme) so near-dup STRUCTURE
+  * Rademacher diagonal) so near-dup STRUCTURE
   * replicates N× instead of every replica near-duplicating the
   * original.
   *   sbt "runMain graft.tools.Replicate [N] [sfDir] [outDir] [tables]"
@@ -52,15 +52,7 @@ object Replicate {
     val n = args.headOption.map(_.toInt).getOrElse(10)
     val sf = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(2).getOrElse(s"/tmp/graft_sf_x$n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get()
     import java.nio.file.{Files, Paths}
     require(Paths.get(out).toAbsolutePath != Paths.get(sf).toAbsolutePath,
       s"outDir == sfDir ($out): would overwrite input parquet mid-read")

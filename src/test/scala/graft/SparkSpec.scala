@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, one session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = GraftSession.builder(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
