@@ -34,14 +34,14 @@ object Bench {
     // explicit `_store_*` keys so the queries that share them report
     // marginal cost instead of whichever runs first absorbing the
     // build. Store keys are min-of-2 like the queries, but COLD both
-    // runs (clearStore before each) — a memo hit would time a map
-    // lookup, and single-run store numbers were the noisiest rows
+    // runs (SessionStore.clear before each) — a memo hit would time a
+    // map lookup, and single-run store numbers were the noisiest rows
     // left in the round-8 bench.
     val stores = graft.queries.LlmData.storeBuilders.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted(name) }
       .map { case (name, fn) =>
         def coldOnce(): (Double, Boolean) = {
-          graft.operators.Dedup.clearStore()
+          graft.operators.SessionStore.clear()
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir); true } catch {
             case t: Throwable =>
@@ -140,6 +140,8 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_local.json"),
         (render(0.0) + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
+    // release the stores' blocks and delete their index directories
+    graft.operators.SessionStore.clear()
     spark.stop()
     // Printed AFTER spark.stop() so no executor/log line can land
     // between this and process exit: the JSON is the last stdout line.

@@ -56,6 +56,8 @@ object Verify {
     val altJson = SparkEntry.oracleAltSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_alt$suffix"), altJson)
+    // release the stores' blocks and delete their index directories
+    graft.operators.SessionStore.clear()
     spark.stop()
   }
 }

@@ -16,105 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Session-scoped store for expensive derived frames (minhash
-    * signatures, LSH candidate pairs). A production 100-TB pipeline
-    * materializes signatures ONCE as a table and feeds every
-    * downstream near-dup job from it; within one engine session this
-    * memo gives the same compute-once semantics across the
-    * LSH/estimate/cluster queries (each frame is eagerly
-    * materialized before storing, so lookups never recompute).
-    * Callers opt in by passing a `cacheKey`; `clearStore()` releases
-    * everything. */
-  private val store = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  private[operators] def memoized(key: String)(build: => DataFrame): DataFrame =
-    store.getOrElseUpdate(key, trackOwned(build))
-
-  /** Persistent-RDD ids created by store builds — the only blocks
-    * [[clearStore]] may release. Builds claim their blocks through
-    * [[trackOwned]]; a caller-held localCheckpoint created OUTSIDE a
-    * store build keeps its blocks across clearStore (the r17 global
-    * sweep broke such frames permanently: a checkpoint-truncated
-    * lineage cannot recompute, so the next action failed with
-    * "checkpoint block not found"). */
-  private val ownedRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Run `build` and CLAIM any persistent RDDs it creates (cache or
-    * localCheckpoint blocks) for [[clearStore]] release. The claim is
-    * a diff of `SparkContext.getPersistentRDDs` around the build:
-    * intermediates the build itself releases are gone before the
-    * diff, and nested builds (e.g. Classifier.fit's per-epoch
-    * checkpoints) are claimed with their parent. Dataset.unpersist is
-    * NOT the release path for checkpoint blocks — on a
-    * localCheckpoint'd frame it only calls CacheManager.uncacheQuery,
-    * which never saw the checkpoint's internal RDD — so RDD-id
-    * claiming here is what makes release possible at all. Caveat: a
-    * checkpoint created CONCURRENTLY on another thread during a build
-    * can be over-claimed (r21+: pqCodebooks runs memoized subspace
-    * trainings in parallel). Over-claiming is harmless for those:
-    * every concurrent training's sample checkpoint is SCOPED — it
-    * self-releases via the precise ColumnBridge.checkpointRdds handle
-    * before its build returns — so by the time clearStore can run,
-    * the over-claimed id is already unpersisted and the release
-    * lookup is a no-op (ids are monotonic, never recycled). A
-    * LONG-LIVED frame checkpointed concurrently outside a store build
-    * would degrade to the pre-r18 sweep behavior for that one frame;
-    * no engine entry point does that today. */
-  def trackOwned[T](build: => T): T = {
-    val (out, fresh) = withNewPersistentRdds(build)
-    fresh.foreach(r => ownedRddIds.add(r.id))
-    out
-  }
-
-  /** Run `build`, returning its result plus the persistent RDDs it
-    * registered (the only handle that can release localCheckpoint
-    * blocks — see [[trackOwned]]). For scoped lifetimes (e.g.
-    * AnnIndex.append's coded-delta checkpoint) unpersist the returned
-    * RDDs directly instead of claiming them for clearStore. */
-  def withNewPersistentRdds[T](build: => T): (T, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext)
-    val before: Set[Int] =
-      sc.map(_.getPersistentRDDs.keySet.toSet).getOrElse(Set.empty)
-    val out = build
-    val fresh = sc.toSeq.flatMap(_.getPersistentRDDs.valuesIterator
-      .filter(r => !before.contains(r.id)))
-    (out, fresh)
-  }
-
-  /** Extra session-keyed caches outside this object (e.g. the oracle
-    * centroid stash in the query layer) register here so ONE call
-    * releases every store — no cache survives a store clear. */
-  private val clearHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-
-  def onClearStore(hook: Runnable): Unit = clearHooks.add(hook)
-
-  def clearStore(): Unit = {
-    store.clear()
-    Similarity.clearCentroidMemo()
-    clearHooks.forEach(_.run())
-    // Release the store-owned checkpoint/cache BLOCKS too: clearing
-    // the maps only drops the references, and localCheckpoint blocks
-    // then linger in executor storage until ContextCleaner GC — which
-    // under a large heap may be minutes away. r17 measured the
-    // SECOND cold signature-store build in one JVM at
-    // 1.75× the first (71 → 125 s at 100×) from exactly this eviction
-    // pressure. Scope (r18, was a global getPersistentRDDs sweep):
-    // only RDDs CLAIMED by store builds via [[trackOwned]] are
-    // released — a caller-held localCheckpoint'd frame outside the
-    // store keeps its blocks (its lineage is truncated, so a swept
-    // block is unrecoverable, not merely evicted), and unrelated
-    // application caches sharing the context survive.
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-      val live = s.sparkContext.getPersistentRDDs
-      ownedRddIds.forEach { id =>
-        live.get(id).foreach(_.unpersist(blocking = false)); ()
-      }
-    }
-    ownedRddIds.clear()
-  }
-
   /** Exact dedup, keep-first: one surviving row per key group with
     * group stats (keeper id, duplicate count, earliest ts). */
   def keepFirst(df: DataFrame, keyCols: Seq[String], orderCol: String,
@@ -225,27 +126,17 @@ object Dedup {
     * 8-byte hashes per shingle, never the strings), so the second
     * family skips the corpus scan and re-shingling entirely. */
   private def hashedShingles(df: DataFrame, idCol: String, textCol: String,
-                             k: Int, cacheKey: Option[String]): DataFrame = {
-    def build = shingles(df, idCol, textCol, k)
-      .select(col(idCol), shingleHash(col("shingle")).as("sh"))
-    cacheKey match {
-      // idCol/textCol belong in the memo key: two callers sharing a
-      // cacheKey but shingling different columns must not silently
-      // reuse each other's materialized frame
-      case Some(ck) => memoized(s"$ck|sh|$k|$idCol|$textCol")(
-        build.localCheckpoint(eager = true))
-      case None => build
-    }
-  }
+                             k: Int, cacheKey: Option[SessionStore.Key]): DataFrame =
+    // idCol/textCol belong in the name (as in every name below): two
+    // callers sharing a cacheKey but shingling different columns must
+    // not silently reuse each other's materialized frame
+    SessionStore.memoFrame(cacheKey.map(_ / s"sh|$k|$idCol|$textCol"))(
+      shingles(df, idCol, textCol, k)
+        .select(col(idCol), shingleHash(col("shingle")).as("sh")))
 
-  /** Wide MinHash signatures: one row per doc, one column per
-    * permutation (single shuffle, partial-agg min, no numPerms×
-    * row expansion). */
-  def minhash(sh: DataFrame, idCol: String, numPerms: Int): DataFrame =
-    minhashFromHashed(
-      sh.select(col(idCol), shingleHash(col("shingle")).as("sh")),
-      idCol, numPerms)
-
+  /** Wide MinHash signatures from (id, shingle hash) rows: one row per
+    * doc, one column per permutation (single shuffle, partial-agg min,
+    * no numPerms× row expansion). */
   private def minhashFromHashed(hs: DataFrame, idCol: String,
                                 numPerms: Int): DataFrame = {
     val coeffs = minhashCoeffs(numPerms)
@@ -274,9 +165,9 @@ object Dedup {
   }
 
   /** Wide MinHash signature from row-local shingle hashes — the same
-    * universal-hash family as [[minhash]], so the row-local signature
-    * is BIT-IDENTICAL to the batch groupBy signature of the same
-    * document (element i == column mh_i); spec-pinned in
+    * universal-hash family as [[minhashSignatures]], so the row-local
+    * signature is BIT-IDENTICAL to the batch groupBy signature of the
+    * same document (element i == column mh_i); spec-pinned in
     * StreamingSpec's parity test. Null-element array (array_min of
     * empty) for an empty hash array — filter short docs upstream. */
   def signatureFromHashes(shsCol: Column, numPerms: Int): Column = {
@@ -356,14 +247,10 @@ object Dedup {
     * eagerly materialized (one row per doc, numPerms+1 columns). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, numPerms: Int,
-                        cacheKey: Option[String]): DataFrame =
-    cacheKey match {
-      case Some(k) => memoized(s"$k|mh|$shingleK|$numPerms")(
-        minhashFromHashed(hashedShingles(df, idCol, textCol, shingleK, cacheKey),
-          idCol, numPerms).localCheckpoint(eager = true))
-      case None => minhashFromHashed(
-        hashedShingles(df, idCol, textCol, shingleK, None), idCol, numPerms)
-    }
+                        cacheKey: Option[SessionStore.Key]): DataFrame =
+    SessionStore.memoFrame(cacheKey.map(_ / s"mh|$idCol|$textCol|$shingleK|$numPerms"))(
+      minhashFromHashed(hashedShingles(df, idCol, textCol, shingleK, cacheKey),
+        idCol, numPerms))
 
   /** Full MinHash-LSH near-dup pipeline. With a `cacheKey`, the
     * signature AND pair frames come from the session store — the
@@ -371,15 +258,12 @@ object Dedup {
     * re-running shingle→minhash→band→join. */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleK: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
-                 cacheKey: Option[String] = None): DataFrame = {
-    def build = candidatePairs(lshBands(
-      minhashSignatures(df, idCol, textCol, shingleK, numPerms, cacheKey),
-      idCol, numPerms, rowsPerBand), idCol)
-    cacheKey match {
-      case Some(k) => memoized(s"$k|pairs|$shingleK|$numPerms|$rowsPerBand")(build)
-      case None => build
-    }
-  }
+                 cacheKey: Option[SessionStore.Key] = None): DataFrame =
+    SessionStore.memo(cacheKey.map(
+      _ / s"pairs|$idCol|$textCol|$shingleK|$numPerms|$rowsPerBand"))(
+      candidatePairs(lshBands(
+        minhashSignatures(df, idCol, textCol, shingleK, numPerms, cacheKey),
+        idCol, numPerms, rowsPerBand), idCol))
 
   /** Connected components over near-dup pairs → cluster ids, so a
     * chain a~b~c dedups to ONE keeper even when (a,c) was never a
@@ -507,7 +391,7 @@ object Dedup {
     * document text. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   shingleK: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
-                  maxIter: Int = 10, cacheKey: Option[String] = None): DataFrame = {
+                  maxIter: Int = 10, cacheKey: Option[SessionStore.Key] = None): DataFrame = {
     val clusters = clusterPairs(
       minhashLsh(df, idCol, textCol, shingleK, numPerms, rowsPerBand, cacheKey),
       maxIter)
@@ -519,30 +403,17 @@ object Dedup {
   /** MinHash Jaccard estimation for LSH candidate pairs: the fraction
     * of agreeing signature slots is an unbiased Jaccard estimate —
     * the cheap verification stage between banding (recall) and exact
-    * set comparison (precision) in a production near-dup pipeline. */
+    * set comparison (precision) in a production near-dup pipeline.
+    * With a `cacheKey` the signatures and pairs come from the session
+    * store, shared with the LSH/cluster runs. */
   def minhashJaccardEstimate(df: DataFrame, idCol: String, textCol: String,
                              shingleK: Int = 3, numPerms: Int = 16,
                              rowsPerBand: Int = 4,
-                             cacheKey: Option[String] = None): DataFrame =
-    cacheKey match {
-      case Some(_) =>
-        // store-backed: signatures and pairs are already materialized
-        // (or get materialized once, shared with the LSH/cluster runs)
-        estimateFromSignatures(
-          minhashSignatures(df, idCol, textCol, shingleK, numPerms, cacheKey),
-          minhashLsh(df, idCol, textCol, shingleK, numPerms, rowsPerBand, cacheKey),
-          idCol, numPerms)
-      case None =>
-        val mh = minhash(shingles(df, idCol, textCol, shingleK), idCol, numPerms)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val pairs = candidatePairs(lshBands(mh, idCol, numPerms, rowsPerBand), idCol)
-          // few rows (one per candidate pair) — materialize eagerly so
-          // the signature cache can be dropped before returning
-          estimateFromSignatures(mh, pairs, idCol, numPerms)
-            .localCheckpoint(eager = true)
-        } finally mh.unpersist(blocking = false)
-    }
+                             cacheKey: Option[SessionStore.Key] = None): DataFrame =
+    estimateFromSignatures(
+      minhashSignatures(df, idCol, textCol, shingleK, numPerms, cacheKey),
+      minhashLsh(df, idCol, textCol, shingleK, numPerms, rowsPerBand, cacheKey),
+      idCol, numPerms)
 
   private def estimateFromSignatures(mh: DataFrame, pairs: DataFrame,
                                      idCol: String, numPerms: Int): DataFrame = {
@@ -573,36 +444,30 @@ object Dedup {
     * Returns (id1, id2, n_inter, size1, size2). */
   private def shingleOverlapStats(df: DataFrame, idCol: String, textCol: String,
                                   k: Int, maxDocFreq: Int,
-                                  cacheKey: Option[String]): DataFrame = {
-    def build: DataFrame = {
-    val perShingle = hashedShingles(df, idCol, textCol, k, cacheKey)
-      .select(col(idCol), col("sh").as("shingle"))
-      .groupBy("shingle")
-      .agg(sort_array(collect_set(col(idCol))).as("ids"))
-    // per-doc distinct-shingle counts: one row per doc — AQE
-    // broadcasts it at small scale, shuffle-joins at corpus scale
-    val sizes = perShingle.select(explode(col("ids")).as(idCol))
-      .groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
-    val ids = col("ids")
-    // pairs expand row-locally from the capped doc lists (df cap
-    // bounds the quadratic blowup per shingle)
-    val inter = perShingle
-      .filter(size(ids) <= maxDocFreq)
-      .select(explode(flatten(transform(ids, (x, i) =>
-        transform(slice(ids, i + 2, size(ids)),
-          y => struct(x.as("id1"), y.as("id2")))))).as("p"))
-      .groupBy(col("p.id1").as("id1"), col("p.id2").as("id2"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id1"), col("set_size").as("size1")), "id1")
-      .join(sizes.select(col(idCol).as("id2"), col("set_size").as("size2")), "id2")
+                                  cacheKey: Option[SessionStore.Key]): DataFrame =
+    SessionStore.memoFrame(cacheKey.map(_ / s"ovl|$idCol|$textCol|$k|$maxDocFreq")) {
+      val perShingle = hashedShingles(df, idCol, textCol, k, cacheKey)
+        .select(col(idCol), col("sh").as("shingle"))
+        .groupBy("shingle")
+        .agg(sort_array(collect_set(col(idCol))).as("ids"))
+      // per-doc distinct-shingle counts: one row per doc — AQE
+      // broadcasts it at small scale, shuffle-joins at corpus scale
+      val sizes = perShingle.select(explode(col("ids")).as(idCol))
+        .groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
+      val ids = col("ids")
+      // pairs expand row-locally from the capped doc lists (df cap
+      // bounds the quadratic blowup per shingle)
+      val inter = perShingle
+        .filter(size(ids) <= maxDocFreq)
+        .select(explode(flatten(transform(ids, (x, i) =>
+          transform(slice(ids, i + 2, size(ids)),
+            y => struct(x.as("id1"), y.as("id2")))))).as("p"))
+        .groupBy(col("p.id1").as("id1"), col("p.id2").as("id2"))
+        .agg(count(lit(1)).as("n_inter"))
+      inter
+        .join(sizes.select(col(idCol).as("id1"), col("set_size").as("size1")), "id1")
+        .join(sizes.select(col(idCol).as("id2"), col("set_size").as("size2")), "id2")
     }
-    cacheKey match {
-      case Some(ck) => memoized(s"$ck|ovl|$k|$maxDocFreq")(
-        build.localCheckpoint(eager = true))
-      case None => build
-    }
-  }
 
   /** n-gram Jaccard similarity for pairs sharing at least one shingle.
     * `maxDocFreq` drops stop-shingles so the shingle join cannot
@@ -611,7 +476,7 @@ object Dedup {
     * boilerplate, which is what you want at 100 TB). */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String, k: Int,
                    maxDocFreq: Int, minJaccard: Double,
-                   cacheKey: Option[String] = None): DataFrame =
+                   cacheKey: Option[SessionStore.Key] = None): DataFrame =
     shingleOverlapStats(df, idCol, textCol, k, maxDocFreq, cacheKey)
       .withColumn("jaccard",
         round(col("n_inter").cast("double") /
@@ -627,7 +492,7 @@ object Dedup {
     * so the dedup policy can keep the superset doc. */
   def ngramContainment(df: DataFrame, idCol: String, textCol: String, k: Int,
                        maxDocFreq: Int, minContainment: Double,
-                       cacheKey: Option[String] = None): DataFrame =
+                       cacheKey: Option[SessionStore.Key] = None): DataFrame =
     shingleOverlapStats(df, idCol, textCol, k, maxDocFreq, cacheKey)
       .withColumn("containment",
         round(col("n_inter").cast("double") / least(col("size1"), col("size2")), 6))

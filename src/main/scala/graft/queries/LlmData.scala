@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.functions.{TextFunctions => T}
 import graft.operators._
+import graft.operators.SessionStore.corpus
 import graft.sources.Tables
 
 /** Pack C — LLM-training-data operators (SURVEY.md §2.C) over the
@@ -14,6 +15,11 @@ import graft.sources.Tables
   */
 object LlmData {
   type Q = (SparkSession, String) => DataFrame
+  private type Books = Array[Array[Array[Double]]]
+
+  /** Build `name` once per (session, corpus) in the [[SessionStore]]. */
+  private def stored[T](s: SparkSession, d: String, name: String)(build: => T): T =
+    SessionStore.memo(Some(corpus(s, d) / name))(build)
 
   // ------------------------------------------------------ d_exact_dup
   private val exactDup: Q = (s, d) =>
@@ -26,15 +32,13 @@ object LlmData {
 
   // ---------------------------------------------------- d_minhash_lsh
   // The three minhash queries (lsh / estimate / clusters) share one
-  // session-store key per (session, sf dir): signatures and candidate
-  // pairs materialize once, every later query reuses them — the
-  // signature-store pattern a 100-TB dedup pipeline runs as tables.
-  private def mhKey(s: SparkSession, d: String): Option[String] =
-    Some(s"${org.apache.spark.sql.graftbridge.ColumnBridge.sessionUUID(s)}|$d")
+  // SessionStore corpus key per (session, sf dir): signatures and
+  // candidate pairs materialize once, every later query reuses them —
+  // the signature-store pattern a 100-TB dedup pipeline runs as tables.
 
   private val minhashLsh: Q = (s, d) =>
     Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
   private val minhashLshSql = {
@@ -73,7 +77,7 @@ object LlmData {
   private val sourceDupRate: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
     val dupIds = pairs.select(col("id1").as("doc_id"))
       .unionAll(pairs.select(col("id2").as("doc_id")))
       .distinct().withColumn("is_dup", lit(1L))
@@ -170,7 +174,7 @@ object LlmData {
   // ---------------------------------------------- d_minhash_estimate
   private val minhashEstimate: Q = (s, d) =>
     Dedup.minhashJaccardEstimate(Tables.documents(s, d), "doc_id", "text",
-        cacheKey = mhKey(s, d))
+        cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
   private val minhashEstimateSql = {
@@ -212,7 +216,7 @@ object LlmData {
   private val dupClusters: Q = (s, d) =>
     Dedup.clusterPairs(
         Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-          cacheKey = mhKey(s, d)), maxIter = 8)
+          cacheKey = Some(corpus(s, d))), maxIter = 8)
       .orderBy("id")
 
   /** Shared recursive-closure CTE block: documents → shingles →
@@ -265,7 +269,7 @@ object LlmData {
   private val clusterPurity: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val clusters = Dedup.clusterPairs(Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d)))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d))))
     clusters
       .join(docs.select(col("doc_id").as("id"), col("source")), "id")
       .groupBy("cluster", "source").agg(count(lit(1)).as("c"))
@@ -303,7 +307,7 @@ object LlmData {
   // against the (tiny) non-keeper set, the corpus never shuffles.
   private val dedupApply: Q = (s, d) =>
     Dedup.dedupCorpus(Tables.documents(s, d), "doc_id", "text",
-        cacheKey = mhKey(s, d))
+        cacheKey = Some(corpus(s, d)))
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
 
@@ -520,10 +524,10 @@ object LlmData {
   private val neardupVenn: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val nj = Dedup.ngramJaccard(docs, "doc_id", "text", k = 3,
-        maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(corpus(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("in_jaccard"))
     val mh = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("in_minhash"))
     val sh = Dedup.simhashNearDup(docs, "doc_id", "text")
       .select(col("id1"), col("id2"), lit(1L).as("in_simhash"))
@@ -563,10 +567,10 @@ object LlmData {
   private val lshCalibration: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val exact = Dedup.ngramJaccard(docs, "doc_id", "text", k = 3,
-        maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(corpus(s, d)))
       .select(col("id1"), col("id2"), col("jaccard"))
     val lsh = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
       .select(col("id1"), col("id2"), lit(1L).as("caught"))
     val mid = least(col("j_bucket").cast("double") / lit(10.0) + lit(0.05), lit(1.0))
     val s4 = mid * mid * mid * mid
@@ -606,7 +610,7 @@ object LlmData {
   // -------------------------------------------------- d_ngram_jaccard
   private val ngramJaccard: Q = (s, d) =>
     Dedup.ngramJaccard(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
   // --------------------------------------------- d_containment_dup
@@ -616,7 +620,7 @@ object LlmData {
   // dedup policy keeps the superset doc.
   private val containmentDup: Q = (s, d) =>
     Dedup.ngramContainment(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minContainment = 0.5, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minContainment = 0.5, cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
   private val containmentDupSql =
@@ -901,47 +905,49 @@ object LlmData {
     "d_substr_long" -> substrLongAltSql,
     "d_simhash" -> simhashAltSql,
     "d_simhash_neardup" -> simhashNeardupAltSql) ++
-    // the reindexed-search ALT interpolates the SAME stashed
+    // the reindexed-search ALT interpolates the SAME stored
     // re-trained centroids + residual books as the generic replay
-    // (populated when the query ran — Verify dumps oracles after
+    // (stored when the query ran — Verify dumps oracles after
     // queries), list-native so the ⌈√n⌉-cell assignment fits the
     // oracle budget at any campaign decade
-    ((reindexCents.values.toList, residBooksStash.values.toList) match {
-      case (rc :: Nil, b :: Nil) =>
+    ((reindexCents, residualBooks) match {
+      case (Some(rc), Some(b)) =>
         Map("s_reindex_topk" -> ivfPqTopKAltSql(rc, b))
-      case (rcs, bs) =>
-        // r18 advice: a silently-suppressed ALT sends the N× sweep to
-        // the generic oracle that is KNOWN to exceed budget at volume
-        // — name the suppression so the resulting TIMEOUT/ERROR reads
-        // back to its cause. r19 advice: warn on ANY non-empty stash
-        // that misses the 1:1 pattern (an asymmetric stash — 1 fit /
-        // 0 cuts — suppressed silently before), printing both sizes.
-        if (rcs.nonEmpty || bs.nonEmpty)
-          System.err.println("[oracleAlt] s_reindex_topk ALT SUPPRESSED: " +
-            s"ambiguous stash (${rcs.size} reindex trainings, " +
-            s"${bs.size} residual books in this JVM) — the sweep will " +
-            "fall back to the generic replay")
-        Map.empty[String, String]
+      case _ =>
+        suppressedAlt("s_reindex_topk", "the generic replay",
+          AnnReindex -> "reindex trainings", IvfPqResidual -> "residual books")
     }) ++
     // val-bucket-first replay of the quality-composite validation:
     // same interpolated fit, documents scan pre-filtered to vb=0
     // (see classifierValQSql's src note) — the generic replay's
     // exploded token join over ALL docs drove a DuckDB temp spill
     // past the disk at 100× under campaign load
-    ((classifierValQStash.values.toList,
-        classifierValQCutStash.values.toList) match {
-      case (f :: Nil, c :: Nil) =>
+    ((SessionStore.only[graft.operators.Classifier.Fit](ClassifierValQFit),
+        SessionStore.only[Long](ClassifierValQCut)) match {
+      case (Some(f), Some(c)) =>
         Map("t_classifier_val_q" -> classifierValQSql(f, c,
           "(SELECT * FROM documents WHERE TRY_CAST('0x' || " +
           "substr(md5('cvsplit:' || text), 1, 15) AS BIGINT) % 5 = 0)"))
-      case (fs, cs) =>
-        if (fs.nonEmpty || cs.nonEmpty)  // r19 advice: any asymmetry
-          System.err.println("[oracleAlt] t_classifier_val_q ALT " +
-            s"SUPPRESSED: ambiguous stash (${fs.size} fits, ${cs.size} " +
-            "cuts in this JVM) — the sweep will fall back to the " +
-            "generic all-docs replay")
-        Map.empty[String, String]
+      case _ =>
+        suppressedAlt("t_classifier_val_q", "the generic all-docs replay",
+          ClassifierValQFit -> "fits", ClassifierValQCut -> "cuts")
     })
+
+  /** r18 advice: a silently-suppressed ALT sends the N× sweep to the
+    * generic oracle that is KNOWN to exceed budget at volume — name
+    * the suppression so the resulting TIMEOUT/ERROR reads back to its
+    * cause. r19 advice: warn on ANY stored artifact that misses the
+    * 1:1 pattern (an asymmetric store — 1 fit / 0 cuts — suppressed
+    * silently before), printing every count. */
+  private def suppressedAlt(key: String, fallback: String,
+                            needs: (String, String)*): Map[String, String] = {
+    val counts = needs.map { case (name, what) => SessionStore.count(name) -> what }
+    if (counts.exists(_._1 > 0))
+      System.err.println(s"[oracleAlt] $key ALT SUPPRESSED: ambiguous store (" +
+        counts.map { case (n, what) => s"$n $what" }.mkString(", ") +
+        s" in this JVM) — the sweep will fall back to $fallback")
+    Map.empty[String, String]
+  }
 
   // ------------------------------------------------------ s_knn_degree
   // Degree profile of the semantic k-NN graph — the structure every
@@ -1130,24 +1136,18 @@ object LlmData {
   // assignment argmin, probe score, cosine rerank — is rounded to 6
   // digits with an index tiebreak on BOTH sides, so differing
   // double-accumulation orders (Spark partial aggs vs DuckDB group
-  // aggs) cannot flip a near-tie. The centroid stash below is what
-  // `oracle` reads — populated when the query builds (Verify runs
-  // queries before dumping oracle_sql.json), keyed per (session,
-  // sfDir) like the other memos so one JVM serving several datasets
-  // never interpolates the wrong training run.
-  private val ivfCentroids =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  // released with the rest of the session stores — Dedup.clearStore()
-  // is the one lifecycle call
-  graft.operators.Dedup.onClearStore(() => ivfCentroids.clear())
+  // aggs) cannot flip a near-tie. The centroids the cell assignment
+  // memoizes in the SessionStore are what `oracle` reads — stored
+  // when the query builds (Verify runs queries before dumping
+  // oracle_sql.json), keyed per (session, sfDir) so one JVM serving
+  // several datasets never interpolates the wrong training run.
+  private val IvfCents =
+    Similarity.centroidsName("vec_id", "embedding", k = 8, iters = 4, trainMod = 4)
 
   private val ivfTopK: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
     val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+      k = 8, iters = 4, trainMod = 4, cacheKey = Some(corpus(s, d)))
     val quantized = emb.join(cells, "vec_id")
     Similarity.ivfTopK(quantized.filter(col("vec_id") < 10), quantized,
         "vec_id", "embedding", cellCol = "cell", k = 3, nprobe = 3)
@@ -1163,11 +1163,8 @@ object LlmData {
   // accuracy claim lives in the driver gate, not just a spec floor.
   private val ivfRecall: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
     val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+      k = 8, iters = 4, trainMod = 4, cacheKey = Some(corpus(s, d)))
     val quantized = emb.join(cells, "vec_id")
     val q = emb.filter(col("vec_id") < 10)
     val exact = exactTop3(s, d).select(col("qid"), col("cid"))
@@ -1309,67 +1306,43 @@ object LlmData {
   // (same Lloyd trainer + rounding/tiebreak discipline as IVF), so
   // the trained codebooks interpolate into the oracle and DuckDB
   // replays assignment, LUT, shortlist and rerank exactly.
-  private val pqBooksStash =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  graft.operators.Dedup.onClearStore(() => pqBooksStash.clear())
+  private val PqBooks = "pqBooks|embedding|m4|ks8|iters4|mod4"
 
-  private def trainPq(s: SparkSession, d: String): Array[Array[Array[Double]]] = {
-    val books = Similarity.pqCodebooks(Tables.embeddings(s, d), "vec_id",
-      "embedding", m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4,
-      cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => pqBooksStash.put(k, books))
-    books
-  }
+  private def trainPq(s: SparkSession, d: String): Books =
+    stored(s, d, PqBooks)(Similarity.pqCodebooks(Tables.embeddings(s, d),
+      "vec_id", "embedding", m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4))
 
   // The composed-index family trains a SECOND codebook set on coarse
-  // RESIDUALS (x − q1(x), Jégou'11 §IV) — stashed separately so the
-  // raw-PQ oracles (s_pq_*, d_pq_semdedup) and the residual-IVFADC
+  // RESIDUALS (x − q1(x), Jégou'11 §IV) — stored under its own name so
+  // the raw-PQ oracles (s_pq_*, d_pq_semdedup) and the residual-IVFADC
   // oracles each interpolate their own training.
-  private val residBooksStash =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  graft.operators.Dedup.onClearStore(() => residBooksStash.clear())
+  private val IvfPqResidual = "ivfPqResidual|embedding|cells8|m4|ks8|iters4|mod4"
 
   /** Train (or fetch) the composed index's artifacts: the 8-cell
-    * Lloyd coarse quantizer plus residual PQ codebooks. Both ride the
-    * session memo stores; both stash for oracle interpolation. */
-  private def trainIvfPqResidual(s: SparkSession,
-                                 d: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val emb = Tables.embeddings(s, d)
-    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => ivfCentroids.put(k, cents))
-    val books = Similarity.pqResidualCodebooks(emb, "vec_id", "embedding",
-      cents, m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4,
-      cacheKey = mhKey(s, d))
-    mhKey(s, d).foreach(k => residBooksStash.put(k, books))
-    (cents, books)
-  }
+    * Lloyd coarse quantizer (the IVF family's memoized centroids) plus
+    * residual PQ codebooks trained against it. */
+  private def trainIvfPqResidual(s: SparkSession, d: String): (Array[Array[Double]], Books) =
+    stored(s, d, IvfPqResidual) {
+      val emb = Tables.embeddings(s, d)
+      val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
+        k = 8, iters = 4, trainMod = 4, cacheKey = Some(corpus(s, d)))
+      (cents, Similarity.pqResidualCodebooks(emb, "vec_id", "embedding",
+        cents, m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4))
+    }
 
   // The exact |Q|=10 brute-force top-3 is the shared ground truth of
   // every recall gate (s_lsh/ivf/pq/ivfpq_recall) AND the tuning
   // curve — memoized per (session, corpus) so the five consumers pay
   // the full corpus scan once (the signature-store pattern; Bench
   // times the build as _store_exacttopk so each reports marginal
-  // cost).
-  private val exactTopStash =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  graft.operators.Dedup.onClearStore(() => exactTopStash.clear())
-
-  private def exactTop3(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    def build = {
+  // cost). The stored frame is checkpointed; the store claims its
+  // blocks so SessionStore.clear releases them.
+  private def exactTop3(s: SparkSession, d: String): DataFrame =
+    SessionStore.memoFrame(Some(corpus(s, d) / "exacttop3")) {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 3).localCheckpoint(eager = true)
+        "vec_id", "embedding", k = 3)
     }
-    mhKey(s, d) match {
-      // trackOwned: the stash holds a checkpointed frame — claim its
-      // blocks so clearStore can release them (r18 ownership
-      // discipline; clearStore no longer sweeps unclaimed RDDs)
-      case Some(k) => exactTopStash.getOrElseUpdate(s"$k|exacttop3",
-        graft.operators.Dedup.trackOwned(build))
-      case None => build
-    }
-  }
 
   private val pqTopK: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
@@ -1566,7 +1539,7 @@ object LlmData {
     val dir = annIndexDir(s, d)
     val tuning = graft.operators.AnnIndex.measureTuning(
       emb.filter(col("vec_id") < 10), emb, "embedding", dir,
-      annTable(mhKey(s, d).get),
+      annTable(s, d),
       exactTop = Some(exactTop3(s, d).select(col("qid"), col("cid"))))
     val occ = emb.agg((count(lit(1)).cast("double")
       / lit(IvfPqDefaults.nCells.toDouble)).as("occupancy"))
@@ -1594,37 +1567,34 @@ object LlmData {
   // IDENTICAL to the in-session path — the oracle is the SAME IVFADC
   // replay s_ivfpq_topk uses, so the gate proves persist → load →
   // search loses nothing.
-  private val annIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  graft.operators.Dedup.onClearStore(() => annIndexDirs.clear())
+  // the catalog is shared by every session of the context: one table
+  // name per (session, corpus)
+  private def annTable(s: SparkSession, d: String): String =
+    s"graft_ann_${java.lang.Integer.toHexString(corpus(s, d).hashCode)}"
 
-  private def annTable(key: String): String =
-    s"graft_ann_${java.lang.Integer.toHexString(key.hashCode)}"
-
-  /** Build-once-per-(session, corpus): train (via the shared memo
-    * stores — no extra Lloyd runs), write the bucketed index to a
-    * temp dir, return it. Bench times the write under the `_store_*`
-    * discipline so the search query reports MARGINAL cost. */
-  private def annIndexDir(s: SparkSession, d: String): String = {
-    val key = mhKey(s, d).get
-    annIndexDirs.getOrElseUpdate(key, {
+  /** Build-once-per-(session, corpus): train (via the memoized
+    * trainings — no extra Lloyd runs), write the bucketed index to a
+    * store-owned temp dir (deleted by SessionStore.clear), return it.
+    * Bench times the write under the `_store_*` discipline so the
+    * search query reports MARGINAL cost. */
+  private def annIndexDir(s: SparkSession, d: String): String =
+    stored(s, d, "annIndex") {
       val emb = Tables.embeddings(s, d)
       val (cents, books) = trainIvfPqResidual(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann").toString
+      val dir = SessionStore.tempDir("graft_ann")
       // `label` rides the codes table as a carried metadata column —
       // the filtered-search path (s_filtered_topk) pushes predicates
       // on it into the same bucketed scan the plain search prunes
       graft.operators.AnnIndex.write(emb, "vec_id", "embedding", dir,
-        annTable(key), cents, books, numBuckets = 8,
+        annTable(s, d), cents, books, numBuckets = 8,
         metaCols = Seq("label"))
       dir
-    })
-  }
+    }
 
   private val ivfPqIndexed: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(s, d))
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1640,41 +1610,34 @@ object LlmData {
   // autoCells(n) — ⌈√n⌉ cells, the executable form of the tuning-
   // curve row's "re-training is the answer" — and search the
   // re-trained index at the standard operating point. The re-trained
-  // centroids are stashed so the oracle replays the SAME generic
+  // centroids are stored so the oracle replays the SAME generic
   // IVFADC SQL with the new literals: the gate proves the
   // maintenance op loses nothing — reindex → load → search is
   // hash-identical to an engine-independent replay of the re-trained
   // index. (PQ codebooks survive reindex byte-identical —
   // AnnIndexSpec pins that — so the oracle's ADC side reuses the one
-  // stashed training.)
-  private val annReindexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  graft.operators.Dedup.onClearStore(() => annReindexDirs.clear())
+  // stored training.)
+  private val AnnReindex = "annReindex"
 
-  private val reindexCents =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  graft.operators.Dedup.onClearStore(() => reindexCents.clear())
-
-  private def annReindexDir(s: SparkSession, d: String): String = {
-    val key = mhKey(s, d).get
-    annReindexDirs.getOrElseUpdate(key, {
+  /** (dir, re-trained centroids) of the reindexed artifact — built
+    * once per (session, corpus) in a store-owned temp dir. */
+  private def annReindex(s: SparkSession, d: String): (String, Array[Array[Double]]) =
+    stored(s, d, AnnReindex) {
       val emb = Tables.embeddings(s, d)
       val (cents8, books) = trainIvfPqResidual(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_annre").toString
-      val tbl = annTable(key) + "_re"
+      val dir = SessionStore.tempDir("graft_annre")
+      val tbl = annTable(s, d) + "_re"
       graft.operators.AnnIndex.write(emb, "vec_id", "embedding", dir,
         tbl, cents8, books, numBuckets = 8)
       val meta = graft.operators.AnnIndex.reindex(emb, "embedding", dir,
         tbl, iters = 4, trainMod = 4)
-      reindexCents.put(key, meta.cents)
-      dir
-    })
-  }
+      (dir, meta.cents)
+    }
 
   private val reindexTopK: Q = (s, d) => {
-    val dir = annReindexDir(s, d)
+    val (dir, _) = annReindex(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get) + "_re")
+      annTable(s, d) + "_re")
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1699,7 +1662,7 @@ object LlmData {
   private val filteredTopK: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(s, d))
     val emb = Tables.embeddings(s, d)
     graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
@@ -1731,29 +1694,17 @@ object LlmData {
   // would decay toward zero as the filter sharpens. Ground truth is
   // its own small store (_store_exactfilt — the _store_exacttopk
   // discipline) so the gate row reports marginal cost.
-  private val exactFilteredStash =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  graft.operators.Dedup.onClearStore(() => exactFilteredStash.clear())
-
-  private def exactFilteredTop3(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    def build = {
+  private def exactFilteredTop3(s: SparkSession, d: String): DataFrame =
+    SessionStore.memoFrame(Some(corpus(s, d) / "exactfilt3")) {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10),
-          emb.filter(col("label") === 1), "vec_id", "embedding", k = 3)
-        .localCheckpoint(eager = true)
+        emb.filter(col("label") === 1), "vec_id", "embedding", k = 3)
     }
-    mhKey(s, d) match {
-      // trackOwned: stash-held checkpoint — see exactTopStash
-      case Some(k) => exactFilteredStash.getOrElseUpdate(s"$k|exactfilt3",
-        graft.operators.Dedup.trackOwned(build))
-      case None => build
-    }
-  }
 
   private val filteredRecall: Q = (s, d) => {
     val dir = annIndexDir(s, d)
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
-      annTable(mhKey(s, d).get))
+      annTable(s, d))
     val emb = Tables.embeddings(s, d)
     val exact = exactFilteredTop3(s, d).select(col("qid"), col("cid"))
     val approx = graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
@@ -1996,7 +1947,7 @@ object LlmData {
       // the reindex oracle): cellassign replays the hierarchical rule
       // the engine's TwoLevelCell kernel computes — group argmin over
       // the ⌈√k⌉ grouping literals (Similarity.groupCells on the SAME
-      // stashed centroids, so both engines see identical doubles),
+      // stored centroids, so both engines see identical doubles),
       // then the cell argmin restricted to the winning group's
       // members. celld (all cells) survives for the QUERY side only
       // (proberanks/qcdots rank every cell — |Q|-bounded), which also
@@ -2644,12 +2595,10 @@ object LlmData {
   // (session, corpus); the dyadic 2⁻²⁰ snap keeps the scored margin
   // bit-exact cross-engine, so the trained weights interpolate into
   // the oracle exactly like the LCG literals they replaced.
-  private val classifierFitStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierFitStash.clear())
+  private val ClassifierFit = s"classifierFit|d$classifierD|epochs16|lr8|bigrams"
 
-  private def trainClassifier(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifier(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, ClassifierFit) {
       val docs = Tables.documents(s, d).withColumn("_lbl",
         graft.operators.Classifier.langAgreeLabel(col("text"), col("lang")))
       // trainMod: auto — full batch at every committed proof scale
@@ -2660,11 +2609,6 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(docs.count()),
         bigrams = true)
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierFitStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifier: Q = (s, d) => {
     val fit = trainClassifier(s, d)
@@ -2825,12 +2769,10 @@ object LlmData {
   private def valBucket = // content-hash 5-bucket; bucket 0 = val
     graft.operators.Dedup.shingleHash(concat(lit("cvsplit:"), col("text"))) % 5
 
-  private val classifierValStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierValStash.clear())
+  private val ClassifierValFit = s"classifierValFit|d$classifierD|epochs16|lr8|bigrams"
 
-  private def trainClassifierVal(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifierVal(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, ClassifierValFit) {
       val docs = Tables.documents(s, d).withColumn("_lbl",
         graft.operators.Classifier.langAgreeLabel(col("text"), col("lang")))
       // trainMod: auto on the TRAIN-side count (r19, r18 advice —
@@ -2844,22 +2786,15 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
         bigrams = true)
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   // the calibrated operating cut (Classifier.calibrateCut — the
   // executable threshold rule), chosen on the TRAIN side only (picking
   // it on val would leak) and interpolated into the oracle as an
   // integer-bucket literal like the trained weights
-  private val classifierValCutStash =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  graft.operators.Dedup.onClearStore(() => classifierValCutStash.clear())
+  private val ClassifierValCut = s"$ClassifierValFit|cut"
 
-  private def trainClassifierValCut(s: SparkSession, d: String): Long = {
-    def build = {
+  private def trainClassifierValCut(s: SparkSession, d: String): Long =
+    stored(s, d, ClassifierValCut) {
       val fit = trainClassifierVal(s, d)
       val logit = T.classifierMargin(col("text"), fit.weightSeq, fit.bias)
       val label = graft.operators.Classifier.langAgreeLabel(col("text"), col("lang"))
@@ -2867,11 +2802,6 @@ object LlmData {
         Tables.documents(s, d).filter(valBucket =!= 0)
           .select(logit.as("m"), label.as("y")), "m", "y")
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValCutStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifierVal: Q = (s, d) => {
     val fit = trainClassifierVal(s, d)
@@ -3066,12 +2996,10 @@ object LlmData {
     when(comp, 1L).otherwise(0L)
   }
 
-  private val classifierValQStash =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Classifier.Fit]
-  graft.operators.Dedup.onClearStore(() => classifierValQStash.clear())
+  private val ClassifierValQFit = s"classifierValQFit|d$classifierD|epochs16|lr8|qcToks"
 
-  private def trainClassifierValQ(s: SparkSession, d: String): graft.operators.Classifier.Fit = {
-    def build = {
+  private def trainClassifierValQ(s: SparkSession, d: String): graft.operators.Classifier.Fit =
+    stored(s, d, ClassifierValQFit) {
       val docs = Tables.documents(s, d).withColumn("_lbl", qcLabel)
       // train-side autoTrainMod — same r19 fix as trainClassifierVal
       val trainDocs = docs.filter(valBucket =!= 0)
@@ -3080,33 +3008,21 @@ object LlmData {
         trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
         bigrams = false, featsCol = Some(qcToks))
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValQStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   // the calibrated operating cut for the quality-composite gate
   // (r19 — the t_classifier_val discipline carried to the seed whose
   // floor the task actually supports): chosen on TRAIN only,
   // interpolated into the oracle as an integer-bucket literal
-  private val classifierValQCutStash =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  graft.operators.Dedup.onClearStore(() => classifierValQCutStash.clear())
+  private val ClassifierValQCut = s"$ClassifierValQFit|cut"
 
-  private def trainClassifierValQCut(s: SparkSession, d: String): Long = {
-    def build = {
+  private def trainClassifierValQCut(s: SparkSession, d: String): Long =
+    stored(s, d, ClassifierValQCut) {
       val fit = trainClassifierValQ(s, d)
       val logit = T.classifierLogit(qcToks, fit.weightSeq, fit.bias)
       graft.operators.Classifier.calibrateCut(
         Tables.documents(s, d).filter(valBucket =!= 0)
           .select(logit.as("m"), qcLabel.as("y")), "m", "y")
     }
-    mhKey(s, d) match {
-      case Some(k) => classifierValQCutStash.getOrElseUpdate(k, build)
-      case None => build
-    }
-  }
 
   private val classifierValQ: Q = (s, d) => {
     val fit = trainClassifierValQ(s, d)
@@ -4890,7 +4806,7 @@ object LlmData {
     val sp = when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
     val splits = docs.select(col("doc_id"), sp.as("split"))
     val pairs = Dedup.minhashLsh(docs, "doc_id", "text",
-      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+      shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
     val sym = pairs.select(col("id1").as("eval_id"), col("id2").as("other_id"))
       .unionAll(pairs.select(col("id2").as("eval_id"), col("id1").as("other_id")))
     sym
@@ -5324,17 +5240,17 @@ object LlmData {
   def storeBuilders: Map[String, (SparkSession, String) => Unit] = Map(
     "_store_minhash" -> ((s, d) => {
       Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = mhKey(s, d))
+        shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
       ()
     }),
     "_store_overlap" -> ((s, d) => {
       Dedup.ngramJaccard(Tables.documents(s, d), "doc_id", "text",
-        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = mhKey(s, d))
+        k = 3, maxDocFreq = 50, minJaccard = 0.1, cacheKey = Some(corpus(s, d)))
       ()
     }),
     "_store_kmeans" -> ((s, d) => {
       Similarity.kmeansCells(Tables.embeddings(s, d), "vec_id", "embedding",
-        k = 8, iters = 4, trainMod = 4, cacheKey = mhKey(s, d))
+        k = 8, iters = 4, trainMod = 4, cacheKey = Some(corpus(s, d)))
       ()
     }),
     "_store_pq" -> ((s, d) => { trainPq(s, d); () }),
@@ -5345,34 +5261,40 @@ object LlmData {
     "_store_exacttopk" -> ((s, d) => { exactTop3(s, d); () }),
     "_store_exactfilt" -> ((s, d) => { exactFilteredTop3(s, d); () }),
     "_store_annindex" -> ((s, d) => { annIndexDir(s, d); () }),
-    "_store_annreindex" -> ((s, d) => { annReindexDir(s, d); () }))
+    "_store_annreindex" -> ((s, d) => { annReindex(s, d); () }))
+
+  private def ivfPqTrained: Option[(Array[Array[Double]], Books)] =
+    SessionStore.only(IvfPqResidual)
+  private def residualBooks: Option[Books] = ivfPqTrained.map(_._2)
+  private def reindexCents: Option[Array[Array[Double]]] =
+    SessionStore.only[(String, Array[Array[Double]])](AnnReindex).map(_._2)
 
   /** Static oracles plus the centroid-interpolated IVF replay (present
     * once the s_ivf_topk query has trained — Verify runs every query
     * before dumping oracle_sql.json, so the gate always sees it).
-    * Interpolation requires an UNAMBIGUOUS stash: exactly one
+    * Interpolation reads the SessionStore through `only`: exactly one
     * (session, sfDir) trained in this JVM (the Verify case). With
-    * several trainings stashed, emitting either set would hash-
+    * several trainings stored, emitting either set would hash-
     * mismatch the other dataset's parquet — degrade to the weaker
     * rows-only check instead of emitting a wrong oracle. */
   def oracle: Map[String, String] =
-    staticOracle ++ (ivfCentroids.values.toList match {
-      case c :: Nil =>
+    staticOracle ++ (SessionStore.only[Array[Array[Double]]](IvfCents) match {
+      case Some(c) =>
         Map("s_ivf_topk" -> ivfTopKSql(c), "s_ivf_recall" -> ivfRecallSql(c))
       case _ => Map.empty[String, String]
-    }) ++ (pqBooksStash.values.toList match {
-      case b :: Nil =>
+    }) ++ (SessionStore.only[Books](PqBooks) match {
+      case Some(b) =>
         Map("s_pq_topk" -> pqTopKSql(b), "s_pq_recall" -> pqRecallSql(b),
           "d_pq_semdedup" -> pqSemDedupSql(b),
           // the streaming twin reconstructs the batch output from its
           // emission log — same replay, so same oracle
           "d_stream_pqdedup" -> pqSemDedupSql(b))
       case _ => Map.empty[String, String]
-    }) ++ ((ivfCentroids.values.toList, residBooksStash.values.toList) match {
-      // the composed-index replay needs BOTH trainings stashed
-      // unambiguously (one (session, sfDir) in this JVM) — the
-      // RESIDUAL codebooks, not the raw-PQ family's
-      case (c :: Nil, b :: Nil) =>
+    }) ++ (ivfPqTrained match {
+      // the composed-index replay needs the coarse centroids AND the
+      // RESIDUAL codebooks (not the raw-PQ family's) of one
+      // unambiguous (session, sfDir) training
+      case Some((c, b)) =>
         Map("s_ivfpq_topk" -> ivfPqTopKSql(c, b),
           "s_ivfpq_recall" -> ivfPqRecallSql(c, b),
           "s_ivfpq_tuning" -> ivfPqTuningSql(c, b),
@@ -5392,38 +5314,38 @@ object LlmData {
           // production coding mode this time)
           "d_stream_pqdedup_res" -> pqResSemDedupSql(c, b))
       case _ => Map.empty[String, String]
-    }) ++ ((reindexCents.values.toList, residBooksStash.values.toList) match {
+    }) ++ ((reindexCents, residualBooks) match {
       // the reindexed search replays the SAME generic IVFADC SQL,
       // interpolating the RE-TRAINED centroids (autoCells(n) of
       // them — the CTE builder is generic over ncells, and the
-      // residual offsets re-derive from them) with the one stashed
+      // residual offsets re-derive from them) with the one stored
       // residual codebook training (books survive reindex; CODES
       // re-quantize, which the replay reproduces)
-      case (rc :: Nil, b :: Nil) =>
+      case (Some(rc), Some(b)) =>
         Map("s_reindex_topk" -> ivfPqTopKSql(rc, b))
       case _ => Map.empty[String, String]
-    }) ++ (classifierFitStash.values.toList match {
+    }) ++ (SessionStore.only[graft.operators.Classifier.Fit](ClassifierFit) match {
       // the trained-classifier replay interpolates the in-JVM fit's
-      // dyadic weights — same unambiguity guard as the IVF/PQ stashes
-      case f :: Nil =>
+      // dyadic weights — same unambiguity guard as the IVF/PQ trainings
+      case Some(f) =>
         Map("t_classifier_score" -> classifierSql(f),
           "t_classifier_calib" -> classifierCalibSql(f))
       case _ => Map.empty[String, String]
-    }) ++ ((classifierValStash.values.toList,
-        classifierValCutStash.values.toList) match {
+    }) ++ ((SessionStore.only[graft.operators.Classifier.Fit](ClassifierValFit),
+        SessionStore.only[Long](ClassifierValCut)) match {
       // the held-out-validation replay interpolates the TRAIN-split
       // fit (a different training set than trainClassifier's, so a
-      // separate stash with the same unambiguity guard) plus the
+      // separate entry with the same unambiguity guard) plus the
       // train-calibrated integer cut
-      case (f :: Nil, c :: Nil) =>
+      case (Some(f), Some(c)) =>
         Map("t_classifier_val" -> classifierValSql(f, c))
       case _ => Map.empty[String, String]
-    }) ++ ((classifierValQStash.values.toList,
-        classifierValQCutStash.values.toList) match {
+    }) ++ ((SessionStore.only[graft.operators.Classifier.Fit](ClassifierValQFit),
+        SessionStore.only[Long](ClassifierValQCut)) match {
       // the quality-composite-seed validation replay interpolates its
       // own train-split fit (word+stat-token stream) plus the
       // train-calibrated integer cut (r19)
-      case (f :: Nil, c :: Nil) =>
+      case (Some(f), Some(c)) =>
         Map("t_classifier_val_q" -> classifierValQSql(f, c))
       case _ => Map.empty[String, String]
     })

@@ -23,8 +23,8 @@ object ColumnBridge {
 
   /** The persisted RDDs backing a `localCheckpoint`'d Dataset — the
     * PRECISE handle for releasing its blocks. The global
-    * before/after diff of `getPersistentRDDs` (Dedup
-    * .withNewPersistentRdds) is wrong under concurrent trainings
+    * before/after diff of `getPersistentRDDs` (the claim step of
+    * graft.operators.SessionStore) is wrong under concurrent trainings
     * (r21: pqCodebooks runs subspace Lloyd trainings in parallel —
     * one thread's diff would capture, and later unpersist, another
     * thread's LIVE sample, whose lineage the checkpoint truncated);

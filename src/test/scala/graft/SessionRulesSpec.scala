@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The session rules: [[GraftSession]] is the only place a session is
-  * built, and [[SparkEntry.queries]] is the one boundary that tunes a
+  * built, [[SparkEntry.queries]] is the one boundary that tunes a
   * caller's session — so a session graft did not build still reads the
-  * tables exactly as one it did. */
+  * tables exactly as one it did — and [[graft.operators.SessionStore]]
+  * is the one store for what a session derives from a corpus. */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -48,6 +49,13 @@ class SessionRulesSpec extends SparkSpec {
       case (f, l) if l.contains("GraftSession.tune(") => f
     }
     assert(callers == Seq("SparkEntry.scala"), s"tune callers: $callers")
+  }
+
+  test("SessionStore.scala is the only main file that holds a TrieMap or a clear hook") {
+    val sites = mainCode.collect {
+      case (f, l) if l.contains("TrieMap") || l.contains("onClearStore") => f
+    }.distinct
+    assert(sites == Seq("SessionStore.scala"), s"ad-hoc memo stores: $sites")
   }
 
   test("main code reads only SPARK_GRAFT_CPUS (GraftSession) and SPARK_GRAFT_SF_DIR (Bench) from the env") {
