@@ -21,7 +21,13 @@ object TransformRules {
   /** System rules always appended (transformer.go:21-27). */
   val systemRules: Seq[Rule] = Seq(FieldHide("anonymousId"))
 
-  def apply(df: DataFrame, rules: Seq[Rule]): DataFrame = {
+  /** `df`'s cached blocks, when it has them, are what every rule
+    * reads ([[org.apache.spark.sql.graftbridge.ColumnBridge.pinCached]]):
+    * per-destination branches of one persisted micro-batch, unioned,
+    * all read the micro-batch once instead of re-running the plan under
+    * it. Consume the result before unpersisting `df`. */
+  def apply(input: DataFrame, rules: Seq[Rule]): DataFrame = {
+    val df = org.apache.spark.sql.graftbridge.ColumnBridge.pinCached(input)
     val all = rules ++ systemRules
     val deleted = all.collect { case FieldDelete(f, v) => (f, v) }
       .filter { case (f, _) => df.columns.contains(f) }

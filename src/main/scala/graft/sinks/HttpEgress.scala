@@ -67,7 +67,9 @@ object HttpEgress {
     * batch [[graft.operators.Router.ackLedger]] folds; re-delivery of
     * `waiting_retry` batches is the ledger consumer's enqueue, as in
     * jobsdb). `attemptCol` carries per-envelope attempt numbers when
-    * the upstream enqueues retries; absent, every send is attempt 1. */
+    * the upstream enqueues retries; absent, every send is attempt 1.
+    * With `attemptCol` the micro-batch is persisted for the length of
+    * `ackSink`, which must consume the acks before it returns. */
   def streamDeliver(envelopes: DataFrame, destCol: String,
                     batchIdCol: String, bodyCol: String,
                     urlByDest: Map[String, String],
@@ -77,21 +79,27 @@ object HttpEgress {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     envelopes.writeStream.foreachBatch {
       (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], microBatchId: Long) =>
-        val acks = attemptCol match {
+        attemptCol match {
           case Some(ac) =>
-            // per-attempt grouping keeps postEnvelopes' scalar contract
-            val attempts = df.select(col(ac).cast("int")).distinct()
-              .collect().map(_.getInt(0)).sorted
-            attempts.map(a => postEnvelopes(df.filter(col(ac) === a).toDF(),
-                destCol, batchIdCol, bodyCol, urlByDest, a, timeoutMs))
-              .reduceOption(_ unionByName _)
-              .getOrElse(postEnvelopes(df.limit(0).toDF(), destCol, batchIdCol,
-                bodyCol, urlByDest, 1, timeoutMs))
+            // per-attempt grouping keeps postEnvelopes' scalar contract;
+            // the micro-batch is read once, by the attempt scan, and
+            // every attempt's branch reads its cached blocks
+            val batch = df.persist()
+            try {
+              val attempts = batch.select(col(ac).cast("int")).distinct()
+                .collect().map(_.getInt(0)).sorted
+              val pinned = org.apache.spark.sql.graftbridge.ColumnBridge.pinCached(batch)
+              val acks = attempts.map(a => postEnvelopes(pinned.filter(col(ac) === a),
+                  destCol, batchIdCol, bodyCol, urlByDest, a, timeoutMs))
+                .reduceOption(_ unionByName _)
+                .getOrElse(postEnvelopes(pinned.limit(0), destCol, batchIdCol,
+                  bodyCol, urlByDest, 1, timeoutMs))
+              ackSink(acks, microBatchId)
+            } finally batch.unpersist()
           case None =>
-            postEnvelopes(df.toDF(), destCol, batchIdCol, bodyCol,
-              urlByDest, 1, timeoutMs)
+            ackSink(postEnvelopes(df.toDF(), destCol, batchIdCol, bodyCol,
+              urlByDest, 1, timeoutMs), microBatchId)
         }
-        ackSink(acks, microBatchId)
     }
 
   /** The FULL JobsRequestWorker loop, batch form: POST every

@@ -3,7 +3,9 @@ package graft.sources
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** The gateway's web handler — the reference's HTTP ingress
   * (gateway/gateway.go:324 startWebHandler, :624 ProcessRequest)
@@ -13,7 +15,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    writeKey against a pluggable resolver (back it with
   *    [[ConfigStore.enabledWriteKeys]] for the durable config store,
   *    as the reference checks configdb.go:566), and SPOOLS the raw
-  *    body as one atomically-renamed file per request.
+  *    body as one atomically-renamed file per request, synced to
+  *    disk (file, then directory) before the 200 — a 200 means the
+  *    request is durable.
   *  - a Structured Streaming file source on the spool directory turns
   *    accepted requests into the live intake stream —
   *    `spark.readStream.text(spoolDir)` →
@@ -73,13 +77,22 @@ object HttpIngress {
     def answer(exchange: HttpExchange, key: String): Unit =
       respond(exchange, getErrorStatusCode(key), makeResponse(getStatus(key)))
     def spool(body: String): Unit = {
-      // atomic spool: tmp write + rename, so the streaming file
-      // source never lists a half-written request
+      // durable, atomic spool, all before the 200: the tmp file's bytes
+      // reach the disk, the rename publishes it whole (the streaming
+      // file source never lists a half-written request), and the
+      // directory sync makes the rename itself survive a crash
       val name = s"req_${nonce}_${System.currentTimeMillis()}_${seq.incrementAndGet()}"
       val tmp = Paths.get(spoolDir, s".$name.tmp")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+      val ch = FileChannel.open(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      try {
+        val buf = ByteBuffer.wrap(body.getBytes(StandardCharsets.UTF_8))
+        while (buf.hasRemaining) ch.write(buf)
+        ch.force(true)
+      } finally ch.close()
       Files.move(tmp, Paths.get(spoolDir, s"$name.json"),
         StandardCopyOption.ATOMIC_MOVE)
+      val dir = FileChannel.open(Paths.get(spoolDir), StandardOpenOption.READ)
+      try dir.force(true) finally dir.close()
     }
     server.createContext("/v1/batch", (exchange: HttpExchange) => {
       try {

@@ -39,6 +39,51 @@ object ColumnBridge {
     case _ => Nil
   }
 
+  /** `df` rebased onto the cached blocks it reads, so every later
+    * self-union or self-join of it reads them too. Spark 4.1 defect:
+    * a `LogicalRDD` with a known output partitioning (the frame
+    * `foreachBatch` hands over after a shuffle, e.g. the dedup's
+    * `hashpartitioning(message_id, n)`) gets fresh exprIds in that
+    * partitioning when `unionByName` re-instances it for its second
+    * and later children (`DeduplicateRelations` →
+    * `LogicalRDD.newInstance`). Canonicalization leaves those ids
+    * un-normalized, so `sameResult` is false and `CacheManager` misses
+    * for every branch after the first: each of them re-runs the plan
+    * under the cache, a stateful dedup included. Planning from
+    * `withCachedData` puts the `InMemoryRelation` itself in the plan;
+    * re-instancing it keeps its shared `CachedRDDBuilder`, so every
+    * branch reads the same blocks.
+    *
+    * Only that case is rebased: a frame whose cached data stands in
+    * for no partitioned `LogicalRDD` (uncached inputs, plain
+    * persisted frames, which keep the cache on a self-union) comes
+    * back unchanged, with its plan untouched.
+    *
+    * LIFETIME CONTRACT: consume the pinned frame (and everything built
+    * on it) before unpersisting the input. The plan holds the cache
+    * builder directly, not a `CacheManager` entry: executed after
+    * `unpersist`, it still returns the same rows, but rebuilds and
+    * persists the blocks again as an RDD no cache entry tracks, which
+    * only the `ContextCleaner` releases once the frame is gone. */
+  def pinCached(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df match {
+      case c: org.apache.spark.sql.classic.Dataset[_] if !c.isStreaming =>
+        val cached = c.queryExecution.withCachedData
+        val partitionedRdd = cached.exists {
+          case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+            m.cacheBuilder.logicalPlan.exists {
+              case lr: org.apache.spark.sql.execution.LogicalRDD =>
+                !lr.outputPartitioning.isInstanceOf[
+                  org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning]
+              case _ => false
+            }
+          case _ => false
+        }
+        if (partitionedRdd) org.apache.spark.sql.classic.Dataset.ofRows(c.sparkSession, cached)
+        else df
+      case _ => df
+    }
+
   /** `localCheckpoint(eager)` that KEEPS the frame's hash
     * partitioning visible to the planner. Under AQE the checkpointed
     * plan is an `AdaptiveSparkPlanExec`, whose `outputPartitioning`

@@ -212,6 +212,55 @@ class HttpLoopSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("streaming egress with attempts: a two-attempt micro-batch POSTs every envelope once") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/sink", { e =>
+      bodies.add(new String(e.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+      e.sendResponseHeaders(200, -1); e.close()
+    })
+    server.start()
+    try {
+      val urls = Map("pbi" -> s"http://localhost:${server.getAddress.getPort}/sink")
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[(String, Long, String, Int)]
+      val acks = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+      val writer = HttpEgress.streamDeliver(
+        input.toDF().toDF("dest", "batch_id", "body", "attempt"),
+        "dest", "batch_id", "body", urls, attemptCol = Some("attempt")) { (df, _) =>
+        df.collect().foreach(r => acks.synchronized {
+          acks += ((r.getLong(1), r.getLong(2), r.getLong(3))) })
+      }
+      val sent = (0 until 6).map(i => ("pbi", i.toLong, s"""{"payload":["e$i"]}""", 1 + i % 2))
+      input.addData(sent: _*)
+      val q = writer.start()
+      q.processAllAvailable()
+      q.stop()
+      import scala.jdk.CollectionConverters._
+      assert(bodies.asScala.toSeq.sorted == sent.map(_._3).sorted)
+      assert(acks.toSet == sent.map(s => (s._2, s._4.toLong, 200L)).toSet)
+      assert(acks.map(_._2).toSet == Set(1L, 2L))
+    } finally server.stop(0)
+  }
+
+  test("HTTP ingress: after a 200 the spool holds the whole body and no temp file") {
+    val spool = java.nio.file.Files.createTempDirectory("graft_spool_sync").toString
+    val server = HttpIngress.start(0, spool, _ == "wk-live")
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"
+      val events = (0 until 50).map(i =>
+        s"""{"messageId":"d$i","userId":"u1","event":"e$i","originalTimestamp":"2024-01-01T00:00:00.000Z"}""")
+      val body = s"""{"writeKey":"wk-live","batch":[${events.mkString(",")}]}"""
+      assert(post(base, body) == 200)
+      val files = new java.io.File(spool).listFiles().toSeq
+      assert(files.map(_.getName).filter(_.endsWith(".tmp")).isEmpty, files.toString)
+      assert(files.size == 1 && files.head.getName.endsWith(".json"), files.toString)
+      assert(new String(java.nio.file.Files.readAllBytes(files.head.toPath),
+        StandardCharsets.UTF_8) == body)
+    } finally server.stop(0)
+  }
+
   test("config-store transforms run inside the live loop: FIELDMAP reaches the destination payload") {
     // the reference's processor applies each connection's transforms
     // config between gateway and router (transformer.go
