@@ -128,7 +128,7 @@ object Demo {
     sinks.ShardExport.export(expanded, "text", "row_id", "source",
       s"$out/export", shardSize = 2L)
     println("== training-shard export manifest (v" +
-      sinks.ShardExport.currentVersion(s"$out/export").get + ") ==")
+      sinks.AtomicSwapWriter.currentVersion(s"$out/export").get + ") ==")
     sinks.ShardExport.readManifest(spark, s"$out/export").orderBy("shard")
       .show(truncate = false)
 

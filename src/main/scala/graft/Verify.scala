@@ -30,18 +30,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string: a control char in builder-authored SQL would
+    // otherwise make the driver's json.load fail
+    def q(s: String): String = "\"" + graft.sources.Spool.jsonEscape(s) + "\""
     // A SUBSET run (non-empty `only`) must not clobber a full dump's
     // oracle JSONs: the trained-family SQL (IVF/PQ/classifier)
     // interpolates THIS JVM's trainings, which need not match the

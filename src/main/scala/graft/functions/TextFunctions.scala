@@ -82,6 +82,12 @@ object TextFunctions {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks),
         kTop, kDup))
 
+  /** Native 64-bit SimHash of a token array (graft.plans.SimHash64). */
+  def simhash64(toks: Column): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.plans.SimHash64(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks)))
+
   /** Token n-gram array (space-joined windows of `k` tokens). Empty
     * when the doc has fewer than `k` tokens — the sequence() guard
     * matters because sequence(0, -1) would count DOWN. */

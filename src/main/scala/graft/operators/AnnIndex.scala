@@ -633,7 +633,7 @@ object AnnIndex {
       metaCols)
   }
 
-  private[operators] def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
     if (f.exists()) { f.delete(); () }
   }

@@ -150,7 +150,7 @@ object Classifier {
       // 17 passes fans to 3 (measured below r21's 1-partition time);
       // a decade corpus just reaches the session ceiling sooner.
       val perTask = math.max(1L,
-        Similarity.trainPartitionBytes(docs) / (epochs + 1))
+        Similarity.trainPartitionBytes / (epochs + 1))
       ((bytes / perTask) + 1).min(ceiling.toLong).max(1L).toInt
     }
     // only repartition when it RAISES parallelism: a corpus already

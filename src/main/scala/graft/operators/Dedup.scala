@@ -618,12 +618,11 @@ object Dedup {
       s"need nBlocks ($nBlocks) > maxHamming ($maxHamming) for exact recall")
     require(nBlocks >= 2 && 64 % nBlocks == 0,
       s"nBlocks must divide 64: $nBlocks")
-    graft.plans.SimHash64.register(df.sparkSession)
     val w = 64 / nBlocks
     val mask = (1L << w) - 1
     val banded = df
       .select(col(idCol).as("id"),
-        expr(s"simhash64(split(lower($textCol), ' '))").as("sh"))
+        graft.functions.TextFunctions.simhash64(split(lower(col(textCol)), " ")).as("sh"))
       .select(col("id"), col("sh"),
         explode(array((0 until nBlocks).map(i => struct(lit(i).as("blk"),
           expr(s"shiftright(sh, ${w * i}) & $mask").as("v"))): _*)).as("b"))

@@ -324,13 +324,8 @@ object Similarity {
   }
 
   /** Per-task input-byte target for training fan-out (guide §2.2's
-    * "size partitions by bytes" applied to CPU-bound sample passes).
-    * Overridable per session via `graft.train.partitionBytes` for
-    * deployments whose per-byte assignment cost differs (huge cell
-    * counts make rows more expensive → lower it). */
-  private[operators] def trainPartitionBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.train.partitionBytes")
-      .map(_.toLong).getOrElse(4L << 20)
+    * "size partitions by bytes" applied to CPU-bound sample passes). */
+  private[operators] val trainPartitionBytes: Long = 4L << 20
 
   private def trainCentroids(df: DataFrame, idCol: String, vecCol: String,
                              k: Int, iters: Int, trainMod: Int): Array[Array[Double]] = {
@@ -352,7 +347,7 @@ object Similarity {
     val targetParts = {
       val cores = df.sparkSession.sparkContext.defaultParallelism
       val scanBytes = graft.sources.Tables.planBytes(base)
-      ((scanBytes / math.max(1, trainMod) / trainPartitionBytes(df)) + 1)
+      ((scanBytes / math.max(1, trainMod) / trainPartitionBytes) + 1)
         .min(cores.toLong).max(1L).toInt
     }
     val spread = if (targetParts > filtered.rdd.getNumPartitions)

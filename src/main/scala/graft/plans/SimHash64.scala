@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: 64-bit SimHash over a token array.
   *
@@ -41,12 +40,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
-}
-
-object SimHash64 {
-  /** Register `simhash64(array<string>)` as a session SQL function so
-    * Column pipelines can `expr("simhash64(tokens)")`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", (exprs: Seq[Expression]) => SimHash64(exprs.head), "built-in")
 }

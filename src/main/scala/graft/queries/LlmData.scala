@@ -132,42 +132,18 @@ object LlmData {
   // hash-match the BATCH LSH oracle exactly (same signature family —
   // the row-local fold is bit-identical to the groupBy signature).
   private val streamNearDup: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
-    val docs = Tables.documents(s, d).select("doc_id", "text")
-    val streamDir = java.nio.file.Files
-      .createTempDirectory("graft_neardup_stream").toString
-    // stage the normalized projection (replay independent of the
-    // corpus's physical shape — single file or replicated 10× dir)
-    val staging = s"$streamDir/_staging"
-    docs.write.parquet(staging)
-    val parts = new java.io.File(staging).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    parts.zipWithIndex.foreach { case (part, i) =>
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$streamDir/docs_$i.parquet"))
-    }
     // bounded trigger count (autoFilesPerTrigger): 1 file/trigger at
     // gate scale, ≤ 16 triggers at any volume — the per-trigger
     // planning + state-store version floor was 26% of the 100× board
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", graft.streaming.StreamingPipeline
-        .autoFilesPerTrigger(parts.length).toString)
-      .parquet(streamDir)
     val name = "graft_stream_neardup"
-    val q = graft.streaming.StreamingPipeline
-      .lshNearDupStream(stream, "doc_id", "text",
-        shingleK = 3, numPerms = 16, rowsPerBand = 4)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    // the memory sink now holds the result — drop the staged corpus
-    // copy, or bench's min-of-2 and repeated gate runs accumulate a
-    // full corpus per invocation in /tmp
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    graft.streaming.StreamingPipeline.replayFiles("graft_neardup_stream",
+        Seq("docs" -> Tables.documents(s, d).select("doc_id", "text")),
+        boundedTriggers = true) { stream =>
+      graft.streaming.StreamingPipeline
+        .lshNearDupStream(stream, "doc_id", "text",
+          shingleK = 3, numPerms = 16, rowsPerBand = 4)
+        .writeStream.format("memory").queryName(name).outputMode("append")
     }
-    rmTree(new java.io.File(streamDir))
     s.table(name).select("id1", "id2").distinct().orderBy("id1", "id2")
   }
 
@@ -328,10 +304,9 @@ object LlmData {
   // explode over generate_series(0,63), and the unsigned result maps
   // to Spark's signed long at the end — bit-exact, not rows-only.
   private val simhash: Q = (s, d) => {
-    graft.plans.SimHash64.register(s)
     Tables.documents(s, d)
       .withColumn("tokens", split(lower(col("text")), " "))
-      .withColumn("simhash", expr("simhash64(tokens)"))
+      .withColumn("simhash", graft.functions.TextFunctions.simhash64(col("tokens")))
       .select(col("doc_id"), col("simhash"),
         expr("simhash & 65535").as("band16"))
       .orderBy("doc_id")
@@ -1765,34 +1740,15 @@ object LlmData {
   // pqSemDedupSql oracle as the batch query: streaming at ingest
   // loses nothing vs the nightly batch pass.
   private val streamPqDedup: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
     val books = trainPq(s, d)
-    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val streamDir = java.nio.file.Files
-      .createTempDirectory("graft_pqdedup_stream").toString
-    val staging = s"$streamDir/_staging"
-    emb.write.parquet(staging)
-    val parts = new java.io.File(staging).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    parts.zipWithIndex.foreach { case (part, i) =>
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$streamDir/emb_$i.parquet"))
-    }
-    val stream = s.readStream.schema(emb.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", graft.streaming.StreamingPipeline
-        .autoFilesPerTrigger(parts.length).toString)
-      .parquet(streamDir)
     val name = "graft_stream_pqdedup"
-    val q = graft.streaming.StreamingPipeline
-      .pqDedupStream(stream, "vec_id", "embedding", books)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    graft.streaming.StreamingPipeline.replayFiles("graft_pqdedup_stream",
+        Seq("emb" -> Tables.embeddings(s, d).select("vec_id", "embedding")),
+        boundedTriggers = true) { stream =>
+      graft.streaming.StreamingPipeline
+        .pqDedupStream(stream, "vec_id", "embedding", books)
+        .writeStream.format("memory").queryName(name).outputMode("append")
     }
-    rmTree(new java.io.File(streamDir))
     // the reconstruction self-joins the emission log — checkpoint it
     // once (small: one row per drop decision) so the two branches
     // don't share conflicting memory-sink attribute ids
@@ -1822,35 +1778,16 @@ object LlmData {
   // does), so the gate now covers BOTH coding modes, not just the
   // raw-PQ row.
   private val streamPqDedupRes: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
     val (cents, books) = trainIvfPqResidual(s, d)
-    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val streamDir = java.nio.file.Files
-      .createTempDirectory("graft_pqdedup_res_stream").toString
-    val staging = s"$streamDir/_staging"
-    emb.write.parquet(staging)
-    val parts = new java.io.File(staging).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    parts.zipWithIndex.foreach { case (part, i) =>
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$streamDir/emb_$i.parquet"))
-    }
-    val stream = s.readStream.schema(emb.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", graft.streaming.StreamingPipeline
-        .autoFilesPerTrigger(parts.length).toString)
-      .parquet(streamDir)
     val name = "graft_stream_pqdedup_res"
-    val q = graft.streaming.StreamingPipeline
-      .pqDedupStream(stream, "vec_id", "embedding", books,
-        cents = Some(cents))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    graft.streaming.StreamingPipeline.replayFiles("graft_pqdedup_res_stream",
+        Seq("emb" -> Tables.embeddings(s, d).select("vec_id", "embedding")),
+        boundedTriggers = true) { stream =>
+      graft.streaming.StreamingPipeline
+        .pqDedupStream(stream, "vec_id", "embedding", books,
+          cents = Some(cents))
+        .writeStream.format("memory").queryName(name).outputMode("append")
     }
-    rmTree(new java.io.File(streamDir))
     // reconstruction from the emission log (the raw-mode discipline):
     // keep = min emitted keeper per key, members = distinct drops + 1;
     // the key's leading segment is the coarse cell

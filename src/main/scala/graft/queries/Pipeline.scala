@@ -1065,61 +1065,42 @@ object Pipeline {
   // the DuckDB batch oracle hash-checks the whole state machine.
   // Sentinel sessions themselves (start >= sentinel ts) are dropped.
   private val streamSessions: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
-    // stage a stream dir holding the NORMALIZED event projection plus
-    // one sentinel file — projecting through Tables.events (instead
-    // of a raw-file copy) keeps the replay independent of the
-    // corpus's physical shape: single nanos-timestamp file (driver
-    // testdata) and replicated pre-normalized directory (10× scale
-    // gate) stream identically
+    import graft.streaming.StreamingPipeline
+    // replay the NORMALIZED event projection plus one sentinel file
+    // (coalesced), with the source's default trigger policy
     val gapMs = 1800000L
     val batch = Tables.events(s, d)
       .select("user_id", "event_type", "ts_ms", "value")
     val sentinelMs = batch.agg(max(col("ts_ms"))).head().getLong(0) + gapMs + 1
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    def stage(df: DataFrame, prefix: String): Unit = {
-      val staging = s"$streamDir/_staging_$prefix"
-      df.write.parquet(staging)
-      new java.io.File(staging).listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex
-        .foreach { case (part, i) =>
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(s"$streamDir/${prefix}_$i.parquet"))
-        }
-    }
-    stage(batch, "events")
-    stage(batch.select(col("user_id")).distinct()
+    val sentinels = batch.select(col("user_id")).distinct()
       .select(col("user_id"), lit("sentinel").as("event_type"),
         lit(sentinelMs).as("ts_ms"), lit(0.0).as("value"))
-      .coalesce(1), "sentinels")
-
-    val stream = s.readStream.schema(batch.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(streamDir)
-    val name = "graft_stream_sessions"
+      .coalesce(1)
     // r19: PARQUET sink, not memory — the memory sink collects every
     // emitted session onto the driver (fine at gate scale; ~80M rows
     // at 1000× blew spark.driver.maxResultSize, then the heap). A
     // file sink keeps the emission distributed at ANY volume — the
     // posture every 100-TB streaming job needs — and the read-back is
     // a plain scan; rows are identical, so the batch oracle is
-    // untouched.
-    val sinkDir = s"$streamDir/_sessions_out"
-    val sessions = graft.streaming.StreamingPipeline
-      .sessionize(stream, gapMs = gapMs, watermark = "30 minutes")
-    val q = sessions
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", s"$streamDir/_sessions_ckpt")
-      .queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
+    // untouched. The sink's dir is the store's, deleted on clear.
+    val sinkDir = graft.operators.SessionStore.tempDir("graft_stream_sessions")
+    StreamingPipeline.replayFiles("graft_stream",
+        Seq("events" -> batch, "sentinels" -> sentinels),
+        boundedTriggers = false) { stream =>
+      StreamingPipeline.sessionize(stream, gapMs = gapMs, watermark = "30 minutes")
+        .writeStream.format("parquet")
+        .option("path", s"$sinkDir/_sessions_out")
+        .option("checkpointLocation", s"$sinkDir/_sessions_ckpt")
+        .queryName("graft_stream_sessions")
+        .outputMode("append")
+    }
     val wSeq = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("start_ms")
     // explicit schema on the read-back (r19 advice): a zero-session
     // run leaves sinkDir with no part files and schema inference
     // throws where the old memory sink returned an empty table
-    s.read.schema(sessions.schema).parquet(sinkDir)
+    s.read.schema(org.apache.spark.sql.Encoders.product[StreamingPipeline.SessionOut].schema)
+      .parquet(s"$sinkDir/_sessions_out")
       .filter(col("start_ms") < sentinelMs)
       .withColumn("session_seq", row_number().over(wSeq).cast("long"))
       .select("user_id", "session_seq", "n_events", "start_ms", "end_ms")

@@ -1,9 +1,11 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+import graft.sources.Spool
 
 /** Atomic-swap table loads — the warehouse staging discipline (load
   * into a staging table, then swap it live) applied to a columnar
@@ -12,16 +14,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout: `<root>/v_<n>/` holds immutable snapshot directories;
   * `<root>/_CURRENT` names the live one. A load writes a brand-new
-  * snapshot dir (never touching the live files), then commits by
-  * atomically renaming a temp pointer over `_CURRENT`. Readers
+  * snapshot dir (never touching the live files), then commits the
+  * new `_CURRENT` through [[Spool.commit]] (temp file, atomic rename,
+  * on disk before the publish returns). Readers
   * resolve the pointer at read time: before the commit they see the
   * old snapshot, after it the new — nothing in between. A crash
   * mid-write leaves an orphan `v_` dir and the old pointer; `vacuum`
   * sweeps orphans and superseded snapshots (keeping the live one),
   * the maintenance pass of every snapshot store.
   *
-  * This is the same publish protocol as HighWaterMark.commit (temp +
-  * atomic rename) — POSIX and HDFS renames are atomic; on S3-style
+  * [[ShardExport]] publishes its two coupled artifacts through the
+  * same [[swap]]. POSIX and HDFS renames are atomic; on S3-style
   * stores the pointer would be a conditional PUT. */
 object AtomicSwapWriter {
 
@@ -35,15 +38,16 @@ object AtomicSwapWriter {
   }
 
   /** Load a new snapshot and swap it live. Returns the new version. */
-  def publish(df: DataFrame, root: String): Long = {
+  def publish(df: DataFrame, root: String): Long =
+    swap(root)(df.write.mode(SaveMode.ErrorIfExists).parquet(_))
+
+  /** Write the next snapshot with `write` (given its directory), then
+    * commit the pointer to it. Returns the new version. */
+  def swap(root: String)(write: String => Unit): Long = {
     Files.createDirectories(Paths.get(root))
     val next = currentVersion(root).getOrElse(0L) + 1L
-    val snapDir = Paths.get(root, s"v_$next").toString
-    df.write.mode(SaveMode.ErrorIfExists).parquet(snapDir)
-    val tmp = Paths.get(root, "_CURRENT.tmp")
-    Files.write(tmp, s"$next\n".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, currentFile(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    write(Paths.get(root, s"v_$next").toString)
+    Spool.commit(currentFile(root), s"$next\n".getBytes(StandardCharsets.UTF_8))
     next
   }
 

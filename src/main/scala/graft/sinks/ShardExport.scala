@@ -1,7 +1,6 @@
 package graft.sinks
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,6 +31,11 @@ import graft.operators.{Dedup, ShardedWindow}
   *                                              mix, order checksum
   * <root>/_CURRENT                              atomic version pointer
   * }}}
+  *
+  * The version and pointer are [[AtomicSwapWriter]]'s: the export is
+  * one [[AtomicSwapWriter.swap]], so `_CURRENT` is committed through
+  * [[graft.sources.Spool.commit]] and is on disk before `export`
+  * returns, and [[AtomicSwapWriter.vacuum]] sweeps this layout too.
   *
   * Loader contract: a shard directory's single file read sequentially
   * IS the training order (`pos_in_shard` ascending — the writer
@@ -80,46 +84,31 @@ object ShardExport {
     * (localCheckpoint) and feeds both the data write and the
     * manifest; the `_CURRENT` pointer lands only after BOTH writes
     * complete, so a crash anywhere leaves the previous export live
-    * and an orphan `v_` dir for [[AtomicSwapWriter.vacuum]]-style
-    * sweeping. */
+    * and an orphan `v_` dir for [[AtomicSwapWriter.vacuum]]. */
   def export(docs: DataFrame, textCol: String, idCol: String,
              sourceCol: String, root: String, shardSize: Long = 100L): Long = {
     val spark = docs.sparkSession
     val nShards = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    Files.createDirectories(Paths.get(root))
-    val next = currentVersion(root).getOrElse(0L) + 1L
-    val snap = Paths.get(root, s"v_$next").toString
-
-    // capture the checkpoint's backing RDD for release — Dataset
-    // .unpersist is a no-op on a localCheckpoint'd frame (blocks live
-    // on an internal RDD the CacheManager never saw)
-    val assigned = assign(docs, textCol, idCol, shardSize, nShards).localCheckpoint()
-    val ckptRdds = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(assigned)
-    try {
-      // one bounded file per shard, rows already in training order
-      assigned.select(col("shard"), col("pos_in_shard"),
-          col(idCol), col(sourceCol), col(textCol))
-        .repartition(col("shard"))
-        .sortWithinPartitions("shard", "pos_in_shard")
-        .write.partitionBy("shard").parquet(s"$snap/data")
-      manifest(assigned, idCol, sourceCol).write.parquet(s"$snap/manifest")
-    } finally ckptRdds.foreach(_.unpersist(blocking = false))
-
-    val tmp = Paths.get(root, "_CURRENT.tmp")
-    Files.write(tmp, s"$next\n".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(root, "_CURRENT"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
-
-  def currentVersion(root: String): Option[Long] = {
-    val f = Paths.get(root, "_CURRENT")
-    if (!Files.exists(f)) None
-    else Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim.toLong)
+    AtomicSwapWriter.swap(root) { snap =>
+      // capture the checkpoint's backing RDD for release — Dataset
+      // .unpersist is a no-op on a localCheckpoint'd frame (blocks live
+      // on an internal RDD the CacheManager never saw)
+      val assigned = assign(docs, textCol, idCol, shardSize, nShards).localCheckpoint()
+      val ckptRdds = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(assigned)
+      try {
+        // one bounded file per shard, rows already in training order
+        assigned.select(col("shard"), col("pos_in_shard"),
+            col(idCol), col(sourceCol), col(textCol))
+          .repartition(col("shard"))
+          .sortWithinPartitions("shard", "pos_in_shard")
+          .write.partitionBy("shard").parquet(s"$snap/data")
+        manifest(assigned, idCol, sourceCol).write.parquet(s"$snap/manifest")
+      } finally ckptRdds.foreach(_.unpersist(blocking = false))
+    }
   }
 
   private def livePath(root: String, sub: String): String = {
-    val v = currentVersion(root).getOrElse(
+    val v = AtomicSwapWriter.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed export under $root"))
     Paths.get(root, s"v_$v", sub).toString
   }

@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.model.{SchemaField, TableSchema}
 
 /** Destination-side writers (SURVEY.md §2.D).
@@ -10,10 +9,8 @@ import graft.model.{SchemaField, TableSchema}
   * The reference's destination catalogue (kassette-server
   * destinations/warehouseutils.go: RS/BQ/SNOWFLAKE/POSTGRES/CLICKHOUSE/
   * MSSQL/AZURE_SYNAPSE/DELTALAKE/S3+GCS+AZURE datalake) reduces to
-  * three delivery shapes, re-expressed Spark-first:
+  * two delivery shapes here, re-expressed Spark-first:
   *  - warehouse table: partitioned columnar write + dialect DDL,
-  *  - object-store JSON dump (integrations/s3/main.go: timestamped
-  *    object per batch),
   *  - REST batch envelopes (integrations/{powerbi,anaplan,keen}:
   *    `{"payload":[...]}` bodies) — materialized as JSON rows ready
   *    for any HTTP egress layer.
@@ -80,50 +77,6 @@ object WarehouseWriter {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
-}
-
-object CompactingWriter {
-  /** Small-files compaction — the lake-maintenance pass every 100-TB
-    * pipeline needs: streaming/micro-batch ingestion leaves thousands
-    * of tiny files per partition; queries then pay one task + one
-    * footer read per file. Rewrite with a bounded file-count:
-    * `rowsPerFile` caps records per output file (maxRecordsPerFile),
-    * and the repartition count derives from a cheap count() so the
-    * write produces ⌈n/rowsPerFile⌉ near-uniform files instead of
-    * one-file-per-input-task. Returns the file count written. */
-  def compact(df: DataFrame, path: String, rowsPerFile: Long): Int = {
-    val n = df.count()
-    val parts = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-    df.repartition(parts)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", rowsPerFile)
-      .parquet(path)
-    parts
-  }
-}
-
-object BucketedWriter {
-  /** Bucketed + sorted columnar table — the co-location strategy for
-    * repeated big-big joins at 100 TB: both fact tables bucketed by
-    * the join key with the same bucket count join WITHOUT any
-    * Exchange (verified in BucketedJoinSpec). This is the Spark
-    * analogue of the reference warehouse destinations' dist/sort-key
-    * config (RS/Synapse DDL in warehouseutils). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-}
-
-object JsonDumpSink {
-  /** S3-style JSON object dump (integrations/s3/main.go uploads one
-    * `<unix-ts>.json` object per batch): partitioned newline-JSON
-    * files; `batchCol` plays the object-key role so each batch lands
-    * in its own subtree. */
-  def write(df: DataFrame, path: String, batchCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(batchCol).json(path)
 }
 
 object RestBatcher {

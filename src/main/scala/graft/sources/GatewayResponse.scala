@@ -62,7 +62,7 @@ object GatewayResponse {
   /** response.go:126 `{"msg": %q}` — Go's %q is a JSON-compatible
     * quoted string for the message vocabulary above. */
   def makeResponse(msg: String): String =
-    s"""{"msg": "${RestPoller.jsonEscape(msg)}"}"""
+    s"""{"msg": "${Spool.jsonEscape(msg)}"}"""
 
   /** response.go:58 transPixelResponse — the 43-byte transparent
     * 1×1 GIF89a answered on the pixel intake path. */

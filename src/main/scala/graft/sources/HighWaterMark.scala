@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions.col
   *      so a backlogged source catches up `stepMs` at a time;
   *   2. the caller extracts that window (`extractWindow` is the
   *      filter);
-  *   3. `commit` persists `to` ATOMICALLY (temp file + atomic rename).
+  *   3. `commit` persists `to` through [[Spool.commit]]: atomic (a
+  *      reader or a crash sees the old mark or the new one) and on
+  *      disk before it returns.
   * A crash between 2 and 3 re-extracts the same window on restart —
   * at-least-once, the reference's own re-poll semantics — and never
   * skips data. Downstream idempotence (dedup / idempotentSink /
@@ -62,17 +64,13 @@ object HighWaterMark {
     else Some((from, math.min(from + stepMs, ceilingMs)))
   }
 
-  /** Atomically persist the new mark (temp file + rename — a reader
-    * or a crash never observes a half-written state file). */
+  /** Persist the new mark ([[Spool.commit]]: atomic, and durable
+    * before it returns). */
   def commit(stateDir: String, source: String, watermarkMs: Long): Unit = {
     Files.createDirectories(Paths.get(stateDir))
-    val f = stateFile(stateDir, source)
-    val tmp = Paths.get(f.toString + ".tmp")
     val body =
       s"""{"source":"${validSource(source)}","watermark_ms":$watermarkMs}""" + "\n"
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Spool.commit(stateFile(stateDir, source), body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** The window filter — pushed to the scan as `ts >= from AND

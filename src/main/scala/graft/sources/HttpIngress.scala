@@ -3,9 +3,7 @@ package graft.sources
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** The gateway's web handler — the reference's HTTP ingress
   * (gateway/gateway.go:324 startWebHandler, :624 ProcessRequest)
@@ -14,10 +12,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   *  - POST /v1/batch accepts a `{"batch":[...]}` envelope, checks the
   *    writeKey against a pluggable resolver (back it with
   *    [[ConfigStore.enabledWriteKeys]] for the durable config store,
-  *    as the reference checks configdb.go:566), and SPOOLS the raw
-  *    body as one atomically-renamed file per request, synced to
-  *    disk (file, then directory) before the 200 — a 200 means the
-  *    request is durable.
+  *    as the reference checks configdb.go:566), and SPOOLS the body
+  *    as one one-line file per request through [[Spool.spool]], whose
+  *    commit is on disk (file, then directory) before it returns and
+  *    so before the 200 — a 200 means the request is durable.
   *  - a Structured Streaming file source on the spool directory turns
   *    accepted requests into the live intake stream —
   *    `spark.readStream.text(spoolDir)` →
@@ -63,12 +61,6 @@ object HttpIngress {
         s"($maxInFlight) so overload sheds always find a free thread")
     Files.createDirectories(Paths.get(spoolDir))
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    // per-instance nonce: N gateway pods share one spool directory
-    // (object-store prefix at fleet scale) — names must not collide
-    // across processes, and an AtomicLong alone restarts at 0 in every
-    // pod
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val seq = new java.util.concurrent.atomic.AtomicLong(0L)
     val permits = new java.util.concurrent.Semaphore(maxInFlight)
     import GatewayResponse._
     // every wire answer speaks the reference's response vocabulary
@@ -76,24 +68,6 @@ object HttpIngress {
     // code from the same key → code map
     def answer(exchange: HttpExchange, key: String): Unit =
       respond(exchange, getErrorStatusCode(key), makeResponse(getStatus(key)))
-    def spool(body: String): Unit = {
-      // durable, atomic spool, all before the 200: the tmp file's bytes
-      // reach the disk, the rename publishes it whole (the streaming
-      // file source never lists a half-written request), and the
-      // directory sync makes the rename itself survive a crash
-      val name = s"req_${nonce}_${System.currentTimeMillis()}_${seq.incrementAndGet()}"
-      val tmp = Paths.get(spoolDir, s".$name.tmp")
-      val ch = FileChannel.open(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      try {
-        val buf = ByteBuffer.wrap(body.getBytes(StandardCharsets.UTF_8))
-        while (buf.hasRemaining) ch.write(buf)
-        ch.force(true)
-      } finally ch.close()
-      Files.move(tmp, Paths.get(spoolDir, s"$name.json"),
-        StandardCopyOption.ATOMIC_MOVE)
-      val dir = FileChannel.open(Paths.get(spoolDir), StandardOpenOption.READ)
-      try dir.force(true) finally dir.close()
-    }
     server.createContext("/v1/batch", (exchange: HttpExchange) => {
       try {
         if (exchange.getRequestMethod != "POST") answer(exchange, InvalidRequestMethod)
@@ -111,7 +85,7 @@ object HttpIngress {
             case None => answer(exchange, NoWriteKeyInBasicAuth)
             case Some(wk) if !isAuthorized(wk) => answer(exchange, InvalidWriteKey)
             case Some(_) =>
-              spool(body)
+              Spool.spool(spoolDir, "req", body)
               respond(exchange, 200, makeResponse(Ok))
           }
         } finally permits.release()
@@ -146,11 +120,11 @@ object HttpIngress {
                 val item = (Seq("messageId", "anonymousId", "userId", "event",
                   "originalTimestamp", "sentAt", "properties")
                   .flatMap(k => param(k).map(v =>
-                    s""""$k":"${RestPoller.jsonEscape(v)}"""")) :+
+                    s""""$k":"${Spool.jsonEscape(v)}"""")) :+
                   """"type":"track"""").mkString("{", ",", "}")
                 val receivedAt = java.time.format.DateTimeFormatter.ISO_INSTANT
                   .format(java.time.Instant.ofEpochMilli(System.currentTimeMillis()))
-                spool(s"""{"writeKey":"${RestPoller.jsonEscape(wk)}",""" +
+                Spool.spool(spoolDir, "req", s"""{"writeKey":"${Spool.jsonEscape(wk)}",""" +
                   s""""requestIP":"${exchange.getRemoteAddress.getAddress.getHostAddress}",""" +
                   s""""receivedAt":"$receivedAt","batch":[$item]}""")
                 exchange.getResponseHeaders.set("Content-Type", "image/gif")

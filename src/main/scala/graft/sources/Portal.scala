@@ -248,7 +248,7 @@ object Portal {
   private def safely(ex: HttpExchange)(f: => Unit): Unit =
     try f catch {
       case e: Throwable => try json(ex, 500,
-        s"""{"Error": "${RestPoller.jsonEscape(String.valueOf(e.getMessage))}"}""")
+        s"""{"Error": "${Spool.jsonEscape(String.valueOf(e.getMessage))}"}""")
       catch { case _: Throwable => () }
     }
 
@@ -353,7 +353,7 @@ object Portal {
     "notes" -> "", "metadata" -> "", "iconurl" -> "").withDefaultValue("")
 
   private def s(r: Row, k: String): String =
-    "\"" + RestPoller.jsonEscape(Option(r(k)).filter(_ != "null").getOrElse("")) + "\""
+    "\"" + Spool.jsonEscape(Option(r(k)).filter(_ != "null").getOrElse("")) + "\""
   private def n(r: Row, k: String): String =
     Option(r(k)).filter(_ != "null").getOrElse("0")
 

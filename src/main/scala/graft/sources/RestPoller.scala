@@ -3,7 +3,7 @@ package graft.sources
 import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.time.{Duration, Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
@@ -24,8 +24,10 @@ import java.time.format.DateTimeFormatter
   *   - each window's items are wrapped in the gateway's
   *     `{"batch":[...]}` envelope with per-item `kassetteType` tagging
   *     (extract.go:118 sjson.SetBytes `batch.N.kassetteType`) and
-  *     SPOOLED with the same atomic tmp-write + rename discipline as
-  *     [[HttpIngress]] — a Structured Streaming file source on the
+  *     SPOOLED through [[Spool.spool]], the same one-line, durable
+  *     commit as [[HttpIngress]] (on disk before it returns, so before
+  *     the window's mark commits; a pretty-printed response still
+  *     lands as one line) — a Structured Streaming file source on the
   *     spool directory is the hand-off into the live pipeline, and
   *     [[EventBatchReader.explodeBatches]] parses the envelopes with
   *     the exact semantics the batch gate verifies (p_envelope).
@@ -34,7 +36,7 @@ import java.time.format.DateTimeFormatter
   * client fetching config-plane-sized pages, exactly like the
   * reference's one goroutine per source. The DATA path stays fully
   * distributed: the spool is consumed by Spark's streaming file
-  * source, so N poller instances (UUID-noncd spool names) can feed
+  * source, so N poller instances (per-process spool names) can feed
   * one stream with no coordination.
   */
 object RestPoller {
@@ -181,36 +183,8 @@ object RestPoller {
     // the write key is config-store DATA — escape it, or a key holding
     // a quote/backslash corrupts the envelope and the spool stream
     // silently drops or misparses the whole batch
-    val wk = jsonEscape(writeKey)
+    val wk = Spool.jsonEscape(writeKey)
     s"""{"writeKey":"$wk","requestIP":"127.0.0.2","receivedAt":"$receivedAt","batch":[${items.mkString(",")}]}"""
-  }
-
-  /** JSON string-body escape: backslash, quote, and all control chars
-    * (everything a config-store-sourced value could smuggle into an
-    * interpolated envelope). */
-  private[graft] def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Per-instance nonce so N poller pods can share one spool dir
-    * without filename collisions. */
-  private val instanceNonce = java.util.UUID.randomUUID().toString.take(8)
-  private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def spool(spoolDir: String, source: String, fromMs: Long,
-                    api: String, body: String): Unit = {
-    Files.createDirectories(Paths.get(spoolDir))
-    val name = s"rest_${source}_${fromMs}_${api}_${instanceNonce}_${seq.incrementAndGet()}"
-    val tmp = Paths.get(spoolDir, s".$name.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(spoolDir, s"$name.json"),
-      StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** One poll cycle, extract-then-commit:
@@ -239,12 +213,13 @@ object RestPoller {
       defaultStartMs = truncMinute(nowMs - cfg.historyMs),
       stepMs = cfg.stepMs,
       ceilingMs = truncMinute(nowMs)).map { case (from, to) =>
+      Files.createDirectories(Paths.get(spoolDir))
       var total = 0
       cfg.apis.foreach { api =>
         val items = fetchApiWindow(client, cfg.url, api, from, to,
           cfg.pageSize, timeoutMs).map(tagType(_, api))
         if (items.nonEmpty) {
-          spool(spoolDir, source, from, api, envelope(writeKey, items, to))
+          Spool.spool(spoolDir, s"rest_${source}_${from}_$api", envelope(writeKey, items, to))
           total += items.size
         }
       }

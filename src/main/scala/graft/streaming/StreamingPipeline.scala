@@ -4,7 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+
+import graft.operators.{AnnIndex, SessionStore}
 
 /** Structured-Streaming re-expression of the reference's always-on
   * loop (SURVEY.md §2.E): gateway webRequestBatcher → processor
@@ -261,6 +263,46 @@ object StreamingPipeline {
     require(nFiles >= 0 && targetBatches > 0,
       s"autoFilesPerTrigger: nFiles=$nFiles targetBatches=$targetBatches")
     math.max(1L, (nFiles + targetBatches - 1) / targetBatches).toInt
+  }
+
+  /** Replay batch frames as a file stream — how the gate runs a
+    * streaming operator over a corpus. Each `(name, frame)` is staged,
+    * in order, as numbered parquet files `<name>_<i>.parquet` (the
+    * frame's partitions) in a [[SessionStore.tempDir]] named
+    * `prefix…`; the files are read back as one stream with the first
+    * frame's schema, `sink` sets where the stream goes, and the query
+    * runs to the end of the input under `Trigger.AvailableNow`.
+    * `boundedTriggers` caps the trigger count with
+    * [[autoFilesPerTrigger]]; without it the source's default
+    * applies. Staging projects through the caller's frame (not a raw
+    * file copy), so a single-file corpus and a replicated directory
+    * stream identically. The staged input is deleted when the replay
+    * ends, whether or not it succeeded; a sink that must outlive the
+    * replay writes into a directory of its own. */
+  def replayFiles(prefix: String, frames: Seq[(String, DataFrame)],
+                  boundedTriggers: Boolean)(
+      sink: DataFrame => DataStreamWriter[_]): Unit = {
+    val dir = SessionStore.tempDir(prefix)
+    try {
+      val nFiles = frames.map { case (name, df) =>
+        val staging = s"$dir/_staging_$name"
+        df.write.parquet(staging)
+        val parts = new java.io.File(staging).listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        parts.zipWithIndex.foreach { case (part, i) =>
+          java.nio.file.Files.move(part.toPath,
+            java.nio.file.Paths.get(s"$dir/${name}_$i.parquet"))
+        }
+        parts.length
+      }.sum
+      val reader = frames.head._2.sparkSession.readStream
+        .schema(frames.head._2.schema).option("pathGlobFilter", "*.parquet")
+      val stream = (if (!boundedTriggers) reader
+        else reader.option("maxFilesPerTrigger", autoFilesPerTrigger(nFiles).toString))
+        .parquet(dir)
+      val q = sink(stream).trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally AnnIndex.deleteRecursively(new java.io.File(dir))
   }
 
   case class BandHit(id: Long, band: Int, band_hash: String)

@@ -261,6 +261,37 @@ class HttpLoopSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("HTTP ingress: every event of a pretty-printed envelope reaches readStream") {
+    val spool = java.nio.file.Files.createTempDirectory("graft_spool_pretty").toString
+    val server = HttpIngress.start(0, spool, _ == "wk-live")
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"
+      // LF and CRLF line breaks between tokens, as any JSON pretty-printer emits
+      val body =
+        """{
+          |  "writeKey": "wk-live",
+          |  "receivedAt": "2024-01-01T00:10:00.000Z",
+          |  "batch": [
+          |    {"messageId": "p1", "userId": "u1", "event": "click",
+          |     "originalTimestamp": "2024-01-01T00:00:00.000Z"},
+          |    {
+          |      "messageId": "p2",
+          |      "userId": "u1",
+          |      "event": "view"
+          |    }
+          |  ]
+          |}""".stripMargin.replace("[\n", "[\r\n")
+      assert(post(base, body) == 200)
+      val q = EventBatchReader.readStream(spark, spool)
+        .writeStream.format("memory").queryName("http_pretty")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
+      val got = spark.table("http_pretty").select("message_id", "event", "write_key")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      assert(got == Set(("p1", "click", "wk-live"), ("p2", "view", "wk-live")))
+    } finally server.stop(0)
+  }
+
   test("config-store transforms run inside the live loop: FIELDMAP reaches the destination payload") {
     // the reference's processor applies each connection's transforms
     // config between gateway and router (transformer.go

@@ -137,6 +137,26 @@ class RestPollerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("every item of a pretty-printed poll response reaches readStream") {
+    def pretty(id: String) =
+      s"""{\n  "messageId": "$id",\r\n  "userId": "u1",\n  "event": "run"\n}"""
+    val srv = new HistoryServer("task", Map(T0 -> Seq(pretty("p1"), pretty("p2"))))
+    val state = tmpDir("graft_rp_state5"); val spool = tmpDir("graft_rp_spool5")
+    try {
+      val cfg = RestPoller.configFromJson(
+        s"""{"url":"${srv.base}","count":"10","interval":"1","history":"1","task":"true"}""")
+      assert(RestPoller.pollOnce(state, "pretty", spool, cfg, "wk-rest",
+        nowMs = T0 + 60000L).contains((T0, T0 + 60000L, 2)))
+      val q = EventBatchReader.readStream(spark, spool)
+        .writeStream.format("memory").queryName("rest_pretty")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable(); q.stop()
+      val got = spark.table("rest_pretty").select("message_id", "kassette_type")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(got == Set("p1", "p2").map(_ -> "task"))
+    } finally srv.stop()
+  }
+
   test("envelope escapes a hostile write key — the spool stream parses it back intact") {
     val wk = "k\"ey\\with\ncontrol"
     val body = graft.sources.RestPoller.envelope(wk,

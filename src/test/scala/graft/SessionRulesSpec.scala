@@ -8,7 +8,11 @@ import scala.jdk.CollectionConverters._
   * built, [[SparkEntry.queries]] is the one boundary that tunes a
   * caller's session — so a session graft did not build still reads the
   * tables exactly as one it did — and [[graft.operators.SessionStore]]
-  * is the one store for what a session derives from a corpus. */
+  * is the one store for what a session derives from a corpus. Beside
+  * them, one way to do each thing: [[graft.sources.Spool]] is the one
+  * file commit, the store is the one owner of temp directories, graft
+  * reads no session conf of its own, and no top-level type is left
+  * that nothing names. */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -23,19 +27,27 @@ class SessionRulesSpec extends SparkSpec {
     assert(rows(caller) == expected)
   }
 
-  /** (file name, code line) for every main-code line that is not a
-    * comment or Scaladoc line. */
-  private lazy val mainCode: Seq[(String, String)] = {
-    val root = Paths.get("src/main/scala")
+  /** (file name, code line) for every line under `dir` that is not a
+    * comment or Scaladoc line, indentation kept. */
+  private def code(dir: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     files.flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala.map(_.trim)
-        .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      Files.readAllLines(p).asScala
+        .filterNot { l =>
+          val t = l.trim
+          t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+        }
         .map(l => p.getFileName.toString -> l)
     }
   }
+
+  /** (file name, code line) for every main-code line that is not a
+    * comment or Scaladoc line. */
+  private lazy val mainCode: Seq[(String, String)] =
+    code("src/main/scala").map { case (f, l) => f -> l.trim }
 
   test("SparkSession.builder( is called only in GraftSession.scala") {
     val sites = mainCode.collect {
@@ -71,5 +83,61 @@ class SessionRulesSpec extends SparkSpec {
     val stray = reads.filterNot(allowed)
     assert(stray.isEmpty, s"env reads outside the rules: $stray")
     assert(reads.toSet == allowed, s"env reads: $reads")
+  }
+
+  test("Spool.scala is the only main file that commits a file (ATOMIC_MOVE, FileChannel)") {
+    val sites = mainCode.collect {
+      case (f, l) if l.contains("ATOMIC_MOVE") || l.contains("FileChannel") => f
+    }.distinct
+    assert(sites == Seq("Spool.scala"), s"file commits outside the spool: $sites")
+  }
+
+  test("SessionStore.scala is the only main file that creates a temp directory") {
+    val sites = mainCode.collect {
+      case (f, l) if l.contains("createTempDirectory") => f
+    }.distinct
+    assert(sites == Seq("SessionStore.scala"), s"temp dirs outside the store: $sites")
+  }
+
+  test("main code reads no session conf key of its own (graft.*)") {
+    val reads = mainCode.collect {
+      case (f, l) if """conf\.\w+\(\s*"graft\.""".r.findFirstIn(l).isDefined => s"$f: $l"
+    }
+    assert(reads.isEmpty, s"graft session-conf reads: $reads")
+  }
+
+  test("every top-level main type is named outside its own declaration, or defines main") {
+    // ROADMAP §2: the live Service is to call these three (the portal,
+    // the counters and the REST poll workers kassette's main starts)
+    val allowed = Set("Portal", "StatsEmitter", "RestPoller")
+    val decl = """^(?:(?:final|sealed|abstract|case|private\S*)\s+)*(?:object|class|trait)\s+(\w+)""".r
+    // each code line tagged with the top-level declaration it sits in:
+    // a column-0 declaration, package or import line starts a new one
+    def regions(lines: Seq[(String, String)]): Seq[((String, Int), String)] = {
+      var n = 0
+      var file = ""
+      lines.map { case (f, l) =>
+        if (f != file) { file = f; n += 1 }
+        else if (!l.startsWith(" ") && (decl.findFirstIn(l).isDefined ||
+          l.startsWith("package ") || l.startsWith("import "))) n += 1
+        (f, n) -> l
+      }
+    }
+    val main = regions(code("src/main/scala"))
+    val all = main ++
+      regions(code("perfbench/src")).map { case ((f, n), l) => (s"bench/$f", n) -> l }
+    val types = main.collect {
+      case (r, l) if !l.startsWith(" ") => decl.findFirstMatchIn(l).map(m => (r, m.group(1)))
+    }.flatten
+    val unnamed = types.filterNot { case (r, name) =>
+      val word = s"\\b$name\\b".r
+      allowed(name) ||
+        main.exists { case (r2, l) => r2 == r && l.contains("def main(") } ||
+        all.exists { case (r2, l) =>
+          r2 != r && word.findFirstIn(l).isDefined &&
+            !decl.findFirstMatchIn(l.trim).exists(_.group(1) == name) // a companion's
+        }
+    }.map { case ((f, _), name) => s"$f: $name" }
+    assert(unnamed.isEmpty, s"top-level types nothing names: $unnamed")
   }
 }

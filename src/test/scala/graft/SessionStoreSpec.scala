@@ -96,4 +96,29 @@ class SessionStoreSpec extends SparkSpec {
     // books of one training
     guarded("_store_pqres", Seq("s_ivfpq_topk"))
   }
+
+  private def tmpDirs(prefix: String): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix)).map(_.getName).toSet
+
+  test("p_stream_sessions leaves no graft_stream dir once the store is cleared") {
+    SessionStore.clear()
+    val before = tmpDirs("graft_stream")
+    assert(SparkEntry.queries("p_stream_sessions")(spark, sf).collect().nonEmpty)
+    SessionStore.clear()
+    assert(tmpDirs("graft_stream") -- before == Set.empty[String])
+  }
+
+  test("a replay whose sink throws leaves no staged dir behind") {
+    val before = tmpDirs("graft_replay_spec")
+    val fail: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      (_, _) => throw new IllegalStateException("sink down")
+    intercept[Exception] {
+      graft.streaming.StreamingPipeline.replayFiles("graft_replay_spec",
+          Seq("ids" -> spark.range(10).toDF("id")), boundedTriggers = true) {
+        _.writeStream.foreachBatch(fail)
+      }
+    }
+    assert(tmpDirs("graft_replay_spec") -- before == Set.empty[String])
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.ShardExport
+import graft.sinks.{AtomicSwapWriter, ShardExport}
 
 /** The training-shard export sink: a real corpus goes through
   * shuffle→shard→publish, and the read-back must prove (a) nothing
@@ -92,7 +92,7 @@ class ShardExportSpec extends SparkSpec {
     // simulate a crashed second export: snapshot dir exists, pointer
     // never moved — readers still resolve v_1
     Files.createDirectories(Paths.get(root, "v_99", "data"))
-    assert(ShardExport.currentVersion(root).contains(1L))
+    assert(AtomicSwapWriter.currentVersion(root).contains(1L))
     assert(ShardExport.readManifest(spark, root).collect().toSeq == before)
 
     // a completed re-export swaps atomically to v_2

@@ -72,28 +72,12 @@ class SimilarityAndTextSpec extends SparkSpec {
   }
 
   test("SimHash: identical token sets agree, disjoint ones differ") {
-    graft.plans.SimHash64.register(spark)
     val df = Seq(
       ("a b c d e f g h"), ("a b c d e f g h"), ("q r s t u v w x"))
-      .toDF("text").withColumn("sim", expr("simhash64(split(text, ' '))"))
+      .toDF("text").withColumn("sim", T.simhash64(split(col("text"), " ")))
     val sims = df.select("sim").as[Long].collect()
     assert(sims(0) == sims(1))
     assert(sims(0) != sims(2))
-  }
-
-  test("native expressions are callable from the SQL surface") {
-    // the injection rules themselves (no-throw application)
-    new graft.plans.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    // the same builders wired into a live registry, driven via SQL
-    graft.plans.SimHash64.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("dot_product",
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.DotProduct(exprs.head, exprs(1)), "built-in")
-    val r = spark.sql(
-      "SELECT simhash64(array('a','b')) AS h, dot_product(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
-      .head()
-    assert(r.getDouble(1) == 11.0)
-    assert(r.getLong(0) != 0L)
   }
 
   test("quality score lands in [0,1] on real docs") {

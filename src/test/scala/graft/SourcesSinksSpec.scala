@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.sinks.{JsonDumpSink, RestBatcher, WarehouseWriter}
+import graft.sinks.{RestBatcher, WarehouseWriter}
 import graft.sources.{ConfigStore, EventBatchReader}
 
 class SourcesSinksSpec extends SparkSpec {
@@ -49,25 +49,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(df.isStreaming && df.columns.contains("value"))
   }
 
-  test("CompactingWriter bounds output file count and rows per file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    // fragmented input: 20 partitions of 50 rows would write 20 files
-    val df = spark.range(1000).repartition(20).toDF("id")
-    val parts = graft.sinks.CompactingWriter.compact(df, s"$dir/out", rowsPerFile = 250L)
-    assert(parts == 4)
-    // round-robin partitions are near- (not exactly) uniform, so the
-    // cap may split one of them: bound is parts + 1, far below the 20
-    // input fragments; every file obeys the hard row cap
-    val files = new java.io.File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length <= parts + 1, s"got ${files.length} files")
-    files.foreach { f =>
-      assert(spark.read.parquet(f.getPath).count() <= 250L, f.getName)
-    }
-    // roundtrip intact
-    assert(spark.read.parquet(s"$dir/out").count() == 1000L)
-  }
-
   test("WarehouseWriter generates dialect DDL") {
     val schema = TableSchema("audit_events", Seq(
       SchemaField("id", "INT", primaryKey = true),
@@ -99,13 +80,10 @@ class SourcesSinksSpec extends SparkSpec {
     assert(WarehouseWriter.ddl(schema, "deltalake").contains("at TIMESTAMP"))
   }
 
-  test("JsonDumpSink partitions by batch key; parquet roundtrip works") {
+  test("WarehouseWriter.write partitions by column; parquet roundtrip works") {
     val dir = Files.createTempDirectory("graft_sink").toString
     val df = Seq((0L, "a", "click"), (1L, "a", "view"), (2L, "b", "click"))
       .toDF("id", "batch_key", "etype")
-    JsonDumpSink.write(df, s"$dir/json", "batch_key")
-    val back = spark.read.json(s"$dir/json")
-    assert(back.count() == 3)
     WarehouseWriter.write(df, s"$dir/pq", Seq("etype"))
     assert(spark.read.parquet(s"$dir/pq").count() == 3)
   }
