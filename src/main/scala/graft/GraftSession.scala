@@ -6,11 +6,14 @@ import org.apache.spark.sql.SparkSession
   * Demo, the tools and the test suites all build their session here.
   *
   * Scale notes (100 TB): AQE (on by default in Spark 4) handles
-  * runtime coalescing/skew-splits; `shuffle.partitions` is only the
-  * pre-AQE upper bound (the local core count here, thousands on a real
-  * cluster). Events parquet carries INT64 TIMESTAMP(NANOS) which
-  * vanilla Spark rejects — `nanosAsLong` reads it losslessly as
-  * epoch-nanos (see sources.Tables which normalizes it).
+  * runtime coalescing/skew-splits. `shuffle.partitions` is the one
+  * width ceiling: the pre-AQE upper bound of every shuffle and the
+  * cap of every partition and shard count graft derives from plan
+  * bytes ([[graft.operators.Widths]]) — the local core count here,
+  * thousands on a real cluster. Events parquet carries INT64
+  * TIMESTAMP(NANOS) which vanilla Spark rejects — `nanosAsLong` reads
+  * it losslessly as epoch-nanos (see sources.Tables which normalizes
+  * it).
   */
 object GraftSession {
 

@@ -121,47 +121,30 @@ object Classifier {
     // (identical to the old sum-of-counts-over-window by definition —
     // every token lands in exactly one bucket), which removes the
     // full-frame Window sort the old build paid.
-    // Partition count is SIZE-adaptive (guide §2.2 — partitions sized
-    // by input bytes, not core count): a kilobyte gate corpus stays at
-    // ONE partition, where the 17-epoch loop's per-stage floor is a
-    // single tiny task (a 32-way fan-out of the same corpus measured
-    // 2× SLOWER end-to-end — scheduling dominated the compute), while
-    // a decade-scale corpus fans out toward the session's
-    // shuffle-partition ceiling. Explicit N, because a column-only
+    // Partition count is WORK-adaptive ([[Widths.of]]): the
+    // checkpointed frame is re-read by every margin+gradient pass, so
+    // the fit's work is ~bytes × (epochs+1). A kilobyte gate corpus
+    // stays at ONE partition, where the 17-epoch loop's per-stage
+    // floor is a single tiny task (a 32-way fan-out of the same corpus
+    // measured 2× SLOWER end-to-end — scheduling dominated the
+    // compute); sf0.1's 584 KB corpus at 17 passes fans to 3
+    // (measured below r21's 1-partition time); a decade-scale corpus
+    // reaches the width ceiling. Explicit N, because a column-only
     // repartition is an AQE coalesce target and epochs then lose the
-    // layout entirely.
+    // layout entirely. Only a width that RAISES parallelism
+    // repartitions: a corpus already arriving in >= nPart splits
+    // tokenizes on its natural scan partitions (the 100× replicated
+    // dir lands in 100 — capping it at the derived count halved the
+    // busiest stage's cores), and the kilobyte gate corpus skips the
+    // exchange entirely.
     // the feature frame is scoped to this fit — capture the
     // checkpoint's backing RDDs and release them when the fit is
     // done; Dataset.unpersist is a no-op on a localCheckpoint'd frame
     // (it only uncaches the CacheManager entry, which a checkpoint
     // never had), so without the RDD handle the blocks linger until
     // ContextCleaner GC
-    val ceiling = docs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nPart = {
-      val bytes = graft.sources.Tables.planBytes(sample)
-      // WORK-adaptive (the gramFanout discipline): the checkpointed
-      // frame is re-read by every margin+gradient pass, so the fit's
-      // work is ~bytes × (epochs+1), not bytes — the per-task byte
-      // target divides by the pass count (divide, don't multiply:
-      // planBytes saturates at Long.MaxValue when stats are invalid
-      // and a multiply would overflow negative). A kilobyte gate
-      // corpus still lands at 1 partition; sf0.1's 584 KB corpus at
-      // 17 passes fans to 3 (measured below r21's 1-partition time);
-      // a decade corpus just reaches the session ceiling sooner.
-      val perTask = math.max(1L,
-        Similarity.trainPartitionBytes / (epochs + 1))
-      ((bytes / perTask) + 1).min(ceiling.toLong).max(1L).toInt
-    }
-    // only repartition when it RAISES parallelism: a corpus already
-    // arriving in >= nPart splits tokenizes on its natural scan
-    // partitions (the 100× replicated dir lands in 100 — capping it
-    // at the derived count halved the busiest stage's cores), and
-    // the kilobyte gate corpus skips the exchange entirely
-    val naturalSplits = sample.rdd.getNumPartitions
-    val spread =
-      if (nPart > naturalSplits) sample.repartition(nPart, col(idCol))
-      else sample
+    val spread = Widths.raise(sample, Widths.of(sample, inflate = epochs + 1), col(idCol))
+    val raised = spread ne sample // raise returns its input otherwise
     val aggd = spread
       .select(col(idCol).as("_id"), col(labelCol).cast("double").as("_y"),
         toks.as("_ta"))
@@ -180,9 +163,9 @@ object Classifier {
     // pre-r22 every epoch re-exchanged there), so pay ONE compact
     // feature-frame exchange at build to buy 17 exchange-free epochs.
     val keyed =
-      if (nPart > naturalSplits) aggd
-      else aggd.repartition(
-        math.max(1, math.min(naturalSplits, ceiling)), col("_id"))
+      if (raised) aggd
+      else aggd.repartition(math.max(1, math.min(sample.rdd.getNumPartitions,
+        Widths.ceiling(docs.sparkSession))), col("_id"))
     // localCheckpointKeyed, not plain localCheckpoint: under AQE the
     // checkpoint reports UnknownPartitioning and the epoch loop then
     // re-exchanges the frame EVERY epoch (observed in the r22 before-

@@ -63,20 +63,6 @@ object Dedup {
     a
   }
 
-  /** Work-adaptive fan-out for gram building (guide §2.2): partitions
-    * sized so each task constructs ~4 MB of k-gram strings — input
-    * bytes inflate ~k× (every token starts a k-token window), so the
-    * per-task BYTE target divides by k rather than the input bytes
-    * multiplying by k: `planBytes` saturates at Long.MaxValue when
-    * plan stats are invalid and the multiply overflowed negative,
-    * silently collapsing the fan-out to 1 task exactly when the input
-    * was unknown-large (r21 verdict #5). Division cannot overflow, so
-    * unknown-size inputs now clamp to `cores`. */
-  private[graft] def gramFanout(bytes: Long, k: Int, cores: Int): Int = {
-    val perTaskBytes = math.max(1L, (4L << 20) / math.max(1, k))
-    ((bytes / perTaskBytes) + 1).min(cores.toLong).max(1L).toInt
-  }
-
   def shingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // split() materializes behind its own projection (multi-ref ->
     // CollapseProject keeps the boundary); inline, the transform
@@ -522,21 +508,20 @@ object Dedup {
     // attribute, not a re-evaluated tokenizer: measured 13x on the
     // occurrence scan (6.5s -> 0.5s at sf0.1)
     val toksName = freeAlias(df, "graft_toks")
-    // r21 fan-out, WORK-adaptive: gram building inflates each input
-    // byte ~k× (every token starts a k-token window string), so the
-    // per-task work target scales planBytes by k — a 584 KB corpus at
-    // k=50 is ~29 MB of gram construction, worth 8 tasks, while the
-    // same corpus at k=5 stays at its natural single split. The
-    // exchange moved is the raw text, once, before the k× inflation
-    // (guide §3.3: explode after the move).
+    // r21 fan-out, WORK-adaptive ([[Widths.of]] with inflate = k):
+    // gram building inflates each input byte ~k× (every token starts
+    // a k-token window string) — a 584 KB corpus at k=50 is ~29 MB of
+    // gram construction, worth 8 tasks, while the same corpus at k=5
+    // stays at its natural single split. The exchange moved is the
+    // raw text, once, before the k× inflation (guide §3.3: explode
+    // after the move).
     // r22 single materialization (guide §2.4 exchange reuse): the
     // token exchange is now UNCONDITIONAL — never below the natural
     // split count, so the 100-TB posture keeps full scan parallelism
     // — because base and occ both hang off the SAME Exchange node and
     // ReuseExchange computes the scan+tokenize ONCE (pre-r22 each
     // branch re-scanned and re-tokenized the corpus).
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val parts = gramFanout(graft.sources.Tables.planBytes(df), k, cores)
+    val parts = Widths.of(df, inflate = k)
     // explicit isNotNull(id) ABOVE the shared exchange: the final
     // LeftOuter join pushes isnotnull(id) into its right (coverage)
     // branch only, which made that branch's copy of the token

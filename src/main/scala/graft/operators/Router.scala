@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DecimalType, NumericType, StringType}
 
 /** Destination routing — the reference fans events out per enabled
@@ -32,10 +31,10 @@ object Router {
     *
     * Scale shape: `row_number = running count`, so the per-destination
     * ordered window is a [[ShardedWindow.runningSum]] over `lit(1)`
-    * partitioned by (dest, shard). The shard COUNT is derived from the
-    * input's plan bytes ([[shardCount]]: one shard per
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, clamped to
-    * `[1, spark.sql.shuffle.partitions]`), not from the core count:
+    * partitioned by (dest, shard). The shard COUNT is
+    * [[Widths.shards]] of the input (one shard per AQE advisory
+    * partition size of plan bytes, up to the width ceiling), not the
+    * core count:
     *
     *  - ONE shard (every live micro-batch, the gate corpus): there are
     *    no bounds to pick and every earlier-shard offset is 0, so
@@ -78,10 +77,7 @@ object Router {
     * triggers at most one more (see inline). */
   def microBatch(df: DataFrame, destCol: String, orderCol: String,
                  size: Int): DataFrame = {
-    val spark = df.sparkSession
-    val shards = shardCount(graft.sources.Tables.planBytes(df),
-      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val shards = Widths.shards(df)
     // the string key's monotone image: 7 UTF-8 bytes zero-padded to
     // fixed width, read as an unsigned integer (null iff the key is)
     def imageAt(skip: Int): Column =
@@ -177,15 +173,6 @@ object Router {
     numbered.withColumn("batch_id", ((col("__rn") - 1) / size).cast("long"))
       .drop("__rn")
   }
-
-  /** [[microBatch]]'s shard count: one shard per `perShard` bytes of
-    * input, clamped to `[1, ceiling]`. Divides rather than multiplies
-    * (the [[Dedup.gramFanout]] discipline) and clamps before the +1:
-    * `planBytes` saturates at Long.MaxValue when plan stats are
-    * invalid, so an unknown-size input clamps to the ceiling instead of
-    * overflowing down to one shard. */
-  private[graft] def shardCount(bytes: Long, perShard: Long, ceiling: Int): Int =
-    (bytes / math.max(1L, perShard)).min(ceiling - 1L).max(0L).toInt + 1
 
   /** Gateway intake micro-batching (gateway.go:144 webRequestBatcher):
     * the reference closes a batch when `maxBatchSize` requests

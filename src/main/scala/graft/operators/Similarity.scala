@@ -323,35 +323,23 @@ object Similarity {
     array_min(array(scored: _*)).getField("j")
   }
 
-  /** Per-task input-byte target for training fan-out (guide §2.2's
-    * "size partitions by bytes" applied to CPU-bound sample passes). */
-  private[operators] val trainPartitionBytes: Long = 4L << 20
-
   private def trainCentroids(df: DataFrame, idCol: String, vecCol: String,
                              k: Int, iters: Int, trainMod: Int): Array[Array[Double]] = {
     val base = df.select(col(idCol), col(vecCol).as("_v"))
-    // r21 fan-out, SIZE-adaptive (guide §2.2: partitions sized by
-    // bytes, not core count): when the source arrives in fewer splits
-    // than the sample's volume warrants (the sf-bench parquet is ONE
-    // row group → every Lloyd pass ran a single task), hash-spread
-    // the SAMPLE before checkpointing it — the assignment pass (k·dim
-    // dots per row, the expensive half of every iteration) is
-    // embarrassingly parallel. Derived from input bytes/trainMod so a
-    // kilobyte gate corpus stays at its natural single partition
-    // (32-way task scheduling would cost more than the compute — the
-    // measured r21 regression), while an N×-decade sample fans out to
-    // the session's cores. Scoped to the training sample (1/trainMod
-    // of rows, bounded by autoTrainMod at scale); the identity
-    // whenever the corpus already lands in enough splits.
+    // r21 fan-out, SIZE-adaptive ([[Widths]]): when the source
+    // arrives in fewer splits than the sample's volume warrants (the
+    // sf-bench parquet is ONE row group → every Lloyd pass ran a
+    // single task), hash-spread the SAMPLE before checkpointing it —
+    // the assignment pass (k·dim dots per row, the expensive half of
+    // every iteration) is embarrassingly parallel. The work is the
+    // 1-in-trainMod sample of the input's bytes, so a kilobyte gate
+    // corpus stays at its natural single partition (32-way task
+    // scheduling would cost more than the compute — the measured r21
+    // regression), while an N×-decade sample fans out to the width
+    // ceiling; the identity whenever the corpus already lands in
+    // enough splits.
     val filtered = base.filter(pmod(xxhash64(col(idCol)), lit(trainMod)) === 0)
-    val targetParts = {
-      val cores = df.sparkSession.sparkContext.defaultParallelism
-      val scanBytes = graft.sources.Tables.planBytes(base)
-      ((scanBytes / math.max(1, trainMod) / trainPartitionBytes) + 1)
-        .min(cores.toLong).max(1L).toInt
-    }
-    val spread = if (targetParts > filtered.rdd.getNumPartitions)
-      filtered.repartition(targetParts, col(idCol)) else filtered
+    val spread = Widths.raise(filtered, Widths.of(base, deflate = trainMod), col(idCol))
     // the sample checkpoint is scoped to this training run — capture
     // its backing RDD (off its own plan node — precise under the
     // concurrent subspace trainings) and release it before returning

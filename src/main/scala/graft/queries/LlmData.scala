@@ -3457,7 +3457,7 @@ object LlmData {
   // phase 1 ranks within (source, token-hash shard), phase 2 ranks
   // the ≤ shards·3 survivors. ln/round are IEEE-identical in DuckDB.
   private val tfidfTop: Q = (s, d) => {
-    val nShards = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val corpus = Tables.documents(s, d)
     // ONE corpus pass (r22, guide §1.2/§2.4): df/n_sources/scored all
     // consume the same (source, tok) count table, which previously
     // re-scanned + re-tokenized the corpus per consumer. The explicit
@@ -3468,7 +3468,7 @@ object LlmData {
     // ReuseExchange computes the tokenize+count once (the d_substr /
     // t_dsir_weight reuse discipline). tf >= 1 always (it is a count
     // over existing rows), so df and n_sources are unchanged.
-    val toks = Tables.documents(s, d)
+    val toks = corpus
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok").isNotNull)
     val tf = toks.groupBy("source", "tok").agg(count(lit(1)).as("tf"))
@@ -3483,7 +3483,7 @@ object LlmData {
           .as("score"))
     graft.operators.ShardedWindow.topK(scored, "source",
         Seq(col("score").desc, col("tok").asc), k = 3,
-        shardOn = col("tok"), shards = nShards)
+        shardOn = col("tok"), shards = Widths.of(corpus))
       .select("source", "tok", "tf", "df", "score", "rank")
       .orderBy("source", "rank")
   }
@@ -3512,13 +3512,12 @@ object LlmData {
   // stay single-task.
   private val sampleBudget: Q = (s, d) => {
     val budget = 100L
-    val nShards = s.conf.get("spark.sql.shuffle.partitions").toInt
     val base = Tables.documents(s, d).select(
       col("source"), col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tok"),
       md5(concat(lit("sample:"), col("text"))).as("k"))
     graft.operators.ShardedWindow.runningSum(base, "source",
-      graft.operators.ShardedWindow.hexShard(col("k"), nShards),
+      graft.operators.ShardedWindow.hexShard(col("k"), Widths.of(base)),
       Seq(col("k"), col("doc_id")), col("n_tok"), "cum")
       .groupBy("source")
       .agg(
@@ -3723,23 +3722,29 @@ object LlmData {
     * to the digit (flat fields alone would not prove per-pixel
     * accumulation). */
   /** doc_id stream for the media generators, FANNED OUT to the
-    * session's core count when the source scan yields fewer splits
-    * (guide §2.5 input skew: a single-row-group parquet caps scan
-    * parallelism at ONE task, and everything downstream of these ids
-    * is CPU-heavy row-local codec work — encode + decode ran
-    * single-threaded on a 32-core session). Ids-only exchange: the
-    * media payloads are generated AFTER the repartition, so no media
-    * byte ever shuffles; at scale, where the corpus already arrives
-    * in >= cores splits, the condition makes this the identity. */
+    * [[Widths]] width of the media work when the source scan yields
+    * fewer splits (guide §2.5 input skew: a single-row-group parquet
+    * caps scan parallelism at ONE task, and everything downstream of
+    * these ids is CPU-heavy row-local codec work — encode + decode
+    * ran single-threaded on a 32-core session). Each 8-byte id
+    * expands to ~8 KB of raw pixels or samples ([[MediaExpansion]])
+    * that are encoded and decoded. Ids-only exchange: the media
+    * payloads are generated AFTER the repartition, so no media byte
+    * ever shuffles; at scale, where the corpus already arrives in
+    * enough splits, this is the identity. */
   private def mediaIds(s: SparkSession, d: String)
       : org.apache.spark.sql.Dataset[Long] = {
     import org.apache.spark.sql.Encoders
     val ids = Tables.documents(s, d)
       .select(col("doc_id")).as[java.lang.Long](Encoders.LONG)
       .map(_.longValue())(Encoders.scalaLong)
-    val cores = s.sparkContext.defaultParallelism
-    if (ids.rdd.getNumPartitions < cores) ids.repartition(cores) else ids
+    Widths.raise(ids, Widths.of(ids, inflate = MediaExpansion))
   }
+
+  /** Raw media bytes the generators build per id byte: a 16-79 ×
+    * 16-63 px image (~7.5 KB of 32-bit pixels), 1-10 50 ms chunks of
+    * 16-bit PCM (~4.8 KB) or 2-6 frames of 8-39 × 8-31 px (~7 KB). */
+  private[graft] val MediaExpansion: Int = 1024
 
   private def attachImagePayload(s: SparkSession, d: String) = {
     import org.apache.spark.sql.Encoders
@@ -4616,14 +4621,14 @@ object LlmData {
   // survivor set) — no task sorts a full source vocabulary, same
   // posture fix as t_tfidf_top.
   private val zipfSlope: Q = (s, d) => {
-    val nShards = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = Tables.documents(s, d)
+    val corpus = Tables.documents(s, d)
+    val toks = corpus
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
     val freq = toks.groupBy("source", "tok").agg(count(lit(1)).as("f"))
     val xy = graft.operators.ShardedWindow.topK(freq, "source",
         Seq(col("f").desc, col("tok")), k = 50,
-        shardOn = col("tok"), shards = nShards, rankOut = "r")
+        shardOn = col("tok"), shards = Widths.of(corpus), rankOut = "r")
       .select(col("source"),
         round(log(col("r").cast(DoubleType)), 6).cast(DecimalType(12, 6)).as("x"),
         round(log(col("f").cast(DoubleType)), 6).cast(DecimalType(12, 6)).as("y"))
@@ -4919,12 +4924,11 @@ object LlmData {
   // per-source window, no single-task sort at 100 TB.
   private val seqPack: Q = (s, d) => {
     val B = 512L
-    val nShards = s.conf.get("spark.sql.shuffle.partitions").toInt
     val docs = Tables.documents(s, d).select(col("source"), col("doc_id"),
       T.wsTokenCount(col("text")).cast("long").as("n_tokens"),
       Dedup.shingleHash(concat(lit("pack:"), col("text"))).as("ph"))
     graft.operators.ShardedWindow.runningSum(docs, "source",
-      graft.operators.ShardedWindow.hashShard60(col("ph"), nShards),
+      graft.operators.ShardedWindow.hashShard60(col("ph"), Widths.of(docs)),
       Seq(col("ph"), col("doc_id")), col("n_tokens"), "cum_after")
       .select(col("source"), col("doc_id"), col("n_tokens"),
         expr(s"(cum_after - n_tokens) div $B").as("seq_first"),
@@ -4990,26 +4994,12 @@ object LlmData {
   // position is a ShardedWindow prefix count with ONE logical group:
   // the 60-bit order hash is range-sharded by its top bits, each task
   // sorts ~1/S of the corpus, and driver-broadcast shard offsets make
-  // the position exactly the global one.
-  private val shuffleExport: Q = (s, d) => {
-    val shardSize = 100L
-    val nShards = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val docs = Tables.documents(s, d).select(
-      col("doc_id"), col("source"),
-      Dedup.shingleHash(concat(lit("shuffle:"), col("text"))).as("oh"))
-      .withColumn("corpus", lit("all"))
-    graft.operators.ShardedWindow.runningSum(docs, "corpus",
-      graft.operators.ShardedWindow.hashShard60(col("oh"), nShards),
-      Seq(col("oh"), col("doc_id")), lit(1L), "pos")
-      .withColumn("shard", expr(s"(pos - 1) div $shardSize"))
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"),
-        min_by(col("doc_id"), col("pos")).as("first_doc"),
-        max_by(col("doc_id"), col("pos")).as("last_doc"),
-        countDistinct(col("source")).as("n_sources"),
-        sum(col("pos") * (col("oh") % lit(1000003L))).as("order_sum"))
-      .orderBy("shard")
-  }
+  // the position exactly the global one. The query IS the
+  // graft.sinks.ShardExport manifest at 100 docs per shard.
+  private val shuffleExport: Q = (s, d) =>
+    graft.sinks.ShardExport.manifest(
+      graft.sinks.ShardExport.assign(Tables.documents(s, d), "text", "doc_id", shardSize = 100L),
+      "doc_id", "source").orderBy("shard")
 
   private val shuffleExportSql =
     """WITH d AS (SELECT doc_id, source,

@@ -546,27 +546,33 @@ object Relational {
   // --------------------------------------------------------------- q25
   // Distributed NTILE: a partition-less `Window.orderBy` sorts the whole
   // table in ONE task — a scale-killer at 100 TB. Two-phase instead:
-  //  1. ONE cheap partial agg collects ~P approx-percentile boundary
-  //    VALUES to the driver (P doubles — same driver-held-scalars
-  //    pattern as the k-means centroids). Bucketing against those
-  //    literals is purely map-side and — unlike repartitionByRange,
-  //    whose sampled ranges can differ between executions — gives the
+  //  1. ONE cheap partial agg collects P-1 approx-percentile boundary
+  //    VALUES to the driver (P = the table's [[Widths.of]] width; P-1
+  //    doubles — same driver-held-scalars pattern as the k-means
+  //    centroids; none at width 1). Bucketing against those literals
+  //    is purely map-side and — unlike repartitionByRange, whose
+  //    sampled ranges can differ between executions — gives the
   //    IDENTICAL assignment in every job that uses it.
   //  2. row_number INSIDE each bucket (window keyed by bucket — fully
   //    parallel); per-bucket counts (one tiny agg) become cumulative
   //    offsets, so global rank = offset + local row number. Buckets are
   //    value-ordered, so the rank is exact even when boundary values
   //    repeat, and the NTILE(10) bucket arithmetic is a literal branch
-  //    chain — no division, exact at any rank.
+  //    chain — no division, exact at any rank. Null balances sort last
+  //    (DESC NULLS LAST) in a bucket of their own: that keeps the rank
+  //    exact and the bucket non-constant, so with no bounds the window
+  //    still partitions by it (a constant would fold out of the spec).
   private val q25: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val p = s.conf.get("spark.sql.shuffle.partitions").toInt
     val basedf = Tables.customer(s, d).select(col("c_acctbal"), col("c_custkey"))
+    val p = graft.operators.Widths.of(basedf)
     val fracs = (1 until p).map(_.toDouble / p)
-    val bounds = basedf
+    val bounds = if (fracs.isEmpty) Seq.empty[Double] else basedf
       .agg(percentile_approx(col("c_acctbal"), typedLit(fracs), lit(1000)).as("b"))
       .collect()(0).getSeq[Double](0).sorted.reverse
-    val bucket = bounds.zipWithIndex.foldRight(lit(bounds.size): Column) {
+    val lastBucket = when(col("c_acctbal").isNull, lit(bounds.size + 1))
+      .otherwise(lit(bounds.size))
+    val bucket = bounds.zipWithIndex.foldRight(lastBucket) {
       case ((b, k), rest) => when(col("c_acctbal") > lit(b), k).otherwise(rest)
     }
     val ranked = basedf

@@ -5,7 +5,7 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, ShardedWindow}
+import graft.operators.{Dedup, ShardedWindow, Widths}
 
 /** Training-shard export: materialize a deterministically shuffled
   * corpus as fixed-size ordered shard files plus a manifest — the
@@ -41,10 +41,10 @@ import graft.operators.{Dedup, ShardedWindow}
   * IS the training order (`pos_in_shard` ascending — the writer
   * repartitions by shard and sorts within partitions); `pos_in_shard`
   * is also a column, so a loader that cannot rely on file row order
-  * sorts `shardSize` rows in memory. At fleet scale, size
-  * `spark.sql.shuffle.partitions` so each write task holds a handful
-  * of shards (a task writes every shard hashed to it, one bounded
-  * file each).
+  * sorts `shardSize` rows in memory. The range shards of the
+  * position window are [[graft.operators.Widths.of]] the corpus; the
+  * write runs one task per shuffle partition, and a task writes every
+  * shard hashed to it, one bounded file each.
   */
 object ShardExport {
 
@@ -53,13 +53,13 @@ object ShardExport {
     * `__oh` (the 60-bit content order hash) is retained for the
     * manifest's order checksum. */
   def assign(docs: DataFrame, textCol: String, idCol: String,
-             shardSize: Long, nShards: Int): DataFrame = {
+             shardSize: Long): DataFrame = {
     require(shardSize > 0, s"shardSize must be positive: $shardSize")
     val base = docs
       .withColumn("__oh", Dedup.shingleHash(concat(lit("shuffle:"), col(textCol))))
       .withColumn("__corpus", lit("all"))
     ShardedWindow.runningSum(base, "__corpus",
-      ShardedWindow.hashShard60(col("__oh"), nShards),
+      ShardedWindow.hashShard60(col("__oh"), Widths.of(docs)),
       Seq(col("__oh"), col(idCol)), lit(1L), "__pos")
       .withColumn("shard", expr(s"(__pos - 1) div $shardSize"))
       .withColumn("pos_in_shard", expr(s"(__pos - 1) % $shardSize"))
@@ -87,13 +87,11 @@ object ShardExport {
     * and an orphan `v_` dir for [[AtomicSwapWriter.vacuum]]. */
   def export(docs: DataFrame, textCol: String, idCol: String,
              sourceCol: String, root: String, shardSize: Long = 100L): Long = {
-    val spark = docs.sparkSession
-    val nShards = spark.conf.get("spark.sql.shuffle.partitions").toInt
     AtomicSwapWriter.swap(root) { snap =>
       // capture the checkpoint's backing RDD for release — Dataset
       // .unpersist is a no-op on a localCheckpoint'd frame (blocks live
       // on an internal RDD the CacheManager never saw)
-      val assigned = assign(docs, textCol, idCol, shardSize, nShards).localCheckpoint()
+      val assigned = assign(docs, textCol, idCol, shardSize).localCheckpoint()
       val ckptRdds = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(assigned)
       try {
         // one bounded file per shard, rows already in training order

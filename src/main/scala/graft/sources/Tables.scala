@@ -91,15 +91,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
-
-  /** Optimizer size estimate of a frame's source bytes — the input to
-    * SIZE-adaptive parallelism decisions (r21): partition counts
-    * derived from data volume instead of a core count keep a
-    * kilobyte gate corpus at its natural single task while an
-    * N×-decade input fans out (guide §2.2 — partitions sized by
-    * bytes). For parquet scans this is the file footprint on disk. */
-  def planBytes(df: DataFrame): Long = {
-    val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (b.isValidLong) b.toLong else Long.MaxValue
-  }
 }

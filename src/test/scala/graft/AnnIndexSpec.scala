@@ -24,7 +24,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("persisted search == in-session ivfPqTopK, and meta round-trips exactly") {
     val (cents, books) = trained

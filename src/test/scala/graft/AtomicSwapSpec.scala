@@ -6,7 +6,7 @@ class AtomicSwapSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_swap").toString + "/tbl"
+    tempDir("graft_swap").toString + "/tbl"
 
   test("publish swaps atomically; readers only ever see full snapshots") {
     val root = tmpRoot()

@@ -51,7 +51,7 @@ class CompactionLoopSpec extends SparkSpec {
       k = 8, iters = 4, trainMod = 4)
     val books = Similarity.pqResidualCodebooks(h1, "vec_id", "embedding",
       cents, m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4)
-    val dir = java.nio.file.Files.createTempDirectory("cmp_loop").toString
+    val dir = tempDir("cmp_loop").toString
     AnnIndex.write(h1, "vec_id", "embedding", dir, "cmp_codes", cents, books)
 
     // generation 1: stream h2 bootstrapped from the h1 artifact

@@ -82,9 +82,9 @@ class CurationLoopSpec extends SparkSpec {
       T0 -> Seq(doc("w1", "web", w1), doc("w2", "web", w2), doc("w3", "web", w3)),
       T0 + 60000L -> Seq(doc("w4", "web", w4), doc("j1", "web", junk)),
       T0 + 120000L -> Seq(doc("b1", "books", b1), doc("b2", "books", b2))))
-    val state = java.nio.file.Files.createTempDirectory("graft_cur_state").toString
-    val spool = java.nio.file.Files.createTempDirectory("graft_cur_spool").toString
-    val exportRoot = java.nio.file.Files.createTempDirectory("graft_cur_exp").toString
+    val state = tempDir("graft_cur_state").toString
+    val spool = tempDir("graft_cur_spool").toString
+    val exportRoot = tempDir("graft_cur_exp").toString
     try {
       // --- ingest: catch-up poll through the durable mark, page size 2
       val cfg = RestPoller.configFromJson(
@@ -190,7 +190,7 @@ class CurationLoopSpec extends SparkSpec {
       k = 8, iters = 4, trainMod = 4)
     val books = Similarity.pqResidualCodebooks(emb, "vec_id", "embedding",
       cents, m = 4, ks = 8, dim = 64, iters = 4, trainMod = 4)
-    val annDir = java.nio.file.Files.createTempDirectory("graft_cur2_ann").toString
+    val annDir = tempDir("graft_cur2_ann").toString
     AnnIndex.write(emb, "vec_id", "embedding", annDir, "cur2_ann", cents, books)
     val seed = Tables.documents(spark, sf).withColumn("_lbl",
       Classifier.langAgreeLabel(col("text"), col("lang")))
@@ -228,9 +228,9 @@ class CurationLoopSpec extends SparkSpec {
       T0 + 60000L -> Seq(vdoc("w4", "web", w4, oneHot(21)),
         vdoc("j1", "web", junk, oneHot(33)),
         vdoc("b1", "books", b1, oneHot(47)))))
-    val state = java.nio.file.Files.createTempDirectory("graft_cur2_state").toString
-    val spool = java.nio.file.Files.createTempDirectory("graft_cur2_spool").toString
-    val exportRoot = java.nio.file.Files.createTempDirectory("graft_cur2_exp").toString
+    val state = tempDir("graft_cur2_state").toString
+    val spool = tempDir("graft_cur2_spool").toString
+    val exportRoot = tempDir("graft_cur2_exp").toString
     try {
       val cfg = RestPoller.configFromJson(
         s"""{"url":"${srv.base}","count":"2","interval":"1","history":"3","process-instance":"true"}""")

@@ -45,7 +45,7 @@ class EntrySpec extends SparkSpec {
     // breaking 41 gate queries at analysis.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    val tmp = tempDir("graft_ts").toString
     val baseNanos = Seq(
       (1L, 1700000000123456789L, 10L, "page", 1.0, "{}"),
       (2L, 1700000123999999999L, 11L, "click", 2.0, "{}"))

@@ -5,7 +5,7 @@ import graft.sources.{HighWaterMark, Tables}
 class HighWaterMarkSpec extends SparkSpec {
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_hwm").toString
+    tempDir("graft_hwm").toString
 
   test("successive polls advance disjoint contiguous windows") {
     val dir = tmpDir()

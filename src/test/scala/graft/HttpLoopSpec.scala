@@ -40,7 +40,7 @@ class HttpLoopSpec extends SparkSpec {
     ConfigStore.insertSource(dbUrl, 1L, "web", 1, "wk-live", 1, "{}")
     ConfigStore.insertSource(dbUrl, 2L, "old", 1, "wk-dead", 1, "{}",
       status = "disabled")
-    val spool = java.nio.file.Files.createTempDirectory("graft_spool").toString
+    val spool = tempDir("graft_spool").toString
     val server = HttpIngress.start(0, spool,
       wk => ConfigStore.isWriteKeyEnabled(dbUrl, wk))
     try {
@@ -73,7 +73,7 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("HTTP ingress: concurrent clients all spool; overload sheds 429, never hangs") {
-    val spool = java.nio.file.Files.createTempDirectory("graft_spool_conc").toString
+    val spool = tempDir("graft_spool_conc").toString
     def env(i: Int) =
       s"""{"writeKey":"wk-live","requestIP":"10.0.0.1","receivedAt":"2024-01-01T00:10:00.000Z","batch":[{"messageId":"c$i","userId":"u1","event":"e","originalTimestamp":"2024-01-01T00:00:00.000Z","sentAt":"2024-01-01T00:00:00.000Z"}]}"""
 
@@ -108,7 +108,7 @@ class HttpLoopSpec extends SparkSpec {
     // overflow gets an IMMEDIATE 429 while the parked ones still land
     val gate = new java.util.concurrent.CountDownLatch(1)
     val parked = new java.util.concurrent.atomic.AtomicInteger(0)
-    val spool2 = java.nio.file.Files.createTempDirectory("graft_spool_ovl").toString
+    val spool2 = tempDir("graft_spool_ovl").toString
     val slow = HttpIngress.start(0, spool2,
       { _ => parked.incrementAndGet(); gate.await(); true },
       threads = 8, maxInFlight = 2)
@@ -245,7 +245,7 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("HTTP ingress: after a 200 the spool holds the whole body and no temp file") {
-    val spool = java.nio.file.Files.createTempDirectory("graft_spool_sync").toString
+    val spool = tempDir("graft_spool_sync").toString
     val server = HttpIngress.start(0, spool, _ == "wk-live")
     try {
       val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"
@@ -262,7 +262,7 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("HTTP ingress: every event of a pretty-printed envelope reaches readStream") {
-    val spool = java.nio.file.Files.createTempDirectory("graft_spool_pretty").toString
+    val spool = tempDir("graft_spool_pretty").toString
     val server = HttpIngress.start(0, spool, _ == "wk-live")
     try {
       val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"
@@ -308,7 +308,7 @@ class HttpLoopSpec extends SparkSpec {
         | {"type":"field_delete","field":"event","value":"drop-me"}]""".stripMargin)
     ConfigStore.insertConnection(dbUrl, 2L, 1, 2) // keen: no transforms
 
-    val spool = java.nio.file.Files.createTempDirectory("graft_tf").toString
+    val spool = tempDir("graft_tf").toString
     val gateway = HttpIngress.start(0, spool,
       wk => ConfigStore.isWriteKeyEnabled(dbUrl, wk))
     val bodies = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -363,7 +363,7 @@ class HttpLoopSpec extends SparkSpec {
     ConfigStore.insertConnection(dbUrl, 1L, 1, 1)
     ConfigStore.insertConnection(dbUrl, 2L, 1, 2)
 
-    val spool = java.nio.file.Files.createTempDirectory("graft_loop").toString
+    val spool = tempDir("graft_loop").toString
     val gateway = HttpIngress.start(0, spool,
       wk => ConfigStore.isWriteKeyEnabled(dbUrl, wk))
     val hits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
@@ -417,7 +417,7 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("HTTP ingress: a body over MaxBodyBytes is answered 413 and never spooled") {
-    val spool = java.nio.file.Files.createTempDirectory("graft_spool_413").toString
+    val spool = tempDir("graft_spool_413").toString
     val server = HttpIngress.start(0, spool, _ == "wk-live")
     try {
       val base = s"http://localhost:${server.getAddress.getPort}/v1/batch"

@@ -22,7 +22,7 @@ class IncrementalPipelineSpec extends SparkSpec {
   private val url = "jdbc:derby:memory:graftpipe;create=true"
 
   test("poll → partial → upsert loop survives a post-delivery crash exactly-once") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val stateDir = tempDir("graft_pipe").toString
     JdbcSink.createTable(url, TableSchema("rollup_parts", Seq(
       SchemaField("event_type", "STRING"),
       SchemaField("window_from", "INT"),

@@ -77,8 +77,8 @@ class LiveFanOutSpec extends SparkSpec {
   }
 
   test("live fan-out: every destination branch reads the persisted micro-batch once") {
-    val spool = Files.createTempDirectory("graft_fanout_spool").toString
-    val checkpoint = Files.createTempDirectory("graft_fanout_ck").toString
+    val spool = tempDir("graft_fanout_spool").toString
+    val checkpoint = tempDir("graft_fanout_ck").toString
     def envelope(file: String, ids: Seq[Int]): Unit = {
       val events = ids.map { i =>
         val name = Seq("view", "click", "debug")(i % 3)

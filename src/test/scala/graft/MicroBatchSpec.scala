@@ -6,12 +6,12 @@ import graft.operators.Router
 import graft.sinks.RestBatcher
 
 /** Router.microBatch's two shapes: a frame sized at ONE shard
-  * (`planBytes` under `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
-  * batches inside the consuming job with nothing eager; a larger one
-  * (forced here with a 1-byte advisory size, so shards = the
-  * `shuffle.partitions` ceiling) takes the quantile-sharded path. Both
-  * must assign the same batches and reject null order keys the same
-  * way. */
+  * ([[graft.operators.Widths.shards]]: plan bytes under AQE's
+  * advisory partition size) batches inside the consuming job with
+  * nothing eager; a larger one (forced here with a 1-byte advisory
+  * size, so shards = the width ceiling) takes the quantile-sharded
+  * path. Both must assign the same batches and reject null order keys
+  * the same way. */
 class MicroBatchSpec extends SparkSpec {
 
   /** A session on the shared context whose microBatch input always
@@ -31,25 +31,6 @@ class MicroBatchSpec extends SparkSpec {
     Router.microBatch(df, "dest", order, size = 8)
       .select("dest", order, "batch_id").collect()
       .map(r => (r.getString(0), String.valueOf(r.get(1)), r.getLong(2))).toSeq.sorted
-
-  test("shardCount: 0 bytes is one shard, unknown size is the ceiling, boundary at perShard") {
-    val per = 64L << 20
-    assert(Router.shardCount(0L, per, 32) == 1)
-    assert(Router.shardCount(per - 1, per, 32) == 1)
-    assert(Router.shardCount(per, per, 32) == 2)
-    assert(Router.shardCount(3 * per, per, 32) == 4)
-    // invalid plan stats saturate planBytes at Long.MaxValue: clamp,
-    // never overflow down to one shard
-    assert(Router.shardCount(Long.MaxValue, per, 32) == 32)
-    assert(Router.shardCount(Long.MaxValue, 1L, 32) == 32)
-    assert(Router.shardCount(100L, per, 0) == 1)
-    // a non-positive advisory size reads as one byte per shard
-    assert(Router.shardCount(2L, 0L, 32) == 3)
-    // the spec's frames sit far below Spark's default advisory size
-    val small = frame(spark, Seq(("d1", "a")))
-    val bytes = graft.sources.Tables.planBytes(small)
-    assert(bytes > 0 && bytes < (64L << 20))
-  }
 
   test("one-shard frame: constructing microBatch / envelopes starts no Spark job") {
     val sc = spark.sparkContext

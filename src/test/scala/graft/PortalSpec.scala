@@ -160,7 +160,7 @@ class PortalSpec extends SparkSpec {
   }
 
   test("pixel GET intake: query params become a spooled envelope, the answer is the GIF") {
-    val spool = java.nio.file.Files.createTempDirectory("graft_pixel").toString
+    val spool = tempDir("graft_pixel").toString
     val server = HttpIngress.start(0, spool, _ == "wk-pix")
     val base = s"http://localhost:${server.getAddress.getPort}/pixel/v1/track"
     try {

@@ -69,7 +69,7 @@ class RestPollerSpec extends SparkSpec {
     s"""{"messageId":"$id","userId":"u1","event":"$name","originalTimestamp":"2024-01-01T00:00:00.000Z","sentAt":"2024-01-01T00:00:00.000Z"}"""
 
   private def tmpDir(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private val T0 = 1704067200000L // 2024-01-01T00:00:00Z, minute-aligned
 

@@ -179,7 +179,7 @@ class SaltingAndIvfSpec extends SparkSpec {
   }
 
   test("CatalogReader round-trips csv and json") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     df.write.option("header", "true").csv(s"$dir/c")
     df.write.json(s"$dir/j")

@@ -10,9 +10,10 @@ import scala.jdk.CollectionConverters._
   * tables exactly as one it did — and [[graft.operators.SessionStore]]
   * is the one store for what a session derives from a corpus. Beside
   * them, one way to do each thing: [[graft.sources.Spool]] is the one
-  * file commit, the store is the one owner of temp directories, graft
-  * reads no session conf of its own, and no top-level type is left
-  * that nothing names. */
+  * file commit, the store is the one owner of temp directories (and
+  * [[SparkSpec.tempDir]] in the tests), [[graft.operators.Widths]] is
+  * the one reader of a width setting, graft reads no session conf of
+  * its own, and no top-level type is left that nothing names. */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -27,22 +28,24 @@ class SessionRulesSpec extends SparkSpec {
     assert(rows(caller) == expected)
   }
 
-  /** (file name, code line) for every line under `dir` that is not a
-    * comment or Scaladoc line, indentation kept. */
-  private def code(dir: String): Seq[(String, String)] = {
+  /** (file name, line) for every line of the Scala files under `dir`,
+    * indentation kept. */
+  private def lines(dir: String): Seq[(String, String)] = {
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     files.flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala
-        .filterNot { l =>
-          val t = l.trim
-          t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-        }
-        .map(l => p.getFileName.toString -> l)
+      Files.readAllLines(p).asScala.map(l => p.getFileName.toString -> l)
     }
   }
+
+  /** [[lines]] without comment and Scaladoc lines. */
+  private def code(dir: String): Seq[(String, String)] =
+    lines(dir).filterNot { case (_, l) =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
 
   /** (file name, code line) for every main-code line that is not a
     * comment or Scaladoc line. */
@@ -97,6 +100,23 @@ class SessionRulesSpec extends SparkSpec {
       case (f, l) if l.contains("createTempDirectory") => f
     }.distinct
     assert(sites == Seq("SessionStore.scala"), s"temp dirs outside the store: $sites")
+  }
+
+  test("test code creates temp directories only through SparkSpec.tempDir") {
+    val call = """\bcreateTempDirectory\s*\(""".r
+    val sites = lines("src/test/scala").collect {
+      case (f, l) if call.findFirstIn(l).isDefined => f
+    }.distinct
+    assert(sites == Seq("SparkSpec.scala"), s"temp dirs outside SparkSpec: $sites")
+  }
+
+  test("only Widths.scala and GraftSession.scala name a width setting") {
+    val settings = Seq("spark.sql.shuffle.partitions", "defaultParallelism",
+      "SHUFFLE_PARTITIONS", "ADVISORY_PARTITION_SIZE")
+    val sites = lines("src/main/scala").collect {
+      case (f, l) if settings.exists(l.contains) => f
+    }.distinct.sorted
+    assert(sites == Seq("GraftSession.scala", "Widths.scala"), s"width settings read at: $sites")
   }
 
   test("main code reads no session conf key of its own (graft.*)") {

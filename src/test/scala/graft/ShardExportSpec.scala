@@ -14,7 +14,7 @@ import graft.sinks.{AtomicSwapWriter, ShardExport}
 class ShardExportSpec extends SparkSpec {
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("graft_export").toString + "/corpus"
+    tempDir("graft_export").toString + "/corpus"
 
   test("export round-trips the corpus: complete, dense, ordered, manifest-true") {
     val root = tmpRoot()
@@ -52,8 +52,7 @@ class ShardExportSpec extends SparkSpec {
     // recomputed independently at the same shard size — except the
     // query fixes shardSize=100, so recompute via the same operators
     val want = ShardExport.manifest(
-      ShardExport.assign(docs, "text", "doc_id", 16L,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      ShardExport.assign(docs, "text", "doc_id", 16L),
       "doc_id", "source").orderBy("shard").collect().toSeq
     val got = ShardExport.readManifest(spark, root).orderBy("shard").collect().toSeq
     assert(got == want)
@@ -61,8 +60,7 @@ class ShardExportSpec extends SparkSpec {
     // and the manifest checksum is order-SENSITIVE: recompute it from
     // the read-back rows joined to the assignment — membership alone
     // can't fake it
-    val pos = ShardExport.assign(docs, "text", "doc_id", 16L,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val pos = ShardExport.assign(docs, "text", "doc_id", 16L)
       .select(col("doc_id"), col("__pos"), col("__oh"))
     val fromBack = back.join(pos, "doc_id")
       .groupBy(col("shard").cast("long").as("shard"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.sinks.{RestBatcher, WarehouseWriter}
@@ -81,7 +79,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("WarehouseWriter.write partitions by column; parquet roundtrip works") {
-    val dir = Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink").toString
     val df = Seq((0L, "a", "click"), (1L, "a", "view"), (2L, "b", "click"))
       .toDF("id", "batch_key", "etype")
     WarehouseWriter.write(df, s"$dir/pq", Seq("etype"))

@@ -3,14 +3,13 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Spool
 
 /** [[Spool.commit]], the one way graft makes a file durable: the
   * target is replaced whole, and nothing else is left in its
   * directory. */
-class SpoolSpec extends AnyFunSuite {
+class SpoolSpec extends SparkSpec {
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
 
@@ -20,21 +19,21 @@ class SpoolSpec extends AnyFunSuite {
   }
 
   test("commit replaces an existing target") {
-    val target = Files.createTempDirectory("graft_commit").resolve("mark.json")
+    val target = tempDir("graft_commit").resolve("mark.json")
     Files.writeString(target, "old")
     Spool.commit(target, "new".getBytes(StandardCharsets.UTF_8))
     assert(read(target) == "new")
   }
 
   test("commit leaves no temp file behind") {
-    val dir = Files.createTempDirectory("graft_commit")
+    val dir = tempDir("graft_commit")
     (1 to 3).foreach(i => Spool.commit(dir.resolve("a.json"), s"$i".getBytes(StandardCharsets.UTF_8)))
     Spool.commit(dir.resolve("b.json"), Array.emptyByteArray)
     assert(names(dir) == Set("a.json", "b.json"))
   }
 
   test("two concurrent commits to one target each leave a whole file") {
-    val dir = Files.createTempDirectory("graft_commit")
+    val dir = tempDir("graft_commit")
     val target = dir.resolve("_CURRENT")
     val bodies = Seq("a", "b").map(_ * (256 << 10))
     val start = new java.util.concurrent.CountDownLatch(1)

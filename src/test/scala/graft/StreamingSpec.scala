@@ -355,7 +355,7 @@ class StreamingSpec extends SparkSpec {
 
   test("idempotent sink: replayed batch overwrites its partition, no duplicates") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/out"
+    val dir = tempDir("graft_sink").toString + "/out"
 
     // drive once through a real stream
     val input = MemoryStream[(Long, String)]
@@ -711,7 +711,7 @@ class StreamingSpec extends SparkSpec {
     val resBooks = graft.operators.Similarity.pqResidualCodebooks(old,
       "vec_id", "embedding", cents, m = 4, ks = 8, dim = 64,
       iters = 4, trainMod = 4)
-    val dir = java.nio.file.Files.createTempDirectory("pqboot").toString
+    val dir = tempDir("pqboot").toString
     graft.operators.AnnIndex.write(old, "vec_id", "embedding", dir,
       "pq_boot_codes", cents, resBooks)
     val (codes, _) = graft.operators.AnnIndex.load(spark, dir, "pq_boot_codes")

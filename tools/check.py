@@ -43,8 +43,11 @@ threads = next((a.split("=", 1)[1] for a in args
 only = [a for a in args if not a.startswith("--")]
 
 if not skip:
+    # run Verify in the checkout this script belongs to, wherever it
+    # is started from
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(["sbt", f'runMain graft.Verify {sf} {out}'],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=root)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
 
