@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Router
+import graft.operators.{Router, Widths}
 import graft.sinks.RestBatcher
 
 /** Router.microBatch's two shapes: a frame sized at ONE shard
@@ -31,6 +31,28 @@ class MicroBatchSpec extends SparkSpec {
     Router.microBatch(df, "dest", order, size = 8)
       .select("dest", order, "batch_id").collect()
       .map(r => (r.getString(0), String.valueOf(r.get(1)), r.getLong(2))).toSeq.sorted
+
+  test("shardCount: 0 bytes is one shard, unknown size is the ceiling, boundary at perShard") {
+    // Router.microBatch's shard count is Widths.shards: the width rule
+    // with AQE's advisory partition size as the per-shard bytes
+    val per = 64L << 20
+    assert(Widths.width(0L, per, 32) == 1)
+    assert(Widths.width(per - 1, per, 32) == 1)
+    assert(Widths.width(per, per, 32) == 2)
+    assert(Widths.width(3 * per, per, 32) == 4)
+    // invalid plan stats saturate planBytes at Long.MaxValue: clamp,
+    // never overflow down to one shard
+    assert(Widths.width(Long.MaxValue, per, 32) == 32)
+    assert(Widths.width(Long.MaxValue, 1L, 32) == 32)
+    assert(Widths.width(100L, per, 0) == 1)
+    // a non-positive advisory size reads as one byte per shard
+    assert(Widths.width(2L, 0L, 32) == 3)
+    // the spec's frames sit far below Spark's default advisory size
+    val small = frame(spark, Seq(("d1", "a")))
+    val bytes = Widths.planBytes(small)
+    assert(bytes > 0 && bytes < (64L << 20))
+    assert(Widths.shards(small) == 1)
+  }
 
   test("one-shard frame: constructing microBatch / envelopes starts no Spark job") {
     val sc = spark.sparkContext

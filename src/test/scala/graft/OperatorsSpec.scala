@@ -450,6 +450,25 @@ class OperatorsSpec extends SparkSpec {
     assert(r(2).getLong(2) == 0L && r(2).getDouble(3) == 0.0)
   }
 
+  test("gramFanout: work-adaptive clamp, saturating on unknown-size inputs") {
+    // Dedup's gram fan-out is Widths.of(df, inflate = k): ~4 MB of
+    // gram-construction work per task, bytes scale by k via a DIVIDED
+    // per-task target, never a multiply that can overflow
+    def gramFanout(bytes: Long, k: Int, cores: Int): Int =
+      Widths.width(bytes, Widths.TaskBytes / k, cores)
+    assert(gramFanout(0L, 5, 32) == 1)
+    assert(gramFanout(598016L, 5, 32) == 1) // sf0.1 corpus, k=5
+    assert(gramFanout(598016L, 50, 32) == 8) // same corpus, k=50
+    // invalid plan stats => planBytes saturates at Long.MaxValue; the
+    // fan-out must clamp to cores (the r21 multiply overflowed
+    // negative and collapsed to 1 task exactly when the input was
+    // unknown-large)
+    assert(gramFanout(Long.MaxValue, 50, 32) == 32)
+    assert(gramFanout(Long.MaxValue, 5, 32) == 32)
+    // degenerate k larger than the byte target still fans to cores
+    assert(gramFanout(1L << 30, 1 << 23, 32) == 32)
+  }
+
   test("FilterChain.funnel: sequential semantics, one aggregate job") {
     val docs = Seq((1L, 5, "en"), (2L, 50, "en"), (3L, 50, "de"), (4L, 50, "en"))
       .toDF("id", "n", "lang")

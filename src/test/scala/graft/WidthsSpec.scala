@@ -19,24 +19,6 @@ class WidthsSpec extends SparkSpec {
     * replicates documents, embeddings and events and links customer);
     * ceiling 32 is the driver board's. */
   private val cases: Seq[(String, Long, Long, Int, Int)] = Seq(
-    // Router.microBatch shards: one per advisory partition size
-    ("shards: 0 bytes is one shard", 0L, advisory, 32, 1),
-    ("shards: just under the boundary", advisory - 1, advisory, 32, 1),
-    ("shards: at the boundary", advisory, advisory, 32, 2),
-    ("shards: 3x the boundary", 3 * advisory, advisory, 32, 4),
-    // invalid plan stats saturate planBytes at Long.MaxValue: clamp,
-    // never overflow down to one shard
-    ("shards: unknown size is the ceiling", Long.MaxValue, advisory, 32, 32),
-    ("shards: unknown size, 1-byte shards", Long.MaxValue, 1L, 32, 32),
-    ("shards: a zero ceiling still runs one", 100L, advisory, 0, 1),
-    ("shards: non-positive target reads as one byte", 2L, 0L, 32, 3),
-    // Dedup gram building: k bytes of grams per input byte
-    ("grams k=5: empty", 0L, TaskBytes / 5, 32, 1),
-    ("grams k=5: sf0.1 corpus", 598016L, TaskBytes / 5, 32, 1),
-    ("grams k=50: sf0.1 corpus", 598016L, TaskBytes / 50, 32, 8),
-    ("grams k=50: unknown size", Long.MaxValue, TaskBytes / 50, 32, 32),
-    ("grams k=5: unknown size", Long.MaxValue, TaskBytes / 5, 32, 32),
-    ("grams: k above the byte target", 1L << 30, TaskBytes / (1 << 23), 32, 32),
     // Classifier fit: 16 epochs re-read the frame 17 times
     ("fit: sf0.1 corpus at 17 passes (r21)", 598016L, TaskBytes / 17, 32, 3),
     ("fit: sf0.01 gate corpus", 71244L, TaskBytes / 17, 32, 1),
