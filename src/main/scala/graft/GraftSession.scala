@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.CheckpointFiles
+
 /** The one SparkSession factory for the graft engine: Bench, Verify,
   * Demo, the tools and the test suites all build their session here.
   *
@@ -13,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   * thousands on a real cluster. Events parquet carries INT64
   * TIMESTAMP(NANOS) which vanilla Spark rejects — `nanosAsLong` reads
   * it losslessly as epoch-nanos (see sources.Tables which normalizes
-  * it).
+  * it). Every streaming checkpoint file on a local path commits
+  * through [[graft.sources.CheckpointFiles]] (atomic, no forked
+  * process per file): [[builder]] and [[tune]] name it, and
+  * [[checkpoints]] names it on a session that reaches a stream
+  * without either.
   */
 object GraftSession {
 
@@ -22,6 +28,11 @@ object GraftSession {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
+  /** Spark's conf naming the streaming checkpoint file manager, and
+    * graft's one value for it. */
+  private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
+  private val ManagerClass = classOf[CheckpointFiles].getName
+
   def builder(cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -29,6 +40,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(CheckpointManager, ManagerClass)
 
   /** Apply graft's runtime confs to a caller-built session.
     * [[SparkEntry.queries]] runs every query through this, so a
@@ -37,6 +49,14 @@ object GraftSession {
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    checkpoints(spark)
+  }
+
+  /** Commit `spark`'s streaming checkpoints through
+    * [[graft.sources.CheckpointFiles]]; it reads the conf when a query
+    * starts. */
+  def checkpoints(spark: SparkSession): SparkSession = {
+    spark.conf.set(CheckpointManager, ManagerClass)
     spark
   }
 

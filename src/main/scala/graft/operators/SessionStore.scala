@@ -55,8 +55,18 @@ object SessionStore {
     * "checkpoint block not found"). */
   private val ownedRddIds = ConcurrentHashMap.newKeySet[Int]()
 
-  /** Directories handed out by [[tempDir]] — deleted on [[clear]]. */
+  /** Directories handed out by [[tempDir]] — deleted on [[clear]],
+    * or when the JVM exits. */
   private val ownedDirs = ConcurrentHashMap.newKeySet[String]()
+
+  /** The one exit hook, registered by the first [[tempDir]]: deletes
+    * the directories no [[clear]] took. */
+  private lazy val exitHook = sys.addShutdownHook(deleteOwnedDirs())
+
+  private def deleteOwnedDirs(): Unit = {
+    ownedDirs.forEach(d => AnnIndex.deleteRecursively(new java.io.File(d)))
+    ownedDirs.clear()
+  }
 
   /** With no key, run `build`. With a key, build once per key and
     * claim the persistent RDDs (cache or localCheckpoint blocks) the
@@ -87,9 +97,10 @@ object SessionStore {
     entries.collect { case (k, v) if k.name == name => v }.toList
 
   /** A fresh temp directory owned by the store: a build that persists
-    * an artifact on disk takes its directory here, and [[clear]]
-    * deletes it. */
+    * an artifact on disk takes its directory here, and [[clear]] or
+    * the JVM's exit deletes it. */
   def tempDir(prefix: String): String = {
+    exitHook
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     ownedDirs.add(dir)
     dir
@@ -116,8 +127,7 @@ object SessionStore {
       }
     }
     ownedRddIds.clear()
-    ownedDirs.forEach(d => AnnIndex.deleteRecursively(new java.io.File(d)))
-    ownedDirs.clear()
+    deleteOwnedDirs()
   }
 
   /** Run `build` and claim the persistent RDDs it registered: a diff

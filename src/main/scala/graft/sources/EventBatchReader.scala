@@ -78,7 +78,11 @@ object EventBatchReader {
   def read(spark: SparkSession, path: String): DataFrame =
     explodeBatches(spark.read.text(path).withColumnRenamed("value", "raw"), "raw")
 
-  /** Streaming read of the same envelopes (gateway as a stream). */
-  def readStream(spark: SparkSession, path: String): DataFrame =
+  /** Streaming read of the same envelopes (gateway as a stream). The
+    * caller's session commits the stream's checkpoint files through
+    * [[CheckpointFiles]] from here on, whoever built it. */
+  def readStream(spark: SparkSession, path: String): DataFrame = {
+    graft.GraftSession.checkpoints(spark)
     explodeBatches(spark.readStream.text(path).withColumnRenamed("value", "raw"), "raw")
+  }
 }

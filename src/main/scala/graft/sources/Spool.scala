@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
+import java.io.{BufferedOutputStream, OutputStream}
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicLong
@@ -16,7 +16,9 @@ import java.util.concurrent.atomic.AtomicLong
   *    never a part of either, and a commit is on disk before it
   *    returns. The spool, the REST poll mark ([[HighWaterMark]]) and
   *    the snapshot pointer ([[graft.sinks.AtomicSwapWriter]]) all
-  *    commit through it.
+  *    commit through it. [[CheckpointFiles]] commits with
+  *    `force = false`: still atomic, but on disk only when the kernel
+  *    writes it back.
   *  - [[spool]] writes one gateway envelope as one spool file holding
   *    ONE line: [[EventBatchReader]] reads the spool with
   *    `readStream.text`, so an envelope split over several lines would
@@ -30,26 +32,61 @@ object Spool {
   private val nonce = java.util.UUID.randomUUID().toString.take(8)
   private val seq = new AtomicLong(0L)
 
-  /** Durably replace `target` with `bytes`: one file write, two
-    * `force` calls and one rename. The target's directory must exist.
-    * On failure the temp file is removed and the target is untouched. */
-  def commit(target: Path, bytes: Array[Byte]): Unit = {
-    val dir = target.toAbsolutePath.getParent
-    val tmp = dir.resolve(s".${target.getFileName}.${nonce}_${seq.incrementAndGet()}.tmp")
-    try {
-      val ch = FileChannel.open(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+  /** An open commit of `target`, for content too large to hold on
+    * the heap: bytes written go to a hidden temp file that is unique
+    * per call. [[close]] publishes it — `force` the file, move it into
+    * place, `force` the directory; without `force` only the move — and
+    * [[cancel]] drops it; either leaves no temp file, and a second call
+    * of either does nothing. With `replace` the move is an atomic
+    * rename over the target; without it the temp file is hard-linked
+    * to the target name, which fails with `FileAlreadyExistsException`
+    * and leaves an existing target as it was. */
+  final class Pending private[Spool] (target: Path, replace: Boolean, force: Boolean)
+      extends OutputStream {
+    private val dir = target.toAbsolutePath.getParent
+    private val tmp = dir.resolve(s".${target.getFileName}.${nonce}_${seq.incrementAndGet()}.tmp")
+    private val ch = FileChannel.open(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    private val out = new BufferedOutputStream(Channels.newOutputStream(ch))
+    private var done = false
+
+    override def write(b: Int): Unit = out.write(b)
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+
+    override def close(): Unit = if (!done) {
+      done = true
       try {
-        val buf = ByteBuffer.wrap(bytes)
-        while (buf.hasRemaining) ch.write(buf)
-        ch.force(true)
-      } finally ch.close()
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } catch {
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
+        out.flush()
+        if (force) ch.force(true)
+        ch.close()
+        if (replace) Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+        else try Files.createLink(target, tmp) finally Files.delete(tmp)
+      } catch {
+        case e: Throwable => ch.close(); Files.deleteIfExists(tmp); throw e
+      }
+      if (force) {
+        val d = FileChannel.open(dir, StandardOpenOption.READ)
+        try d.force(true) finally d.close()
+      }
     }
-    val d = FileChannel.open(dir, StandardOpenOption.READ)
-    try d.force(true) finally d.close()
+
+    def cancel(): Unit = if (!done) {
+      done = true
+      try ch.close() finally Files.deleteIfExists(tmp)
+    }
+  }
+
+  /** Start a commit of `target`, whose directory must exist. */
+  def open(target: Path, replace: Boolean = true, force: Boolean = true): Pending =
+    new Pending(target, replace, force)
+
+  /** Replace `target` with `bytes`: one file write, one rename and,
+    * with `force` (durably), two `force` calls. On failure the temp
+    * file is removed and the target is untouched. */
+  def commit(target: Path, bytes: Array[Byte], force: Boolean = true): Unit = {
+    val p = open(target, force = force)
+    try p.write(bytes) catch { case e: Throwable => p.cancel(); throw e }
+    p.close()
   }
 
   /** Commit `envelope` into `dir` as `<prefix>_<nonce>_<n>.json`, a name

@@ -249,11 +249,13 @@ object StreamingPipeline {
     * applied to micro-batch sizing): a file-replay's trigger COUNT
     * should be bounded, not O(files). Every micro-batch pays a fixed
     * floor — planning, offset/commit log writes, and one state-store
-    * load + version-commit per shuffle partition (the HDFS-backed
-    * provider clones the map per version, so per-trigger state cost
-    * grows with accumulated state) — while the stateful semantics
-    * being exercised (pairs across batches, keeper hand-off) only
-    * need SOME batch boundaries, not one per file.
+    * load + version-commit per shuffle partition. (The HDFS-backed
+    * provider copies its map per version, but that copy measures
+    * negligible; the commit wait was the processes Hadoop forked per
+    * checkpoint file, and since [[graft.sources.CheckpointFiles]]
+    * the floor follows the checkpoint file count.) The stateful
+    * semantics being exercised (pairs across batches, keeper
+    * hand-off) only need SOME batch boundaries, not one per file.
     * maxFilesPerTrigger = ⌈nFiles / targetBatches⌉ bounds any replay
     * at ≤ targetBatches triggers and degrades to 1 file/trigger
     * (every boundary exercised) on small corpora, so gate-scale runs

@@ -10,10 +10,12 @@ import scala.jdk.CollectionConverters._
   * tables exactly as one it did — and [[graft.operators.SessionStore]]
   * is the one store for what a session derives from a corpus. Beside
   * them, one way to do each thing: [[graft.sources.Spool]] is the one
-  * file commit, the store is the one owner of temp directories (and
-  * [[SparkSpec.tempDir]] in the tests), [[graft.operators.Widths]] is
-  * the one reader of a width setting, graft reads no session conf of
-  * its own, and no top-level type is left that nothing names. */
+  * file commit, [[GraftSession]] alone names the streaming checkpoint
+  * manager ([[graft.sources.CheckpointFiles]]), the store is the one
+  * owner of temp directories (and [[SparkSpec.tempDir]] in the
+  * tests), [[graft.operators.Widths]] is the one reader of a width
+  * setting, graft reads no session conf of its own, and no top-level
+  * type is left that nothing names. */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -93,6 +95,15 @@ class SessionRulesSpec extends SparkSpec {
       case (f, l) if l.contains("ATOMIC_MOVE") || l.contains("FileChannel") => f
     }.distinct
     assert(sites == Seq("Spool.scala"), s"file commits outside the spool: $sites")
+  }
+
+  test("only GraftSession.scala names Spark's checkpoint file manager conf") {
+    val names = Seq("spark.sql.streaming.checkpointFileManagerClass",
+      "STREAMING_CHECKPOINT_FILE_MANAGER_CLASS")
+    val sites = lines("src/main/scala").collect {
+      case (f, l) if names.exists(l.contains) => f
+    }.distinct
+    assert(sites == Seq("GraftSession.scala"), s"checkpoint manager named at: $sites")
   }
 
   test("SessionStore.scala is the only main file that creates a temp directory") {

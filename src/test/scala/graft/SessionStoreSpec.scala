@@ -121,4 +121,27 @@ class SessionStoreSpec extends SparkSpec {
     }
     assert(tmpDirs("graft_replay_spec") -- before == Set.empty[String])
   }
+
+  test("a store temp dir no clear() took is deleted when the JVM exits") {
+    val tmp = tempDir("graft_exit")
+    val bin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val child = new ProcessBuilder(bin, s"-Djava.io.tmpdir=$tmp",
+      "-cp", System.getProperty("java.class.path"), "graft.SessionStoreExitChild")
+      .redirectErrorStream(true).start()
+    val out = new String(child.getInputStream.readAllBytes(), "UTF-8").trim
+    assert(child.waitFor() == 0, out)
+    val dir = java.nio.file.Paths.get(out.linesIterator.toSeq.last)
+    assert(dir.getParent == tmp, out)
+    assert(!java.nio.file.Files.exists(dir), s"$dir outlived its JVM")
+  }
+}
+
+/** A JVM that takes a store temp dir, prints it and exits without
+  * calling `SessionStore.clear()`. */
+object SessionStoreExitChild {
+  def main(args: Array[String]): Unit = {
+    val dir = SessionStore.tempDir("graft_exit_child")
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
+    println(dir)
+  }
 }
