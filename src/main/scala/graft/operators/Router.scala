@@ -40,7 +40,15 @@ object Router {
     *    no bounds to pick and every earlier-shard offset is 0, so
     *    nothing runs eagerly — no bounds agg, no totals collect, no
     *    offsets broadcast ([[ShardedWindow.runningSumOneShard]]). The
-    *    whole batching is one window inside the consuming job.
+    *    whole batching is one window inside the consuming job. When
+    *    the frame is also one task's work ([[Widths.gather]]: at most
+    *    [[Widths.TaskBytes]] of plan bytes) it is put on one partition
+    *    first, which meets the window's (dest, __shard) distribution
+    *    and the (dest, batch_id) grouping of a consumer such as
+    *    [[batchSummary]] or [[graft.sinks.RestBatcher.envelopes]]: the
+    *    window, that aggregate and what reads it (the POSTs of
+    *    [[graft.sinks.HttpEgress.postEnvelopes]]) run in one stage with
+    *    no exchange. A wider one-shard frame keeps its exchanges.
     *  - S > 1 shards (volume): the numeric order key is RANGE-sharded
     *    on QUANTILE boundaries of its distribution (one
     *    approx_percentile agg picks the bounds, cost one column scan —
@@ -163,7 +171,7 @@ object Router {
     }
     val numbered =
       if (shards == 1)
-        ShardedWindow.runningSumOneShard(df, destCol,
+        ShardedWindow.runningSumOneShard(Widths.gather(df), destCol,
           when(raw.isNull, raise_error(lit(badKeys(
             "a row has a null or non-castable value")))).otherwise(lit(0L)),
           Seq(col(orderCol)), lit(1L), "__rn")

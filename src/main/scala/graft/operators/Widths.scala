@@ -65,6 +65,15 @@ object Widths {
       ceiling(ds.sparkSession))
   }
 
+  /** `ds` on one partition when it is one task's work ([[of]] is 1),
+    * otherwise `ds` itself. It goes through `coalesce(1)`, which adds
+    * no exchange: the stage computing `ds` runs as one task, and its
+    * single output partition meets every clustered distribution, so a
+    * window or aggregate keyed on any columns above it runs in the same
+    * stage with no exchange either. */
+  def gather[T](ds: Dataset[T]): Dataset[T] =
+    if (of(ds) == 1) ds.coalesce(1) else ds
+
   /** `ds` spread over `width` partitions (hashed on `keys`, round-robin
     * without keys) when that is more than it already has; otherwise
     * `ds` itself, so an input already split wide enough keeps its

@@ -14,16 +14,29 @@ import org.apache.spark.sql.functions._
   * fold the responses into the delivery-ack ledger.
   *
   * Spark-native shape: the POSTs run per PARTITION on the executors
-  * (one HttpClient per partition, reused across its rows) via
-  * mapPartitions — egress parallelism IS the frame's partitioning,
+  * via mapPartitions — egress parallelism IS the frame's partitioning,
   * so a fleet re-partitions by destination to respect per-endpoint
   * concurrency, and no envelope body ever moves to the driver. The
+  * envelopes of a live micro-batch that is one task's work arrive on
+  * one partition ([[graft.sinks.RestBatcher.envelopes]]), so one task
+  * POSTs them all, in the stage that built them. Every task of a JVM
+  * shares one HttpClient per connect timeout ([[client]]): a client
+  * holds a selector thread until it is collected, so one per
+  * partition would pile up threads, and a shared one keeps its
+  * connections open for the next micro-batch. The
   * returned frame is exactly the ack shape [[graft.operators.Router.ackLedger]]
   * consumes; a network-level failure (connect/timeout) yields the
   * pseudo-code 599 — retryable, like the reference treating transport
   * errors as retriable sends.
   */
 object HttpEgress {
+
+  private val clients = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+  /** The JVM's one client for `connectTimeoutMs`. */
+  private[graft] def client(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, ms =>
+      HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
 
   /** One delivery pass: POST every envelope row, return acks
     * (dest, batch_id, attempt, code, ack_ms). */
@@ -38,8 +51,6 @@ object HttpEgress {
         col(bodyCol).cast("string"))
       .as[(String, Long, String)]
       .mapPartitions { it =>
-        lazy val client = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofMillis(timeoutMs)).build()
         it.map { case (dest, batchId, body) =>
           val code = urlByDest.get(dest) match {
             case None => 404 // unroutable destination: non-retryable
@@ -49,7 +60,7 @@ object HttpEgress {
                   .timeout(Duration.ofMillis(timeoutMs))
                   .header("Content-Type", "application/json")
                   .POST(HttpRequest.BodyPublishers.ofString(body)).build()
-                client.send(req, HttpResponse.BodyHandlers.discarding())
+                client(timeoutMs).send(req, HttpResponse.BodyHandlers.discarding())
                   .statusCode()
               } catch { case _: Exception => 599 } // transport error: retryable
           }
@@ -60,8 +71,8 @@ object HttpEgress {
   }
 
   /** Always-on delivery — the router worker as a stream: each
-    * micro-batch of envelopes POSTs executor-side (same per-partition
-    * client shape as [[postEnvelopes]]) and the resulting acks go to
+    * micro-batch of envelopes POSTs executor-side (through
+    * [[postEnvelopes]]) and the resulting acks go to
     * `ackSink` (append them to the ledger table that
     * [[graft.streaming.StreamingPipeline.ackLedgerStream]] or the
     * batch [[graft.operators.Router.ackLedger]] folds; re-delivery of

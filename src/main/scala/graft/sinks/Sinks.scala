@@ -83,8 +83,12 @@ object RestBatcher {
   /** Build `{"payload":[...]}` REST bodies: one row per micro-batch
     * (integrations/types.go BatchPayloadT; powerbi/anaplan Send).
     * Returns (destCol, batch_id, body) — the egress layer POSTs
-    * `body` verbatim. Aggregation is a single shuffle on
-    * (dest, batch). */
+    * `body` verbatim. A frame that is one task's work (every live
+    * micro-batch of the service's size) is batched on one partition by
+    * [[graft.operators.Router.microBatch]], so the aggregation adds no
+    * exchange and the numbering window, the bodies and a consumer's
+    * POSTs run in one stage; a wider frame aggregates behind one
+    * shuffle on (dest, batch). */
   def envelopes(df: DataFrame, destCol: String, orderCol: String,
                 size: Int): DataFrame =
     graft.operators.Router.microBatch(df, destCol, orderCol, size)

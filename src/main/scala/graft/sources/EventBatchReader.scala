@@ -80,9 +80,19 @@ object EventBatchReader {
 
   /** Streaming read of the same envelopes (gateway as a stream). The
     * caller's session commits the stream's checkpoint files through
-    * [[CheckpointFiles]] from here on, whoever built it. */
+    * [[CheckpointFiles]] from here on, whoever built it.
+    *
+    * The stream owns the spool it reads: Spark's file-source cleaner
+    * (`cleanSource` = `delete`) deletes each spool file once the
+    * micro-batch that read it has committed, so a spool file lives
+    * from its request's 200 until the micro-batch that carries its
+    * events commits, and each trigger lists only what is still
+    * pending, however long the service has run. Read a spool through
+    * one stream only, and not with [[read]] once a stream has read
+    * it. */
   def readStream(spark: SparkSession, path: String): DataFrame = {
     graft.GraftSession.checkpoints(spark)
-    explodeBatches(spark.readStream.text(path).withColumnRenamed("value", "raw"), "raw")
+    explodeBatches(spark.readStream.option("cleanSource", "delete").text(path)
+      .withColumnRenamed("value", "raw"), "raw")
   }
 }

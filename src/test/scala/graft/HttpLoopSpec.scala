@@ -178,6 +178,35 @@ class HttpLoopSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("HTTP egress: every micro-batch's POSTs share one client, so egress threads stay flat") {
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/sink", { e =>
+      e.getRequestBody.readAllBytes()
+      e.sendResponseHeaders(200, -1); e.close()
+    })
+    server.start()
+    try {
+      val urls = Map("pbi" -> s"http://localhost:${server.getAddress.getPort}/sink")
+      val envelopes = (0 until 8).map(i => ("pbi", i.toLong, s"""{"payload":[$i]}"""))
+        .toDF("dest", "batch_id", "body")
+      assert(envelopes.rdd.getNumPartitions == 4)
+      def deliver(): Unit = assert(HttpEgress.postEnvelopes(envelopes, "dest", "batch_id",
+        "body", urls, attempt = 1).select("code").as[Long].collect().toSeq == Seq.fill(8)(200L))
+      // the JVM's HttpClient threads: each client runs a selector
+      // thread until it is collected, and workers of its own
+      def clientThreads(): Seq[String] = Thread.getAllStackTraces.keySet
+        .toArray(Array.empty[Thread]).map(_.getName).filter(_.startsWith("HttpClient-")).toSeq
+      deliver()
+      val before = clientThreads()
+      // 40 micro-batches of 4 partitions: 160 clients if each made its own
+      (0 until 40).foreach(_ => deliver())
+      val after = clientThreads()
+      assert(after.count(_.endsWith("-SelectorManager")) == before.count(_.endsWith("-SelectorManager")))
+      assert(after.size <= before.size + 4, s"${before.sorted} -> ${after.sorted}")
+      assert(HttpEgress.client(10000L) eq HttpEgress.client(10000L))
+    } finally server.stop(0)
+  }
+
   test("streaming egress: each micro-batch POSTs live and its acks land in the sink") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
@@ -14,7 +14,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.storage.{RDDInfo, StorageLevel}
 
 import graft.model.{FieldDelete, FieldHide, FieldMap, Rule}
-import graft.operators.TransformRules
+import graft.operators.{TransformRules, Widths}
 import graft.sinks.{HttpEgress, RestBatcher}
 import graft.sources.{EventBatchReader, Tables}
 import graft.streaming.StreamingPipeline
@@ -22,7 +22,9 @@ import graft.streaming.StreamingPipeline
 /** The live delivery path reads each persisted micro-batch once: the
   * per-destination TransformRules branches of one trigger, unioned,
   * all read the cached blocks rather than re-running the stateful
-  * dedup under them (ColumnBridge.pinCached). */
+  * dedup under them (ColumnBridge.pinCached). A micro-batch that is
+  * one task's work is batched, built into envelopes and POSTed in one
+  * stage, with no shuffle. */
 class LiveFanOutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,16 +42,22 @@ class LiveFanOutSpec extends SparkSpec {
     plan.collect { case m: InMemoryRelation => m }.size,
     plan.collect { case r: LogicalRDD => r }.size)
 
-  /** Records every job's stages by job group; `sync` waits until the
-    * listener has seen every job that ended before the call. */
+  /** Records every job's stages, and the stages submitted to run, by
+    * job group; `sync` waits until the listener has seen every job
+    * that ended before the call. */
   private class JobStages extends SparkListener {
     val byGroup = new java.util.concurrent.ConcurrentHashMap[String, Vector[Seq[RDDInfo]]]()
+    val submitted = new java.util.concurrent.ConcurrentHashMap[String, Vector[StageInfo]]()
     private val marker = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CountDownLatch]()
     private val markerJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
       if (marker.containsKey(g)) markerJobs.put(e.jobId, g)
       else byGroup.merge(g, e.stageInfos.map(_.rddInfos).toVector, _ ++ _)
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+      submitted.merge(g, Vector(e.stageInfo), _ ++ _)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(markerJobs.remove(e.jobId)).foreach(g => marker.get(g).countDown())
@@ -64,14 +72,14 @@ class LiveFanOutSpec extends SparkSpec {
     }
   }
 
-  /** Whether a stage computes a StateStoreRDD itself: one is reachable
-    * from the stage's own RDD without passing through a persisted RDD
-    * (a stage's `rddInfos` list every narrow ancestor, cached or not;
-    * the stage's own RDD comes first). */
-  private def runsStateStore(stage: Seq[RDDInfo]): Boolean = {
+  /** Whether a stage computes an RDD named `name` itself: one is
+    * reachable from the stage's own RDD without passing through a
+    * persisted RDD (a stage's `rddInfos` list every narrow ancestor,
+    * cached or not; the stage's own RDD comes first). */
+  private def computes(stage: Seq[RDDInfo], name: String): Boolean = {
     val byId = stage.map(i => i.id -> i).toMap
     def walk(i: RDDInfo): Boolean =
-      i.name == "StateStoreRDD" ||
+      i.name == name ||
         (i.storageLevel == StorageLevel.NONE && i.parentIds.flatMap(byId.get).exists(walk))
     stage.headOption.exists(walk)
   }
@@ -113,6 +121,7 @@ class LiveFanOutSpec extends SparkSpec {
         try if (!batch.isEmpty) {
           val routed = fanOut(batch)
           plans.add(leaves(routed.queryExecution.withCachedData))
+          assert(Widths.of(routed) == 1)
           sc.setJobGroup(s"deliver $id", "deliver")
           HttpEgress.postEnvelopes(RestBatcher.envelopes(routed, "dest", "seq", 4),
             "dest", "batch_id", "body", urls, attempt = 1).select("code").collect()
@@ -149,8 +158,14 @@ class LiveFanOutSpec extends SparkSpec {
         case (g, s) if g.startsWith("deliver ") => s
       }.flatten.toSeq
       assert(delivery.nonEmpty)
-      assert(!delivery.exists(runsStateStore),
+      assert(!delivery.exists(computes(_, "StateStoreRDD")),
         "a delivery job re-ran the stateful dedup")
+      // each delivery job computes one stage of one task: no shuffle
+      // between the numbering window, the envelope aggregate and the POSTs
+      val ran = stages.submitted.asScala.collect {
+        case (g, s) if g.startsWith("deliver ") => g -> s.map(i => (i.numTasks, computes(i.rddInfos, "ShuffledRowRDD")))
+      }
+      assert(ran.size == 2 && ran.values.forall(_ == Vector((1, false))), ran)
       // the dedup does show in the listener under that name: the intake
       // job (isEmpty filling the cache) computes it
       assert(stages.byGroup.asScala.collect {

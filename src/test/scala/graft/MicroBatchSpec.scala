@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.{Router, Widths}
-import graft.sinks.RestBatcher
+import graft.sinks.{HttpEgress, RestBatcher}
 
 /** Router.microBatch's two shapes: a frame sized at ONE shard
   * ([[graft.operators.Widths.shards]]: plan bytes under AQE's
@@ -11,7 +16,9 @@ import graft.sinks.RestBatcher
   * nothing eager; a larger one (forced here with a 1-byte advisory
   * size, so shards = the width ceiling) takes the quantile-sharded
   * path. Both must assign the same batches and reject null order keys
-  * the same way. */
+  * the same way. A one-shard frame that is also one task's work
+  * ([[graft.operators.Widths.gather]]) is batched, aggregated into
+  * envelopes and POSTed in one stage with no exchange. */
 class MicroBatchSpec extends SparkSpec {
 
   /** A session on the shared context whose microBatch input always
@@ -26,6 +33,14 @@ class MicroBatchSpec extends SparkSpec {
 
   private def frame(s: SparkSession, rows: Seq[(String, String)]): DataFrame =
     s.createDataFrame(rows).toDF("dest", "mid")
+
+  /** The OperatorsSpec microBatch corpora: contiguous numeric ids,
+    * string ids in binary order, and common-prefix string ids. */
+  private val numeric = (0 until 25).map(i => ("d1", i.toLong)) ++
+    (0 until 13).map(i => ("d2", (i * 3).toLong))
+  private val strings = (0 until 30).map(i => ("d1", f"m${(i * 7919) % 97}%02d-${i}%02d"))
+  private val prefixed = (0 until 30).map(i =>
+    ("d1", f"evt-2024-01-01-batch-${(i * 31) % 97}%05d"))
 
   private def batchIds(df: DataFrame, order: String): Seq[(String, String, Long)] =
     Router.microBatch(df, "dest", order, size = 8)
@@ -54,53 +69,126 @@ class MicroBatchSpec extends SparkSpec {
     assert(Widths.shards(small) == 1)
   }
 
-  test("one-shard frame: constructing microBatch / envelopes starts no Spark job") {
+  /** The jobs started and the stages submitted while `body` runs
+    * under a fresh job group. */
+  private def underGroup(body: => Unit): (Int, Seq[StageInfo]) = {
     val sc = spark.sparkContext
-    val group = s"microbatch-construct-${java.util.UUID.randomUUID()}"
+    val group = s"microbatch-${java.util.UUID.randomUUID()}"
     val sentinel = s"microbatch-sentinel-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def of(p: java.util.Properties): String =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id"))).getOrElse("")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    @volatile var synced = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(started.add)
+        if (of(e.properties) == group) jobs.incrementAndGet()
+        else if (of(e.properties) == sentinel) synced = true
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (of(e.properties) == group) stages.add(e.stageInfo)
     }
     sc.addSparkListener(listener)
     try {
-      val ids = (0 until 60).map(i => (s"d${i % 3}", Option(i.toLong)))
-      val df = spark.createDataFrame(ids).toDF("dest", "seq")
       sc.setJobGroup(group, group)
-      val batched = Router.microBatch(df, "dest", "seq", size = 10)
-      val bodies = RestBatcher.envelopes(df, "dest", "seq", size = 10)
-      val summary = Router.batchSummary(df, "dest", "seq", size = 10)
+      body
       // the listener bus is asynchronous and ordered: once the
-      // sentinel job's start arrives, every earlier start has too
+      // sentinel job's start arrives, every earlier event has too
       sc.setJobGroup(sentinel, sentinel)
       spark.range(1).count()
-      sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains(sentinel) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains(sentinel), "sentinel job never reported")
-      assert(!started.contains(group),
-        s"eager Spark job(s) during construction: $started")
-      // …and the frames still deliver: 3 destinations × 20 rows
-      assert(batched.count() == 60)
-      assert(bodies.count() == 6)
-      assert(summary.select("n_in_batch").collect().forall(_.getLong(0) == 10L))
+      while (!synced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(synced, "sentinel job never reported")
+      (jobs.get(), stages.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
 
+  private object Plans extends AdaptiveSparkPlanHelper {
+    /** Shuffle exchanges of `df`'s physical plan, through AQE's stages. */
+    def exchanges(df: DataFrame): Int =
+      collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+  }
+
+  /** The acks of POSTing `df`'s envelopes to no destination (every
+    * ack a 404, nothing leaves the JVM). */
+  private def delivered(df: DataFrame, order: String): DataFrame =
+    HttpEgress.postEnvelopes(RestBatcher.envelopes(df, "dest", order, size = 8),
+      "dest", "batch_id", "body", Map.empty[String, String], attempt = 1)
+
+  /** `df` behind a plan estimate above [[Widths.TaskBytes]] (a
+    * union with 1M filtered-out rows): still one shard, no longer one
+    * task's work, so it takes the exchange plan. */
+  private def padded(df: DataFrame): DataFrame = {
+    val pad = df.sparkSession.range(0, 1000000, 1, 2).filter(col("id") < 0)
+    df.unionByName(pad.select(df.columns.toSeq.map(c =>
+      (if (c == "dest") lit("pad") else col("id")).cast(df.schema(c).dataType).as(c)): _*))
+  }
+
+  test("one-shard frame: constructing microBatch / envelopes starts no Spark job") {
+    val ids = (0 until 60).map(i => (s"d${i % 3}", Option(i.toLong)))
+    val df = spark.createDataFrame(ids).toDF("dest", "seq")
+    var batched, bodies, summary: DataFrame = null
+    val (jobs, _) = underGroup {
+      batched = Router.microBatch(df, "dest", "seq", size = 10)
+      bodies = RestBatcher.envelopes(df, "dest", "seq", size = 10)
+      summary = Router.batchSummary(df, "dest", "seq", size = 10)
+    }
+    assert(jobs == 0, s"$jobs eager Spark job(s) during construction")
+    // …and the frames still deliver: 3 destinations × 20 rows
+    assert(batched.count() == 60)
+    assert(bodies.count() == 6)
+    assert(summary.select("n_in_batch").collect().forall(_.getLong(0) == 10L))
+  }
+
+  test("one-task frame: window, envelope aggregate and POSTs run in one stage, no exchange") {
+    val df = spark.createDataFrame(numeric).toDF("dest", "seq")
+    assert(Widths.of(df) == 1 && Widths.ceiling(spark) > 1 && df.rdd.getNumPartitions > 1)
+    val acks = delivered(df, "seq")
+    val (jobs, stages) = underGroup(assert(acks.collect().length == 6))
+    assert(Plans.exchanges(acks) == 0, acks.queryExecution.executedPlan.treeString)
+    assert(jobs == 1 && stages.size == 1, stages.map(s => (s.name, s.numTasks)))
+    assert(stages.head.numTasks == 1 && !stages.head.rddInfos.exists(_.name == "ShuffledRowRDD"))
+    assert(Plans.exchanges(Router.batchSummary(df, "dest", "seq", size = 8)) == 0)
+  }
+
+  test("frames wider than one task keep the exchange plan") {
+    // one shard (8 MB of plan bytes is under the advisory size), but
+    // above TaskBytes: the window keeps its exchange (on dest alone,
+    // which the aggregate reuses: a non-nullable key's shard guard
+    // folds to a constant)
+    val wide = spark.range(0, 1000000, 1, 2)
+      .select((col("id") % 3).cast("string").as("dest"), col("id").as("seq"))
+    assert(Widths.shards(wide) == 1 && Widths.of(wide) > 1)
+    assert(Plans.exchanges(delivered(wide, "seq")) >= 1)
+    // the forced multi-shard session, run to the end
+    val many = delivered(multi.createDataFrame(numeric).toDF("dest", "seq"), "seq")
+    assert(many.collect().length == 6)
+    assert(Plans.exchanges(many) >= 2, many.queryExecution.executedPlan.treeString)
+  }
+
+  test("one-task batches and envelope bodies are identical to the exchange plan's") {
+    val corpora = Seq(spark.createDataFrame(numeric).toDF("dest", "seq") -> "seq",
+      frame(spark, strings) -> "mid", frame(spark, prefixed) -> "mid")
+    for ((df, order) <- corpora) {
+      val wide = padded(df)
+      assert(Widths.of(df) == 1 && Widths.of(wide) > 1)
+      def envelopes(f: DataFrame): DataFrame = RestBatcher.envelopes(f, "dest", order, size = 8)
+      assert(Plans.exchanges(envelopes(df)) == 0 && Plans.exchanges(envelopes(wide)) >= 2)
+      assert(batchIds(df, order) == batchIds(wide, order))
+      def bodies(f: DataFrame): Seq[String] =
+        envelopes(f).collect().map(r => s"${r.getString(0)} ${r.getLong(1)} ${r.getString(2)}").toSeq.sorted
+      val got = bodies(df)
+      assert(got.size == df.groupBy("dest").count().collect().map(r => (r.getLong(1) + 7) / 8).sum)
+      assert(got == bodies(wide))
+      def summary(f: DataFrame): Seq[String] =
+        Router.batchSummary(f, "dest", order, size = 8).collect().map(_.toString).toSeq.sorted
+      assert(summary(df) == summary(wide))
+    }
+  }
+
   test("forced multi-shard path assigns the same batch_ids as the one-shard path") {
-    // the OperatorsSpec microBatch corpora: contiguous numeric ids,
-    // string ids in binary order, and common-prefix string ids
-    val numeric = (0 until 25).map(i => ("d1", i.toLong)) ++
-      (0 until 13).map(i => ("d2", (i * 3).toLong))
-    val strings = (0 until 30).map(i => ("d1", f"m${(i * 7919) % 97}%02d-${i}%02d"))
-    val prefixed = (0 until 30).map(i =>
-      ("d1", f"evt-2024-01-01-batch-${(i * 31) % 97}%05d"))
     def numericIds(s: SparkSession) =
       batchIds(s.createDataFrame(numeric).toDF("dest", "seq"), "seq")
     val one = numericIds(spark)

@@ -41,7 +41,9 @@ class WidthsSpec extends SparkSpec {
     ("m_*_real ids: 10x at 4 cores", 124196L, TaskBytes / media, 4, 4),
     ("d_substr_dup (k=5): 10x", 652030L, TaskBytes / 5, 32, 1),
     ("d_substr_long (k=50): 10x", 652030L, TaskBytes / 50, 32, 8),
-    ("p_batch_assign / p_ack_ledger: 10x events", 2734332L, advisory, 32, 1))
+    ("p_batch_assign / p_ack_ledger: 10x events", 2734332L, advisory, 32, 1),
+    // Router.microBatch's one-task gather (Widths.gather) of the same input
+    ("p_batch_assign / p_ack_ledger gather: 10x events", 2734332L, TaskBytes, 32, 1))
 
   test("the width rule over every site's table of cases") {
     val wrong = cases.collect {
@@ -68,6 +70,14 @@ class WidthsSpec extends SparkSpec {
     val widths = Seq(Widths.of(huge), Widths.of(huge, inflate = 50),
       Widths.of(huge, deflate = 4), Widths.shards(huge))
     assert(widths.forall(_ == 2), widths)
+  }
+
+  test("gather puts a one-task frame on one partition and leaves a wider one as it is") {
+    val small = spark.range(0, 10, 1, 3).toDF()
+    val one = Widths.gather(small)
+    assert(one.rdd.getNumPartitions == 1 && one.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
+    val wide = spark.range(0, 1000000, 1, 3).toDF() // 8 MB of plan bytes
+    assert(Widths.of(wide) > 1 && (Widths.gather(wide) eq wide))
   }
 
   test("raise repartitions only when the width is more than the frame has") {
