@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** The PERSISTED form of the composed IVFADC index
   * ([[Similarity.ivfPqTopK]]) — the artifact a 100-TB deployment
   * actually serves from, closing the gap between "at scale the codes
@@ -487,7 +489,7 @@ object AnnIndex {
             s"sample before trusting the higher floor")
     }
     Similarity.autoOperatingPoint(
-      spark.read.parquet(s"$dir/meta_tuning"), floor)
+      Tables.read(spark, s"$dir/meta_tuning"), floor)
   }
 
   /** [[search]] at the artifact's OWN operating point — the stored
@@ -552,7 +554,7 @@ object AnnIndex {
     val f = new java.io.File(s"$dir/meta_tuning_info")
     if (!f.exists()) None
     else {
-      val r = spark.read.parquet(s"$dir/meta_tuning_info")
+      val r = Tables.read(spark, s"$dir/meta_tuning_info")
         .select("measured_floor", "indexed_rows", "appended_rows").head()
       Some(TuningInfo(r.getDouble(0), r.getLong(1), r.getLong(2)))
     }
@@ -598,7 +600,7 @@ object AnnIndex {
   }
 
   def loadMeta(spark: SparkSession, dir: String): IndexMeta = {
-    val params = spark.read.parquet(s"$dir/meta_params")
+    val params = Tables.read(spark, s"$dir/meta_params")
     // encoding gate: an artifact with no marker predates residual
     // coding (raw codes) — applying residual ADC to it would return
     // silently wrong scores, so refuse both absent and mismatched
@@ -620,11 +622,11 @@ object AnnIndex {
         if (names.isEmpty) Nil
         else names.split("\\|").toSeq.zip(types.split("\\|").toSeq)
       }
-    val cents = spark.read.parquet(s"$dir/meta_cents")
+    val cents = Tables.read(spark, s"$dir/meta_cents")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3)).toArray
-    val books = spark.read.parquet(s"$dir/meta_books")
+    val books = Tables.read(spark, s"$dir/meta_books")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.groupBy(_._2).toSeq.sortBy(_._1)

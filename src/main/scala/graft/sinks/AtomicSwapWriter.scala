@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.sources.Spool
+import graft.sources.{Spool, Tables}
 
 /** Atomic-swap table loads — the warehouse staging discipline (load
   * into a staging table, then swap it live) applied to a columnar
@@ -57,7 +57,7 @@ object AtomicSwapWriter {
   def readCurrent(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    spark.read.parquet(Paths.get(root, s"v_$v").toString)
+    Tables.read(spark, Paths.get(root, s"v_$v").toString)
   }
 
   /** Remove orphaned (crashed-load) and superseded snapshot dirs,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ShardedWindow, Widths}
+import graft.sources.Tables
 
 /** Training-shard export: materialize a deterministically shuffled
   * corpus as fixed-size ordered shard files plus a manifest — the
@@ -112,12 +113,12 @@ object ShardExport {
   }
 
   def readManifest(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(livePath(root, "manifest"))
+    Tables.read(spark, livePath(root, "manifest"))
 
   /** The live export's full data frame (all shards; `shard` is a
     * partition column). */
   def readData(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(livePath(root, "data"))
+    Tables.read(spark, livePath(root, "data"))
 
   /** One shard in training order — the loader's read path: partition
     * pruning reaches the scan (one directory), and the bounded

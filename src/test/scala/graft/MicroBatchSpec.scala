@@ -1,8 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -67,42 +64,6 @@ class MicroBatchSpec extends SparkSpec {
     val bytes = Widths.planBytes(small)
     assert(bytes > 0 && bytes < (64L << 20))
     assert(Widths.shards(small) == 1)
-  }
-
-  /** The jobs started and the stages submitted while `body` runs
-    * under a fresh job group. */
-  private def underGroup(body: => Unit): (Int, Seq[StageInfo]) = {
-    val sc = spark.sparkContext
-    val group = s"microbatch-${java.util.UUID.randomUUID()}"
-    val sentinel = s"microbatch-sentinel-${java.util.UUID.randomUUID()}"
-    def of(p: java.util.Properties): String =
-      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id"))).getOrElse("")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-    @volatile var synced = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (of(e.properties) == group) jobs.incrementAndGet()
-        else if (of(e.properties) == sentinel) synced = true
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (of(e.properties) == group) stages.add(e.stageInfo)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      body
-      // the listener bus is asynchronous and ordered: once the
-      // sentinel job's start arrives, every earlier event has too
-      sc.setJobGroup(sentinel, sentinel)
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!synced && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(synced, "sentinel job never reported")
-      (jobs.get(), stages.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private object Plans extends AdaptiveSparkPlanHelper {

@@ -14,8 +14,10 @@ import scala.jdk.CollectionConverters._
   * manager ([[graft.sources.CheckpointFiles]]), the store is the one
   * owner of temp directories (and [[SparkSpec.tempDir]] in the
   * tests), [[graft.operators.Widths]] is the one reader of a width
-  * setting, graft reads no session conf of its own, and no top-level
-  * type is left that nothing names. */
+  * setting, [[graft.sources.Tables.read]] is the one parquet reader
+  * (`read.parquet(` and `format("parquet")` reads appear only in
+  * `Tables.scala`), graft reads no session conf of its own, and no
+  * top-level type is left that nothing names. */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -128,6 +130,14 @@ class SessionRulesSpec extends SparkSpec {
       case (f, l) if settings.exists(l.contains) => f
     }.distinct.sorted
     assert(sites == Seq("GraftSession.scala", "Widths.scala"), s"width settings read at: $sites")
+  }
+
+  test("Tables.scala is the only main file that reads parquet (read.parquet(, format(\"parquet\"))") {
+    val parquetRead = """\bread(?:Stream)?\b.*(?:\.parquet\(|format\("parquet"\))""".r
+    val sites = mainCode.collect {
+      case (f, l) if parquetRead.findFirstIn(l).isDefined => f
+    }.distinct
+    assert(sites == Seq("Tables.scala"), s"parquet reads outside Tables.read: $sites")
   }
 
   test("main code reads no session conf key of its own (graft.*)") {
