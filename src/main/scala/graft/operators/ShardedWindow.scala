@@ -149,8 +149,9 @@ object ShardedWindow {
       .filter(col(rankOut) <= k)
   }
 
+  /** ceil(log2(s)) bits; 0 for s ≤ 1, so a width of 1 is one shard. */
   private def ceilLog2(s: Int): Int =
-    math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, s - 1)))
+    32 - Integer.numberOfLeadingZeros(math.max(1, s) - 1)
 
   /** Shard function for a uniform 60-bit hash key ([[Dedup.shingleHash]]
     * range): the top ceil(log2(s)) bits — exact integer shift, monotone,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.functions.{TextFunctions => T}
@@ -12,6 +12,14 @@ import graft.sources.Tables
   * `documents` and `embeddings` tables. Oracle-checked where DuckDB
   * can express the same computation; rows-only where the operator is
   * inherently engine-native (SimHash expression, LSH ANN).
+  *
+  * What two queries share is written once. On the Spark side each
+  * family has one evaluator: [[recallAt3]] for every recall gate,
+  * `heldOut` for both held-out classifier gates. On the oracle side
+  * each shared DuckDB CTE chain or tail has one builder
+  * (`minhashBandCtes`, `exactTopCtes`, `recallTailSql`,
+  * `heldOutTailSql`, `langIdCaseSql`, ...). No builder is called from
+  * both sides: the oracles stay the gate's independent reference.
   */
 object LlmData {
   type Q = (SparkSession, String) => DataFrame
@@ -20,6 +28,16 @@ object LlmData {
   /** Build `name` once per (session, corpus) in the [[SessionStore]]. */
   private def stored[T](s: SparkSession, d: String, name: String)(build: => T): T =
     SessionStore.memo(Some(corpus(s, d) / name))(build)
+
+  /** The oracles' exploded vectors: one (vec_id, i, x) row per
+    * component of `embeddings`. */
+  private val flatCte =
+    """flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+      |          unnest(generate_series(1, len(embedding))) AS i
+      |         FROM embeddings)""".stripMargin
+
+  /** Each vector's L2 norm over `flat`. */
+  private val normsCte = "norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id)"
 
   // ------------------------------------------------------ d_exact_dup
   private val exactDup: Q = (s, d) =>
@@ -41,17 +59,19 @@ object LlmData {
         shingleK = 3, numPerms = 16, rowsPerBand = 4, cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
-  private val minhashLshSql = {
+  /** The oracle's MinHash chain, opening a WITH: documents →
+    * 3-shingles → 16 permutation minima (`mh`) → 4 bands of 4 rows
+    * (`bands`). One builder for every MinHash oracle. */
+  private def minhashBandCtes(recursive: Boolean = false): String = {
     val P = Dedup.MinhashP
-    val coeffs = Dedup.minhashCoeffs(16)
-    val mhAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
+    val mhAggs = Dedup.minhashCoeffs(16).zipWithIndex.map { case ((a, b), i) =>
       s"MIN(($a * x + $b) % $P) AS mh$i"
     }.mkString(",\n        ")
     val bandSelects = (0 until 4).map { j =>
       val cols = (0 until 4).map(r => s"mh${j * 4 + r}").mkString(", ")
       s"SELECT doc_id, $j AS band, md5(concat_ws('|', $cols)) AS band_hash FROM mh"
     }.mkString("\n       UNION ALL ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    s"""WITH ${if (recursive) "RECURSIVE " else ""}toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
        |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
        |sh AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM starts),
        |shx AS (SELECT doc_id,
@@ -60,12 +80,22 @@ object LlmData {
        |mh AS (SELECT doc_id,
        |        $mhAggs
        |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandSelects)
+       |bands AS ($bandSelects)""".stripMargin
+  }
+
+  /** The LSH candidate pairs over [[minhashBandCtes]]'s `bands`. */
+  private def minhashPairsCte(a: String = "a", b: String = "b"): String =
+    s"""pairs AS (SELECT DISTINCT $a.doc_id AS id1, $b.doc_id AS id2
+       |          FROM bands $a JOIN bands $b
+       |            ON $a.band = $b.band AND $a.band_hash = $b.band_hash
+       |           AND $a.doc_id < $b.doc_id)""".stripMargin
+
+  private val minhashLshSql =
+    s"""${minhashBandCtes()}
        |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
        |ORDER BY id1, id2""".stripMargin
-  }
 
   // ------------------------------------------------- d_source_dup_rate
   // Per-source duplication profile — the curation-dashboard number a
@@ -90,30 +120,9 @@ object LlmData {
       .orderBy("source")
   }
 
-  private val sourceDupRateSql = {
-    val P = Dedup.MinhashP
-    val coeffs = Dedup.minhashCoeffs(16)
-    val mhAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a * x + $b) % $P) AS mh$i"
-    }.mkString(",\n        ")
-    val bandSelects = (0 until 4).map { j =>
-      val cols = (0 until 4).map(r => s"mh${j * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $j AS band, md5(concat_ws('|', $cols)) AS band_hash FROM mh"
-    }.mkString("\n       UNION ALL ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
-       |sh AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM starts),
-       |shx AS (SELECT doc_id,
-       |         TRY_CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $P AS x
-       |        FROM sh),
-       |mh AS (SELECT doc_id,
-       |        $mhAggs
-       |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandSelects),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |          FROM bands a JOIN bands b
-       |            ON a.band = b.band AND a.band_hash = b.band_hash
-       |           AND a.doc_id < b.doc_id),
+  private val sourceDupRateSql =
+    s"""${minhashBandCtes()},
+       |${minhashPairsCte()},
        |dup AS (SELECT id1 AS doc_id FROM pairs UNION SELECT id2 FROM pairs)
        |SELECT d.source,
        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -121,7 +130,6 @@ object LlmData {
        |  ROUND(CAST(SUM(CASE WHEN dup.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 6) AS dup_rate
        |FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id
        |GROUP BY d.source ORDER BY d.source""".stripMargin
-  }
 
   // -------------------------------------------------- d_stream_neardup
   // The STREAMING near-dup detector run inside the batch gate — the
@@ -154,31 +162,10 @@ object LlmData {
       .orderBy("id1", "id2")
 
   private val minhashEstimateSql = {
-    val P = Dedup.MinhashP
-    val coeffs = Dedup.minhashCoeffs(16)
-    val mhAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a * x + $b) % $P) AS mh$i"
-    }.mkString(",\n        ")
-    val bandSelects = (0 until 4).map { j =>
-      val cols = (0 until 4).map(r => s"mh${j * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $j AS band, md5(concat_ws('|', $cols)) AS band_hash FROM mh"
-    }.mkString("\n       UNION ALL ")
     val agree = (0 until 16).map(i =>
       s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
-       |sh AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM starts),
-       |shx AS (SELECT doc_id,
-       |         TRY_CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $P AS x
-       |        FROM sh),
-       |mh AS (SELECT doc_id,
-       |        $mhAggs
-       |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandSelects),
-       |pairs AS (SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
-       |          FROM bands x JOIN bands y
-       |            ON x.band = y.band AND x.band_hash = y.band_hash
-       |           AND x.doc_id < y.doc_id)
+    s"""${minhashBandCtes()},
+       |${minhashPairsCte("x", "y")}
        |SELECT p.id1, p.id2, ROUND(CAST($agree AS DOUBLE) / 16, 6) AS jaccard_est
        |FROM pairs p JOIN mh a ON a.doc_id = p.id1 JOIN mh b ON b.doc_id = p.id2
        |ORDER BY p.id1, p.id2""".stripMargin
@@ -198,37 +185,20 @@ object LlmData {
   /** Shared recursive-closure CTE block: documents → shingles →
     * minhash → bands → candidate pairs → transitive closure (`walk`).
     * Reused by the cluster view and the dedup-apply oracle. */
-  private val clusterClosureCtes = {
-    val P = Dedup.MinhashP
-    val coeffs = Dedup.minhashCoeffs(16)
-    val mhAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a * x + $b) % $P) AS mh$i"
-    }.mkString(",\n        ")
-    val bandSelects = (0 until 4).map { j =>
-      val cols = (0 until 4).map(r => s"mh${j * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $j AS band, md5(concat_ws('|', $cols)) AS band_hash FROM mh"
-    }.mkString("\n       UNION ALL ")
-    s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
-       |sh AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM starts),
-       |shx AS (SELECT doc_id,
-       |         TRY_CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $P AS x
-       |        FROM sh),
-       |mh AS (SELECT doc_id,
-       |        $mhAggs
-       |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandSelects),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |          FROM bands a JOIN bands b
-       |            ON a.band = b.band AND a.band_hash = b.band_hash
-       |           AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-       |          UNION ALL SELECT id2, id1 FROM pairs),
+  private val clusterClosureCtes =
+    s"""${minhashBandCtes(recursive = true)},
+       |${minhashPairsCte()},
+       |${walkCtes("pairs")}""".stripMargin
+
+  /** Transitive closure (`walk`) of the undirected pair graph `pairs`;
+    * needs a WITH RECURSIVE. */
+  private def walkCtes(pairs: String): String =
+    s"""edges AS (SELECT id1 AS src, id2 AS dst FROM $pairs
+       |          UNION ALL SELECT id2, id1 FROM $pairs),
        |walk(id, lbl) AS (
        | SELECT DISTINCT src, src FROM edges
        | UNION
        | SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.id)""".stripMargin
-  }
 
   private val dupClustersSql =
     s"""$clusterClosureCtes
@@ -314,18 +284,32 @@ object LlmData {
 
   // Shared by the d_simhash projection oracle and the
   // d_simhash_neardup all-pairs oracle.
-  private val simhashCtes =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
-      |),
-      |hashes AS (
-      |  SELECT doc_id, list_reduce(
+  /** FNV-1a 64 of `tok` over its UTF-8 bytes, as a HUGEINT `h`. */
+  private val fnv1a64Sql =
+    """list_reduce(
       |    list_prepend(14695981039346656037::HUGEINT,
       |      list_transform(generate_series(1, octet_length(encode(tok))),
       |        i -> TRY_CAST('0x' || substr(hex(encode(tok)), 2*i-1, 2) AS BIGINT)::HUGEINT)),
       |    (h, b) -> (((h // 256) * 256 + xor((h % 256)::BIGINT, b::BIGINT)::HUGEINT)
       |               * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT
-      |  ) AS h FROM toks
+      |  ) AS h""".stripMargin
+
+  /** The unsigned simhash `sh` of `sim` mapped to Spark's signed long. */
+  private val simhashSignedCte =
+    """signed AS (
+      |  SELECT doc_id,
+      |    CAST(CASE WHEN sh >= 9223372036854775808::HUGEINT
+      |         THEN sh - 18446744073709551616::HUGEINT ELSE sh END AS BIGINT) AS simhash,
+      |    sh
+      |  FROM sim
+      |)""".stripMargin
+
+  private val simhashCtes =
+    s"""WITH toks AS (
+      |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      |),
+      |hashes AS (
+      |  SELECT doc_id, $fnv1a64Sql FROM toks
       |),
       |bits AS (
       |  SELECT doc_id, h, unnest(generate_series(0, 63)) AS bit FROM hashes
@@ -340,13 +324,7 @@ object LlmData {
       |    SUM(CASE WHEN c > 0 THEN CAST(POWER(2, bit) AS HUGEINT) ELSE 0::HUGEINT END) AS sh
       |  FROM counts GROUP BY doc_id
       |),
-      |signed AS (
-      |  SELECT doc_id,
-      |    CAST(CASE WHEN sh >= 9223372036854775808::HUGEINT
-      |         THEN sh - 18446744073709551616::HUGEINT ELSE sh END AS BIGINT) AS simhash,
-      |    sh
-      |  FROM sim
-      |)""".stripMargin
+      |$simhashSignedCte""".stripMargin
 
   private val simhashSql =
     s"""$simhashCtes
@@ -380,13 +358,7 @@ object LlmData {
       s"(CASE WHEN c$b > 0 THEN ${java.math.BigInteger.ONE.shiftLeft(b)}::HUGEINT ELSE 0::HUGEINT END)"
     }.mkString(" +\n      ")
     s"""WITH vhash AS (
-      |  SELECT tok, list_reduce(
-      |    list_prepend(14695981039346656037::HUGEINT,
-      |      list_transform(generate_series(1, octet_length(encode(tok))),
-      |        i -> TRY_CAST('0x' || substr(hex(encode(tok)), 2*i-1, 2) AS BIGINT)::HUGEINT)),
-      |    (h, b) -> (((h // 256) * 256 + xor((h % 256)::BIGINT, b::BIGINT)::HUGEINT)
-      |               * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT
-      |  ) AS h FROM (SELECT DISTINCT tok FROM (
+      |  SELECT tok, $fnv1a64Sql FROM (SELECT DISTINCT tok FROM (
       |    SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents))
       |),
       |-- per-INSTANCE join (not a (doc, tok) pre-group: that hash
@@ -415,13 +387,7 @@ object LlmData {
       |    $assemble AS sh
       |  FROM counts
       |),
-      |signed AS (
-      |  SELECT doc_id,
-      |    CAST(CASE WHEN sh >= 9223372036854775808::HUGEINT
-      |         THEN sh - 18446744073709551616::HUGEINT ELSE sh END AS BIGINT) AS simhash,
-      |    sh
-      |  FROM sim
-      |)""".stripMargin
+      |$simhashSignedCte""".stripMargin
   }
 
   private val simhashAltSql =
@@ -598,7 +564,10 @@ object LlmData {
         k = 3, maxDocFreq = 50, minContainment = 0.5, cacheKey = Some(corpus(s, d)))
       .orderBy("id1", "id2")
 
-  private val containmentDupSql =
+  /** Distinct 3-shingle sets (`sh`, `sizes`) and the intersection
+    * sizes (`inter`) of every pair sharing a shingle held by ≤ 50 docs:
+    * the chain both n-gram overlap oracles score. */
+  private val rareShingleCtes =
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
       |sh0 AS (SELECT doc_id,
@@ -612,7 +581,10 @@ object LlmData {
       |inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS n_inter
       |          FROM rare a JOIN rare b
       |            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |          GROUP BY a.doc_id, b.doc_id)
+      |          GROUP BY a.doc_id, b.doc_id)""".stripMargin
+
+  private val containmentDupSql =
+    s"""$rareShingleCtes
       |SELECT id1, id2, n_inter,
       |  ROUND(CAST(n_inter AS DOUBLE) / LEAST(s1.set_size, s2.set_size), 6) AS containment,
       |  CASE WHEN s1.set_size <= s2.set_size THEN id1 ELSE id2 END AS contained_id
@@ -623,20 +595,7 @@ object LlmData {
       |ORDER BY id1, id2""".stripMargin
 
   private val ngramJaccardSql =
-    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
-      |sh0 AS (SELECT doc_id,
-      |         TRY_CAST('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15) AS BIGINT) AS shingle
-      |        FROM starts),
-      |sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-      |sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM sh GROUP BY doc_id),
-      |rare AS (SELECT sh.doc_id, sh.shingle FROM sh
-      |         JOIN (SELECT shingle FROM sh GROUP BY shingle
-      |               HAVING COUNT(DISTINCT doc_id) <= 50) f USING (shingle)),
-      |inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS n_inter
-      |          FROM rare a JOIN rare b
-      |            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |          GROUP BY a.doc_id, b.doc_id)
+    s"""$rareShingleCtes
       |SELECT id1, id2, n_inter,
       |  ROUND(CAST(n_inter AS DOUBLE) / (s1.set_size + s2.set_size - n_inter), 6) AS jaccard
       |FROM inter
@@ -651,19 +610,23 @@ object LlmData {
         blockCol = "label", threshold = 0.35)
       .orderBy("id1", "id2")
 
-  private val embNearDupSql =
-    """WITH flat AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x,
-      |               unnest(generate_series(1, len(embedding))) AS i
-      |              FROM embeddings),
-      |pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, SUM(a.x*b.x) AS dot
-      |          FROM flat a JOIN flat b
-      |            ON a.i = b.i AND a.label = b.label AND a.vec_id < b.vec_id
-      |          GROUP BY a.vec_id, b.vec_id),
-      |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id)
-      |SELECT id1, id2, ROUND(dot/(n1.nrm*n2.nrm), 6) AS cos_sim
-      |FROM pairs JOIN norms n1 ON id1 = n1.vec_id JOIN norms n2 ON id2 = n2.vec_id
-      |WHERE ROUND(dot/(n1.nrm*n2.nrm), 6) >= 0.35
-      |ORDER BY id1, id2""".stripMargin
+  /** Exact within-label cosine pairs ≥ 0.35 over the vectors of
+    * `src`, after the CTEs `prefix` (which end in a comma). */
+  private def embNearDupOracle(prefix: String, src: String): String =
+    s"""WITH ${prefix}flat AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x,
+       |          unnest(generate_series(1, len(embedding))) AS i
+       |         FROM $src),
+       |pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, SUM(a.x*b.x) AS dot
+       |          FROM flat a JOIN flat b
+       |            ON a.i = b.i AND a.label = b.label AND a.vec_id < b.vec_id
+       |          GROUP BY a.vec_id, b.vec_id),
+       |$normsCte
+       |SELECT id1, id2, ROUND(dot/(n1.nrm*n2.nrm), 6) AS cos_sim
+       |FROM pairs JOIN norms n1 ON id1 = n1.vec_id JOIN norms n2 ON id2 = n2.vec_id
+       |WHERE ROUND(dot/(n1.nrm*n2.nrm), 6) >= 0.35
+       |ORDER BY id1, id2""".stripMargin
+
+  private val embNearDupSql = embNearDupOracle("", "embeddings")
 
   // ------------------------------------------- d_embedding_neardup_s
   // The volume-bounded twin of d_embedding_neardup: exact cosine
@@ -700,35 +663,11 @@ object LlmData {
       |        WHERE TRY_CAST('0x' || substr(md5('slice:' || vec_id), 1, 15) AS BIGINT)
       |              % s = 0)""".stripMargin
 
-  private val embNearDupSSql =
-    s"""WITH $embSliceCte,
-       |flat AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |          unnest(generate_series(1, len(embedding))) AS i
-       |         FROM sel),
-       |pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2, SUM(a.x*b.x) AS dot
-       |          FROM flat a JOIN flat b
-       |            ON a.i = b.i AND a.label = b.label AND a.vec_id < b.vec_id
-       |          GROUP BY a.vec_id, b.vec_id),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id)
-       |SELECT id1, id2, ROUND(dot/(n1.nrm*n2.nrm), 6) AS cos_sim
-       |FROM pairs JOIN norms n1 ON id1 = n1.vec_id JOIN norms n2 ON id2 = n2.vec_id
-       |WHERE ROUND(dot/(n1.nrm*n2.nrm), 6) >= 0.35
-       |ORDER BY id1, id2""".stripMargin
+  private val embNearDupSSql = embNearDupOracle(s"$embSliceCte,\n", "sel")
 
-  /** List-native ALT twin (see embAltCtes note) — same slice, same
+  /** List-native ALT twin (see the embListCtes note) — same slice, same
     * arithmetic, no 64×-wide flat join at N×. */
-  private val embNearDupSAltSql =
-    s"""WITH $embSliceCte,
-       |v AS (SELECT vec_id, label,
-       |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-       |      FROM sel),
-       |n AS (SELECT vec_id, label, e,
-       |        sqrt(list_sum(list_transform(e, x -> x*x))) AS nrm FROM v)
-       |SELECT a.vec_id AS id1, b.vec_id AS id2,
-       |  ROUND(list_inner_product(a.e, b.e)/(a.nrm*b.nrm), 6) AS cos_sim
-       |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-       |WHERE ROUND(list_inner_product(a.e, b.e)/(a.nrm*b.nrm), 6) >= 0.35
-       |ORDER BY id1, id2""".stripMargin
+  private val embNearDupSAltSql = embNearDupAltOracle(s"$embSliceCte,\n", "sel")
 
   // ----------------------------------------------------- d_semdedup
   // SemDeDup over LSH sign-bit blocks: label-free embedding dedup.
@@ -740,27 +679,31 @@ object LlmData {
         numPlanes = 6, dim = 64, minCos = 0.35)
       .orderBy("id1", "id2")
 
-  /** Shared CTE chain replaying semanticDedup's bucket assignment +
-    * within-bucket cosine pairs; consumed by d_semdedup and the
-    * d_sem_clusters closure (WITH RECURSIVE is inert when the walk
-    * CTE is absent). */
-  private val semDedupCtes = {
+  /** semanticDedup's sign-bit bucket of each vector over `flat`: the
+    * 6 seed-42 LCG planes as literals, projections, bucket bits. */
+  private val semBucketCtes = {
     val planeCte = Similarity.hyperplanes(6, 64).zipWithIndex.map {
       case (p, j) =>
         s"SELECT $j AS j, unnest([${p.mkString(",")}]) AS p, " +
           "unnest(generate_series(1, 64)) AS i"
     }.mkString("\nUNION ALL ")
-    s"""WITH RECURSIVE flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |planes AS ($planeCte),
+    s"""planes AS ($planeCte),
        |proj AS (SELECT f.vec_id, pl.j, SUM(f.x * pl.p) AS pr
        |         FROM flat f JOIN planes pl ON f.i = pl.i
        |         GROUP BY f.vec_id, pl.j),
        |buckets AS (SELECT vec_id,
        |              CAST(SUM(CASE WHEN pr > 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
-       |            FROM proj GROUP BY vec_id),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+       |            FROM proj GROUP BY vec_id)""".stripMargin
+  }
+
+  /** Shared CTE chain replaying semanticDedup's bucket assignment +
+    * within-bucket cosine pairs; consumed by d_semdedup and the
+    * d_sem_clusters closure (WITH RECURSIVE is inert when the walk
+    * CTE is absent). */
+  private val semDedupCtes =
+    s"""WITH RECURSIVE $flatCte,
+       |$semBucketCtes,
+       |$normsCte,
        |cand AS (SELECT ba.bucket, ba.vec_id AS id1, bb.vec_id AS id2
        |         FROM buckets ba JOIN buckets bb
        |           ON ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id),
@@ -773,7 +716,6 @@ object LlmData {
        |  FROM dots d JOIN norms n1 ON d.id1 = n1.vec_id
        |              JOIN norms n2 ON d.id2 = n2.vec_id
        |  WHERE ROUND(d.dot / (n1.nrm * n2.nrm), 6) >= 0.35)""".stripMargin
-  }
 
   private val semDedupSql =
     s"""$semDedupCtes
@@ -795,12 +737,7 @@ object LlmData {
 
   private val semClustersSql =
     s"""$semDedupCtes,
-       |edges AS (SELECT id1 AS src, id2 AS dst FROM sempairs
-       |          UNION ALL SELECT id2, id1 FROM sempairs),
-       |walk(id, lbl) AS (
-       | SELECT DISTINCT src, src FROM edges
-       | UNION
-       | SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.id)
+       |${walkCtes("sempairs")}
        |SELECT id, MIN(lbl) AS cluster FROM walk GROUP BY id ORDER BY id""".stripMargin
 
   // ------------------------------------------- volume ALT oracles
@@ -815,20 +752,25 @@ object LlmData {
   // corpus). The driver gate at sf0.01 keeps the canonical oracles;
   // check.py --alts at the 1× dir validates ALT == canonical output
   // against the same Spark dump before any N× run trusts them.
-  private val embAltCtes =
-    """WITH v AS (SELECT vec_id, label,
-      |            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |          FROM embeddings),
-      |n AS (SELECT vec_id, label, e,
-      |        sqrt(list_sum(list_transform(e, x -> x*x))) AS nrm FROM v)""".stripMargin
+  // embListCtes opens a WITH on the list-native vectors (`v`) and
+  // norms (`n`) of `src`, after the CTEs `prefix`.
+  private def embListCtes(prefix: String, src: String): String =
+    s"""WITH ${prefix}v AS (SELECT vec_id, label,
+       |            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+       |          FROM $src),
+       |n AS (SELECT vec_id, label, e,
+       |        sqrt(list_sum(list_transform(e, x -> x*x))) AS nrm FROM v)""".stripMargin
 
-  private val embNearDupAltSql =
-    s"""$embAltCtes
+  /** List-native twin of [[embNearDupOracle]]. */
+  private def embNearDupAltOracle(prefix: String, src: String): String =
+    s"""${embListCtes(prefix, src)}
        |SELECT a.vec_id AS id1, b.vec_id AS id2,
        |  ROUND(list_inner_product(a.e, b.e)/(a.nrm*b.nrm), 6) AS cos_sim
        |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
        |WHERE ROUND(list_inner_product(a.e, b.e)/(a.nrm*b.nrm), 6) >= 0.35
        |ORDER BY id1, id2""".stripMargin
+
+  private val embNearDupAltSql = embNearDupAltOracle("", "embeddings")
 
   /** ALT twin of semDedupCtes: identical bucket assignment (sign of
     * the plane projection, same LCG plane literals) and identical
@@ -837,7 +779,7 @@ object LlmData {
     val planeRows = Similarity.hyperplanes(6, 64).zipWithIndex.map {
       case (p, j) => s"($j, [${p.mkString(",")}])"
     }.mkString(",\n       |    ").stripMargin
-    s"""$embAltCtes,
+    s"""${embListCtes("", "embeddings")},
        |planes AS (SELECT * FROM (VALUES
        |    $planeRows) AS t(j, pl)),
        |buckets AS (SELECT n.vec_id,
@@ -866,7 +808,7 @@ object LlmData {
        |SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
        |FROM deg GROUP BY degree ORDER BY degree""".stripMargin
 
-  /** Volume-tractable ALT oracles (see the embAltCtes note). Keyed
+  /** Volume-tractable ALT oracles (see the embListCtes note). Keyed
     * like [[oracle]]; consumers overlay these over the canonical map
     * only for N×-volume dev runs — the driver gate never sees them.
     * d_sem_clusters needs no entry: check.py's CLOSURE replay
@@ -959,10 +901,8 @@ object LlmData {
   }
 
   private val cosineTopKSql =
-    """WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-      |               unnest(generate_series(1, len(embedding))) AS i
-      |              FROM embeddings),
-      |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+    s"""WITH $flatCte,
+      |$normsCte,
       |dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x*c.x) AS dot
       |         FROM flat q JOIN flat c ON q.i = c.i AND q.vec_id <> c.vec_id
       |         WHERE q.vec_id < 10
@@ -987,27 +927,36 @@ object LlmData {
       .orderBy("qid", "rnk")
   }
 
-  private val lshTopKSql = {
+  /** Similarity.lshTopK's sign-bit buckets of each vector over
+    * `flat`: 4 tables of 4 LCG planes (seeds 42..45) as literals,
+    * projections, per-table bucket bits. */
+  private val lshBucketCtes = {
     val planeCtes = (for {
       t <- 0 until 4
       (p, j) <- Similarity.hyperplanes(4, 64, 42L + t).zipWithIndex
     } yield s"SELECT $t AS t, $j AS j, unnest([${p.mkString(",")}]) AS p, " +
       "unnest(generate_series(1, 64)) AS i").mkString("\nUNION ALL ")
-    s"""WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |planes AS ($planeCtes),
+    s"""planes AS ($planeCtes),
        |proj AS (SELECT f.vec_id, pl.t, pl.j, SUM(f.x * pl.p) AS pr
        |         FROM flat f JOIN planes pl ON f.i = pl.i
        |         GROUP BY f.vec_id, pl.t, pl.j),
        |buckets AS (SELECT vec_id, t,
        |              SUM(CASE WHEN pr > 0 THEN 1 << j ELSE 0 END) AS bucket
-       |            FROM proj GROUP BY vec_id, t),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
-       |cand AS (SELECT DISTINCT bq.vec_id AS qid, bc.vec_id AS cid
-       |         FROM buckets bq JOIN buckets bc
-       |           ON bq.t = bc.t AND bq.bucket = bc.bucket
-       |         WHERE bq.vec_id < 10 AND bq.vec_id <> bc.vec_id),
+       |            FROM proj GROUP BY vec_id, t)""".stripMargin
+  }
+
+  /** Every query's candidates: the vectors sharing a bucket in any table. */
+  private val lshCandCte =
+    """cand AS (SELECT DISTINCT bq.vec_id AS qid, bc.vec_id AS cid
+      |         FROM buckets bq JOIN buckets bc
+      |           ON bq.t = bc.t AND bq.bucket = bc.bucket
+      |         WHERE bq.vec_id < 10 AND bq.vec_id <> bc.vec_id)""".stripMargin
+
+  private val lshTopKSql =
+    s"""WITH $flatCte,
+       |$lshBucketCtes,
+       |$normsCte,
+       |$lshCandCte,
        |dots AS (SELECT c.qid, c.cid, SUM(q.x * t.x) AS dot
        |         FROM cand c JOIN flat q ON q.vec_id = c.qid
        |                     JOIN flat t ON t.vec_id = c.cid AND t.i = q.i
@@ -1019,7 +968,6 @@ object LlmData {
        |            ORDER BY cos_sim DESC, cid) AS rnk FROM scored)
        |SELECT qid, cid, cos_sim, rnk FROM ranked WHERE rnk <= 3
        |ORDER BY qid, rnk""".stripMargin
-  }
 
   // ------------------------------------------------------ s_lsh_recall
   // ANN quality as a GATE metric: recall@3 of the multi-table LSH
@@ -1031,17 +979,21 @@ object LlmData {
   // verdicts).
   private val lshRecall: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") < 10)
-    val exact = exactTop3(s, d).select(col("qid"), col("cid"))
-    val approx = Similarity.lshTopK(q, emb, "vec_id", "embedding", k = 3,
-        numPlanes = 4, dim = 64)
-      .select(col("qid"), col("cid"))
-    val hits = exact.join(approx, Seq("qid", "cid"))
+    recallAt3(exactTop3(s, d), Similarity.lshTopK(emb.filter(col("vec_id") < 10),
+      emb, "vec_id", "embedding", k = 3, numPlanes = 4, dim = 64))
+  }
+
+  /** Per-query recall@3 of an approximate top-3 (`approx`) against
+    * the exact one (`exact`), both keyed (qid, cid): hits over the
+    * query's count of exact neighbours, not the literal k — a query
+    * with < k exact neighbours (tiny corpus, filtered candidates) must
+    * not have its recall understated, and a query with no hit reads
+    * 0 through the left join. Every recall gate's one evaluator. */
+  private[graft] def recallAt3(exact: DataFrame, approx: DataFrame): DataFrame = {
+    val e = exact.select(col("qid"), col("cid"))
+    val hits = e.join(approx.select(col("qid"), col("cid")), Seq("qid", "cid"))
       .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-    // denominator = the per-query count of exact neighbors, not the
-    // literal k: a query with < k exact neighbors (tiny corpus /
-    // filtered candidates) must not have its recall understated
-    exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
+    e.groupBy("qid").agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("qid"), "left")
       .select(col("qid"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
@@ -1050,44 +1002,27 @@ object LlmData {
       .orderBy("qid")
   }
 
-  private val lshRecallSql = {
-    val planeCtes = (for {
-      t <- 0 until 4
-      (p, j) <- Similarity.hyperplanes(4, 64, 42L + t).zipWithIndex
-    } yield s"SELECT $t AS t, $j AS j, unnest([${p.mkString(",")}]) AS p, " +
-      "unnest(generate_series(1, 64)) AS i").mkString("\nUNION ALL ")
-    s"""WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
+  /** The oracle's exact top-3 per query over `flat` and `norms`:
+    * `exact_dots` (candidates narrowed by `candFilter`) →
+    * `exact_ranked` → `exact_top`, aliased `e` when `aliased`. */
+  private def exactTopCtes(aliased: Boolean, candFilter: String = ""): String = {
+    val top = if (aliased) "SELECT e.qid, e.cid FROM exact_ranked e WHERE e.rnk <= 3"
+      else "SELECT qid, cid FROM exact_ranked WHERE rnk <= 3"
+    s"""exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
        |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10 GROUP BY q.vec_id, c.vec_id),
+       |               WHERE q.vec_id < 10$candFilter GROUP BY q.vec_id, c.vec_id),
        |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
        |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
        |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
        |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT qid, cid FROM exact_ranked WHERE rnk <= 3),
-       |planes AS ($planeCtes),
-       |proj AS (SELECT f.vec_id, pl.t, pl.j, SUM(f.x * pl.p) AS pr
-       |         FROM flat f JOIN planes pl ON f.i = pl.i
-       |         GROUP BY f.vec_id, pl.t, pl.j),
-       |buckets AS (SELECT vec_id, t,
-       |              SUM(CASE WHEN pr > 0 THEN 1 << j ELSE 0 END) AS bucket
-       |            FROM proj GROUP BY vec_id, t),
-       |cand AS (SELECT DISTINCT bq.vec_id AS qid, bc.vec_id AS cid
-       |         FROM buckets bq JOIN buckets bc
-       |           ON bq.t = bc.t AND bq.bucket = bc.bucket
-       |         WHERE bq.vec_id < 10 AND bq.vec_id <> bc.vec_id),
-       |adots AS (SELECT c.qid, c.cid, SUM(q.x * t.x) AS dot
-       |          FROM cand c JOIN flat q ON q.vec_id = c.qid
-       |                      JOIN flat t ON t.vec_id = c.cid AND t.i = q.i
-       |          GROUP BY c.qid, c.cid),
-       |aranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |             ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |            FROM adots JOIN norms nq ON qid = nq.vec_id
-       |                       JOIN norms nc ON cid = nc.vec_id),
-       |atop AS (SELECT qid, cid FROM aranked WHERE rnk <= 3),
+       |exact_top AS ($top)""".stripMargin
+  }
+
+  /** The recall oracles' tail: the approximate top-3 `atop` (the
+    * select `atop`), its hits in `exact_top`, and recall@3 over each
+    * query's exact count — the [[recallAt3]] contract. */
+  private def recallTailSql(atop: String): String =
+    s"""atop AS ($atop),
        |hits AS (SELECT e.qid, COUNT(*) AS n_hits
        |         FROM exact_top e JOIN atop a ON e.qid = a.qid AND e.cid = a.cid
        |         GROUP BY e.qid)
@@ -1097,7 +1032,36 @@ object LlmData {
        |FROM (SELECT qid, COUNT(*) AS n_exact FROM exact_top GROUP BY qid) q
        |LEFT JOIN hits h USING (qid)
        |ORDER BY q.qid""".stripMargin
-  }
+
+  /** Recall replay of an index that reranks its candidates exactly:
+    * `flat`, `norms`, the exact top-3, the index's CTEs `candCtes`
+    * (ending in `cand`), the rerank on `score`, the recall tail. */
+  private def rerankRecallSql(candCtes: String, score: String): String =
+    s"""WITH $flatCte,
+       |$normsCte,
+       |${exactTopCtes(aliased = false)},
+       |$candCtes,
+       |adots AS (SELECT c.qid, c.cid, SUM(q.x * t.x) AS dot
+       |          FROM cand c JOIN flat q ON q.vec_id = c.qid
+       |                      JOIN flat t ON t.vec_id = c.cid AND t.i = q.i
+       |          GROUP BY c.qid, c.cid),
+       |aranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
+       |             ORDER BY $score DESC, cid) AS rnk
+       |            FROM adots JOIN norms nq ON qid = nq.vec_id
+       |                       JOIN norms nc ON cid = nc.vec_id),
+       |${recallTailSql("SELECT qid, cid FROM aranked WHERE rnk <= 3")}""".stripMargin
+
+  /** Recall replay of an index whose CTEs `ctes` end in the ranked
+    * `ranked` over `flat` and `norms`; `candFilter` narrows the exact
+    * side's candidates as the index's own. */
+  private def rankedRecallSql(ctes: String, ranked: String,
+                              candFilter: String = ""): String =
+    s"""WITH $ctes,
+       |${exactTopCtes(aliased = true, candFilter)},
+       |${recallTailSql(s"SELECT p.qid, p.cid FROM $ranked p WHERE p.rnk <= 3")}""".stripMargin
+
+  private val lshRecallSql =
+    rerankRecallSql(s"$lshBucketCtes,\n$lshCandCte", "ROUND(dot/(nq.nrm*nc.nrm), 6)")
 
   // -------------------------------------------------------- s_ivf_topk
   // Real IVF: k-means coarse quantizer (deterministic Lloyd, trained
@@ -1141,43 +1105,31 @@ object LlmData {
     val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
       k = 8, iters = 4, trainMod = 4, cacheKey = Some(corpus(s, d)))
     val quantized = emb.join(cells, "vec_id")
-    val q = emb.filter(col("vec_id") < 10)
-    val exact = exactTop3(s, d).select(col("qid"), col("cid"))
-    val approx = Similarity.ivfTopK(quantized.filter(col("vec_id") < 10),
-        quantized, "vec_id", "embedding", cellCol = "cell", k = 3, nprobe = 3)
-      .select(col("qid"), col("cid"))
-    val hits = exact.join(approx, Seq("qid", "cid"))
-      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double")
-          / col("n_exact").cast("double"), 6).as("recall_at_3"))
-      .orderBy("qid")
+    recallAt3(exactTop3(s, d), Similarity.ivfTopK(quantized.filter(col("vec_id") < 10),
+      quantized, "vec_id", "embedding", cellCol = "cell", k = 3, nprobe = 3))
   }
 
-  /** IVF recall replay: the exact brute-force ranking CTEs (the
-    * s_lsh_recall shape) joined against the full centroid-literal IVF
-    * replay from [[ivfTopKSql]]. */
-  private def ivfRecallSql(cents: Array[Array[Double]]): String = {
+  /** IVF recall replay: [[rerankRecallSql]] over the probed cells of
+    * [[ivfProbeCtes]], the centroid-literal replay [[ivfTopKSql]]
+    * ranks. */
+  private def ivfRecallSql(cents: Array[Array[Double]]): String =
+    rerankRecallSql(s"""${ivfProbeCtes(cents)},
+       |cand AS (SELECT p.qid, a.vec_id AS cid
+       |         FROM probes p JOIN assign a USING (cell)
+       |         WHERE a.vec_id <> p.qid)""".stripMargin,
+      "ROUND(dot / (nq.nrm * nc.nrm), 6)")
+
+  /** The IVF replay's cells over `flat`, centroids as literals:
+    * assignment by squared-L2 argmin (lower-cell tiebreak), empirical
+    * cell means, each query's 3 probed cells (`probes`). */
+  private def ivfProbeCtes(cents: Array[Array[Double]]): String = {
+    // %.17e round-trips doubles exactly and forces DuckDB to parse
+    // the literals as DOUBLE (not DECIMAL)
     val centCtes = cents.zipWithIndex.map { case (c, j) =>
       s"SELECT $j AS cell, unnest([${c.map(x => f"$x%.17e").mkString(",")}]) AS c, " +
         s"unnest(generate_series(1, ${c.length})) AS i"
     }.mkString("\nUNION ALL ")
-    s"""WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
-       |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10 GROUP BY q.vec_id, c.vec_id),
-       |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
-       |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT qid, cid FROM exact_ranked WHERE rnk <= 3),
-       |cents AS ($centCtes),
+    s"""cents AS ($centCtes),
        |csq AS (SELECT cell, SUM(c*c) AS c2 FROM cents GROUP BY cell),
        |cdots AS (SELECT f.vec_id, ct.cell, SUM(f.x * ct.c) AS dc
        |          FROM flat f JOIN cents ct ON f.i = ct.i
@@ -1195,28 +1147,7 @@ object LlmData {
        |probes AS (SELECT qid, cell FROM (SELECT qid, cell,
        |             ROW_NUMBER() OVER (PARTITION BY qid
        |               ORDER BY ROUND(cscore, 6) DESC, cell ASC) AS prnk
-       |           FROM pscore) WHERE prnk <= 3),
-       |cand AS (SELECT p.qid, a.vec_id AS cid
-       |         FROM probes p JOIN assign a USING (cell)
-       |         WHERE a.vec_id <> p.qid),
-       |adots AS (SELECT c.qid, c.cid, SUM(q.x * t.x) AS dot
-       |          FROM cand c JOIN flat q ON q.vec_id = c.qid
-       |                      JOIN flat t ON t.vec_id = c.cid AND t.i = q.i
-       |          GROUP BY c.qid, c.cid),
-       |aranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |             ORDER BY ROUND(dot / (nq.nrm * nc.nrm), 6) DESC, cid) AS rnk
-       |            FROM adots JOIN norms nq ON qid = nq.vec_id
-       |                      JOIN norms nc ON cid = nc.vec_id),
-       |atop AS (SELECT qid, cid FROM aranked WHERE rnk <= 3),
-       |hits AS (SELECT e.qid, COUNT(*) AS n_hits
-       |         FROM exact_top e JOIN atop a ON e.qid = a.qid AND e.cid = a.cid
-       |         GROUP BY e.qid)
-       |SELECT q.qid, COALESCE(h.n_hits, 0) AS n_hits,
-       | ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-       |       / CAST(q.n_exact AS DOUBLE), 6) AS recall_at_3
-       |FROM (SELECT qid, COUNT(*) AS n_exact FROM exact_top GROUP BY qid) q
-       |LEFT JOIN hits h USING (qid)
-       |ORDER BY q.qid""".stripMargin
+       |           FROM pscore) WHERE prnk <= 3)""".stripMargin
   }
 
   /** The full IVF replay in SQL, centroids as literals: assignment by
@@ -1224,36 +1155,10 @@ object LlmData {
     * probe ranking (top-3 cells by unrounded centroid dot), in-cell
     * exact rerank on the 6-digit-rounded cosine — mirroring
     * Similarity.ivfTopK stage by stage. */
-  private def ivfTopKSql(cents: Array[Array[Double]]): String = {
-    // %.17e round-trips doubles exactly and forces DuckDB to parse
-    // the literals as DOUBLE (not DECIMAL)
-    val centCtes = cents.zipWithIndex.map { case (c, j) =>
-      s"SELECT $j AS cell, unnest([${c.map(x => f"$x%.17e").mkString(",")}]) AS c, " +
-        s"unnest(generate_series(1, ${c.length})) AS i"
-    }.mkString("\nUNION ALL ")
-    s"""WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |cents AS ($centCtes),
-       |csq AS (SELECT cell, SUM(c*c) AS c2 FROM cents GROUP BY cell),
-       |cdots AS (SELECT f.vec_id, ct.cell, SUM(f.x * ct.c) AS dc
-       |          FROM flat f JOIN cents ct ON f.i = ct.i
-       |          GROUP BY f.vec_id, ct.cell),
-       |assign AS (SELECT vec_id, cell FROM (
-       |            SELECT d.vec_id, d.cell,
-       |              ROW_NUMBER() OVER (PARTITION BY d.vec_id
-       |                ORDER BY ROUND(cq.c2 - 2*d.dc, 6) ASC, d.cell ASC) AS r
-       |            FROM cdots d JOIN csq cq USING (cell)) WHERE r = 1),
-       |emp AS (SELECT a.cell, f.i, SUM(f.x) / COUNT(*) AS m
-       |        FROM assign a JOIN flat f USING (vec_id) GROUP BY a.cell, f.i),
-       |pscore AS (SELECT f.vec_id AS qid, e.cell, SUM(f.x * e.m) AS cscore
-       |           FROM flat f JOIN emp e ON f.i = e.i
-       |           WHERE f.vec_id < 10 GROUP BY f.vec_id, e.cell),
-       |probes AS (SELECT qid, cell FROM (SELECT qid, cell,
-       |             ROW_NUMBER() OVER (PARTITION BY qid
-       |               ORDER BY ROUND(cscore, 6) DESC, cell ASC) AS prnk
-       |           FROM pscore) WHERE prnk <= 3),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+  private def ivfTopKSql(cents: Array[Array[Double]]): String =
+    s"""WITH $flatCte,
+       |${ivfProbeCtes(cents)},
+       |$normsCte,
        |cand AS (SELECT p.qid, a.vec_id AS cid
        |         FROM probes p JOIN assign a USING (cell)
        |         WHERE a.vec_id <> p.qid),
@@ -1268,7 +1173,6 @@ object LlmData {
        |                     JOIN norms nc ON cid = nc.vec_id)
        |SELECT qid, cid, cos_sim, rnk FROM ranked WHERE rnk <= 3
        |ORDER BY qid, rnk""".stripMargin
-  }
 
   // ----------------------------------------------------- s_pq_topk
   // Product quantization (Jégou et al. TPAMI'11) — the COMPRESSED-
@@ -1332,20 +1236,8 @@ object LlmData {
   // discipline), quantifying what 64× compression costs.
   private val pqRecall: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") < 10)
-    val exact = exactTop3(s, d).select(col("qid"), col("cid"))
-    val approx = Similarity.pqTopK(q, emb, "vec_id", "embedding",
-        trainPq(s, d), k = 3, shortlist = 64)
-      .select(col("qid"), col("cid"))
-    val hits = exact.join(approx, Seq("qid", "cid"))
-      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double")
-          / col("n_exact").cast("double"), 6).as("recall_at_3"))
-      .orderBy("qid")
+    recallAt3(exactTop3(s, d), Similarity.pqTopK(emb.filter(col("vec_id") < 10),
+      emb, "vec_id", "embedding", trainPq(s, d), k = 3, shortlist = 64))
   }
 
   // ------------------------------------------------- d_pq_semdedup
@@ -1428,21 +1320,9 @@ object LlmData {
   private val ivfPqRecall: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
     val (cents, books) = trainIvfPqResidual(s, d)
-    val q = emb.filter(col("vec_id") < 10)
-    val exact = exactTop3(s, d).select(col("qid"), col("cid"))
-    val approx = Similarity.ivfPqResidualTopK(q, emb, "vec_id", "embedding",
-        cents, books, k = 3,
-        nprobe = IvfPqDefaults.nprobe, shortlist = IvfPqDefaults.shortlist)
-      .select(col("qid"), col("cid"))
-    val hits = exact.join(approx, Seq("qid", "cid"))
-      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double")
-          / col("n_exact").cast("double"), 6).as("recall_at_3"))
-      .orderBy("qid")
+    recallAt3(exactTop3(s, d), Similarity.ivfPqResidualTopK(emb.filter(col("vec_id") < 10),
+      emb, "vec_id", "embedding", cents, books, k = 3,
+      nprobe = IvfPqDefaults.nprobe, shortlist = IvfPqDefaults.shortlist))
   }
 
   // ----------------------------------------------- s_ivfpq_tuning
@@ -1646,12 +1526,13 @@ object LlmData {
       .orderBy("qid", "rnk")
   }
 
+  /** The filtered searches' predicate, on a vector id. */
+  private val InLabel1 = "vec_id IN (SELECT vec_id FROM embeddings WHERE label = 1)"
+
   private def ivfPqFilteredSql(cents: Array[Array[Double]],
                                books: Array[Array[Array[Double]]]): String =
     s"""WITH ${ivfPqCtes(cents, books, books(0)(0).length,
-            IvfPqDefaults.nprobe, IvfPqDefaults.shortlist,
-            candFilter =
-              "AND a.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 1)")}
+            IvfPqDefaults.nprobe, IvfPqDefaults.shortlist, candFilter = s"AND a.$InLabel1")}
        |SELECT qid, cid, cos_sim, CAST(rnk AS BIGINT) AS rnk
        |FROM ivfpq_ranked WHERE rnk <= 3
        |ORDER BY qid, rnk""".stripMargin
@@ -1681,21 +1562,11 @@ object LlmData {
     val (codes, meta) = graft.operators.AnnIndex.load(s, dir,
       annTable(s, d))
     val emb = Tables.embeddings(s, d)
-    val exact = exactFilteredTop3(s, d).select(col("qid"), col("cid"))
-    val approx = graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
+    recallAt3(exactFilteredTop3(s, d),
+      graft.operators.AnnIndex.search(emb.filter(col("vec_id") < 10),
         codes, meta, emb, "embedding", k = 3,
         nprobe = IvfPqDefaults.nprobe, shortlist = IvfPqDefaults.shortlist,
-        predicate = Some(col("label") === 1))
-      .select(col("qid"), col("cid"))
-    val hits = exact.join(approx, Seq("qid", "cid"))
-      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("qid"), "left_outer")
-      .select(col("qid"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double")
-          / col("n_exact").cast("double"), 6).as("recall_at_3"))
-      .orderBy("qid")
+        predicate = Some(col("label") === 1)))
   }
 
   /** ivfPqRecallSql with BOTH sides restricted to the predicate
@@ -1704,30 +1575,9 @@ object LlmData {
     * against filtered ground truth. */
   private def ivfPqFilteredRecallSql(cents: Array[Array[Double]],
                                      books: Array[Array[Array[Double]]]): String =
-    s"""WITH ${ivfPqCtes(cents, books, books(0)(0).length,
-            IvfPqDefaults.nprobe, IvfPqDefaults.shortlist,
-            candFilter =
-              "AND a.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 1)")},
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
-       |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10
-       |                 AND c.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 1)
-       |               GROUP BY q.vec_id, c.vec_id),
-       |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
-       |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT e.qid, e.cid FROM exact_ranked e WHERE e.rnk <= 3),
-       |atop AS (SELECT p.qid, p.cid FROM ivfpq_ranked p WHERE p.rnk <= 3),
-       |hits AS (SELECT e.qid, COUNT(*) AS n_hits
-       |         FROM exact_top e JOIN atop a ON e.qid = a.qid AND e.cid = a.cid
-       |         GROUP BY e.qid)
-       |SELECT q.qid, COALESCE(h.n_hits, 0) AS n_hits,
-       | ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-       |       / CAST(q.n_exact AS DOUBLE), 6) AS recall_at_3
-       |FROM (SELECT qid, COUNT(*) AS n_exact FROM exact_top GROUP BY qid) q
-       |LEFT JOIN hits h USING (qid)
-       |ORDER BY q.qid""".stripMargin
+    rankedRecallSql(ivfPqCtes(cents, books, books(0)(0).length,
+        IvfPqDefaults.nprobe, IvfPqDefaults.shortlist, candFilter = s"AND a.$InLabel1"),
+      "ivfpq_ranked", candFilter = s" AND c.$InLabel1")
 
   // --------------------------------------------- d_stream_pqdedup
   // The always-on twin of d_pq_semdedup (the lshNearDupStream
@@ -1961,7 +1811,7 @@ object LlmData {
        |           SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
        |             ORDER BY ROUND(aip, 6) DESC, cid) AS srnk
        |           FROM scored) WHERE srnk <= $shortlist),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+       |$normsCte,
        |rdots AS (SELECT s.qid, s.cid, SUM(q.x * t.x) AS dot
        |          FROM short s JOIN flat q ON q.vec_id = s.qid
        |                       JOIN flat t ON t.vec_id = s.cid AND t.i = q.i
@@ -2146,26 +1996,8 @@ object LlmData {
 
   private def ivfPqRecallSql(cents: Array[Array[Double]],
                              books: Array[Array[Array[Double]]]): String =
-    s"""WITH ${ivfPqCtes(cents, books, books(0)(0).length,
-            IvfPqDefaults.nprobe, IvfPqDefaults.shortlist)},
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
-       |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10 GROUP BY q.vec_id, c.vec_id),
-       |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
-       |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT e.qid, e.cid FROM exact_ranked e WHERE e.rnk <= 3),
-       |atop AS (SELECT p.qid, p.cid FROM ivfpq_ranked p WHERE p.rnk <= 3),
-       |hits AS (SELECT e.qid, COUNT(*) AS n_hits
-       |         FROM exact_top e JOIN atop a ON e.qid = a.qid AND e.cid = a.cid
-       |         GROUP BY e.qid)
-       |SELECT q.qid, COALESCE(h.n_hits, 0) AS n_hits,
-       | ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-       |       / CAST(q.n_exact AS DOUBLE), 6) AS recall_at_3
-       |FROM (SELECT qid, COUNT(*) AS n_exact FROM exact_top GROUP BY qid) q
-       |LEFT JOIN hits h USING (qid)
-       |ORDER BY q.qid""".stripMargin
+    rankedRecallSql(ivfPqCtes(cents, books, books(0)(0).length,
+      IvfPqDefaults.nprobe, IvfPqDefaults.shortlist), "ivfpq_ranked")
 
   /** The tuning-curve replay: ADC-scores once at maxProbe=8 with each
     * candidate's probe rank, grids over (nprobe, shortlist), reranks
@@ -2200,7 +2032,7 @@ object LlmData {
        |               ORDER BY ROUND(s.aip, 6) DESC, s.cid) AS srnk
        |           FROM scored s JOIN grid g ON s.pr <= g.nprobe)
        |          WHERE srnk <= shortlist),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+       |$normsCte,
        |dpairs AS (SELECT DISTINCT qid, cid FROM short),
        |rdots AS (SELECT s.qid, s.cid,
        |            ROUND(SUM(q.x * t.x) / (nq.nrm * nc.nrm), 6) AS cos_sim
@@ -2214,14 +2046,7 @@ object LlmData {
        |            ROW_NUMBER() OVER (PARTITION BY sh.nprobe, sh.shortlist, sh.qid
        |              ORDER BY r.cos_sim DESC, sh.cid) AS rnk
        |          FROM short sh JOIN rdots r USING (qid, cid)) WHERE rnk <= 3),
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
-       |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10 GROUP BY q.vec_id, c.vec_id),
-       |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
-       |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT qid, cid FROM exact_ranked WHERE rnk <= 3),
+       |${exactTopCtes(aliased = false)},
        |hits AS (SELECT a.nprobe, a.shortlist, COUNT(*) AS n_hits
        |         FROM atop a JOIN exact_top e USING (qid, cid)
        |         GROUP BY a.nprobe, a.shortlist),
@@ -2262,9 +2087,7 @@ object LlmData {
       s"""SELECT s.m AS m, s.j AS j, unnest(s.v) AS c,
          |        unnest(generate_series(1, $sd)) AS i
          |        FROM (SELECT unnest([$bookList]) AS s)""".stripMargin
-    s"""flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |          unnest(generate_series(1, len(embedding))) AS i
-       |         FROM embeddings),
+    s"""$flatCte,
        |books AS ($bookCtes),
        |bsq AS (SELECT m, j, SUM(c*c) AS c2 FROM books GROUP BY m, j),
        |cdots AS (SELECT f.vec_id, b.m, b.j, SUM(f.x * b.c) AS dc
@@ -2334,7 +2157,7 @@ object LlmData {
        |           SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
        |             ORDER BY ROUND(aip, 6) DESC, cid) AS srnk
        |           FROM scored) WHERE srnk <= 64),
-       |norms AS (SELECT vec_id, sqrt(SUM(x*x)) AS nrm FROM flat GROUP BY vec_id),
+       |$normsCte,
        |rdots AS (SELECT s.qid, s.cid, SUM(q.x * t.x) AS dot
        |          FROM short s JOIN flat q ON q.vec_id = s.qid
        |                       JOIN flat t ON t.vec_id = s.cid AND t.i = q.i
@@ -2354,25 +2177,7 @@ object LlmData {
        |ORDER BY qid, rnk""".stripMargin
 
   private def pqRecallSql(books: Array[Array[Array[Double]]]): String =
-    s"""WITH ${pqReplayCtes(books)},
-       |exact_dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, SUM(q.x * c.x) AS dot
-       |               FROM flat q JOIN flat c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |               WHERE q.vec_id < 10 GROUP BY q.vec_id, c.vec_id),
-       |exact_ranked AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-       |                  ORDER BY ROUND(dot/(nq.nrm*nc.nrm), 6) DESC, cid) AS rnk
-       |                 FROM exact_dots JOIN norms nq ON qid = nq.vec_id
-       |                                 JOIN norms nc ON cid = nc.vec_id),
-       |exact_top AS (SELECT e.qid, e.cid FROM exact_ranked e WHERE e.rnk <= 3),
-       |atop AS (SELECT p.qid, p.cid FROM pq_ranked p WHERE p.rnk <= 3),
-       |hits AS (SELECT e.qid, COUNT(*) AS n_hits
-       |         FROM exact_top e JOIN atop a ON e.qid = a.qid AND e.cid = a.cid
-       |         GROUP BY e.qid)
-       |SELECT q.qid, COALESCE(h.n_hits, 0) AS n_hits,
-       | ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE)
-       |       / CAST(q.n_exact AS DOUBLE), 6) AS recall_at_3
-       |FROM (SELECT qid, COUNT(*) AS n_exact FROM exact_top GROUP BY qid) q
-       |LEFT JOIN hits h USING (qid)
-       |ORDER BY q.qid""".stripMargin
+    rankedRecallSql(pqReplayCtes(books), "pq_ranked")
 
   // --------------------------------------------------------- t_langid
   private val langid: Q = (s, d) => {
@@ -2388,23 +2193,29 @@ object LlmData {
   }
 
   private val langidSql =
-    """SELECT doc_id,
-      | len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) AS s_en,
-      | len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b')) AS s_de,
-      | len(regexp_extract_all(text, '\b(el|la|los|de|que)\b')) AS s_es,
-      | len(regexp_extract_all(text, '\b(le|la|les|et|des)\b')) AS s_fr,
-      | CASE
-      |  WHEN len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b'))
-      |   AND len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(el|la|los|de|que)\b'))
-      |   AND len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'en'
-      |  WHEN len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b')) >= len(regexp_extract_all(text, '\b(el|la|los|de|que)\b'))
-      |   AND len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'de'
-      |  WHEN len(regexp_extract_all(text, '\b(el|la|los|de|que)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'es'
-      |  ELSE 'fr' END AS pred_lang
+    s"""SELECT doc_id,
+      | len(regexp_extract_all(text, '\\b(the|and|of|to|in)\\b')) AS s_en,
+      | len(regexp_extract_all(text, '\\b(der|die|und|das|ist)\\b')) AS s_de,
+      | len(regexp_extract_all(text, '\\b(el|la|los|de|que)\\b')) AS s_es,
+      | len(regexp_extract_all(text, '\\b(le|la|les|et|des)\\b')) AS s_fr,
+      | ${langIdCaseSql("text")} AS pred_lang
       |FROM documents ORDER BY doc_id""".stripMargin
+
+  /** The langId replay CASE (T.langId's argmax over the four marker
+    * counts, ties to the earlier language) over a text column
+    * reference: every oracle's one copy. */
+  private def langIdCaseSql(textRef: String): String =
+    s"""CASE
+       | WHEN len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b'))
+       |  AND len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b'))
+       |  AND len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
+       | THEN 'en'
+       | WHEN len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b'))
+       |  AND len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
+       | THEN 'de'
+       | WHEN len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
+       | THEN 'es'
+       | ELSE 'fr' END""".stripMargin
 
   // ------------------------------------------------------- t_lang_mix
   // Per-source language mix + metadata agreement — the curation view
@@ -2429,18 +2240,8 @@ object LlmData {
   }
 
   private val langMixSql =
-    """WITH pred AS (SELECT source, lang,
-      | CASE
-      |  WHEN len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b'))
-      |   AND len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(el|la|los|de|que)\b'))
-      |   AND len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'en'
-      |  WHEN len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b')) >= len(regexp_extract_all(text, '\b(el|la|los|de|que)\b'))
-      |   AND len(regexp_extract_all(text, '\b(der|die|und|das|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'de'
-      |  WHEN len(regexp_extract_all(text, '\b(el|la|los|de|que)\b')) >= len(regexp_extract_all(text, '\b(le|la|les|et|des)\b'))
-      |  THEN 'es'
-      |  ELSE 'fr' END AS pred_lang
+    s"""WITH pred AS (SELECT source, lang,
+      | ${langIdCaseSql("text")} AS pred_lang
       | FROM documents),
       |agg AS (SELECT source, pred_lang,
       |  CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2706,48 +2507,54 @@ object LlmData {
   private def valBucket = // content-hash 5-bucket; bucket 0 = val
     graft.operators.Dedup.shingleHash(concat(lit("cvsplit:"), col("text"))) % 5
 
-  private val ClassifierValFit = s"classifierValFit|d$classifierD|epochs16|lr8|bigrams"
+  /** A held-out classifier gate's parameters: the store names of its
+    * TRAIN-split fit and of the cut calibrated on it, the seed label,
+    * the feature stream (None: the word unigram+bigram stream, scored
+    * by the fused margin kernel) and the AUC floor. */
+  private final case class HeldOut(fit: String, cut: String, label: Column,
+                                   feats: Option[Column], floor: Double) {
+    def logit(f: Classifier.Fit): Column = feats match {
+      case Some(toks) => T.classifierLogit(toks, f.weightSeq, f.bias)
+      case None => T.classifierMargin(col("text"), f.weightSeq, f.bias)
+    }
+  }
 
-  private def trainClassifierVal(s: SparkSession, d: String): graft.operators.Classifier.Fit =
-    stored(s, d, ClassifierValFit) {
-      val docs = Tables.documents(s, d).withColumn("_lbl",
-        graft.operators.Classifier.langAgreeLabel(col("text"), col("lang")))
+  private def trainHeldOut(s: SparkSession, d: String, g: HeldOut): Classifier.Fit =
+    stored(s, d, g.fit) {
       // trainMod: auto on the TRAIN-side count (r19, r18 advice —
       // the pre-split count engaged the sampler when n just cleared
       // 2^23 even though the 80% train frame was still under the cap,
       // discarding training data; S=1 at every committed proof scale
       // either way, so no published weight moved)
-      val trainDocs = docs.filter(valBucket =!= 0)
-      graft.operators.Classifier.fit(trainDocs,
+      val trainDocs = Tables.documents(s, d).withColumn("_lbl", g.label)
+        .filter(valBucket =!= 0)
+      Classifier.fit(trainDocs,
         "doc_id", "text", "_lbl", d = classifierD, epochs = 16, lr = 8.0,
-        trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
-        bigrams = true)
+        trainMod = Classifier.autoTrainMod(trainDocs.count()),
+        bigrams = g.feats.isEmpty, featsCol = g.feats)
     }
 
   // the calibrated operating cut (Classifier.calibrateCut — the
   // executable threshold rule), chosen on the TRAIN side only (picking
   // it on val would leak) and interpolated into the oracle as an
   // integer-bucket literal like the trained weights
-  private val ClassifierValCut = s"$ClassifierValFit|cut"
-
-  private def trainClassifierValCut(s: SparkSession, d: String): Long =
-    stored(s, d, ClassifierValCut) {
-      val fit = trainClassifierVal(s, d)
-      val logit = T.classifierMargin(col("text"), fit.weightSeq, fit.bias)
-      val label = graft.operators.Classifier.langAgreeLabel(col("text"), col("lang"))
-      graft.operators.Classifier.calibrateCut(
+  private def heldOutCut(s: SparkSession, d: String, g: HeldOut): Long =
+    stored(s, d, g.cut) {
+      val fit = trainHeldOut(s, d, g)
+      Classifier.calibrateCut(
         Tables.documents(s, d).filter(valBucket =!= 0)
-          .select(logit.as("m"), label.as("y")), "m", "y")
+          .select(g.logit(fit).as("m"), g.label.as("y")), "m", "y")
     }
 
-  private val classifierVal: Q = (s, d) => {
-    val fit = trainClassifierVal(s, d)
-    val cut = trainClassifierValCut(s, d)
-    val logit = T.classifierMargin(col("text"), fit.weightSeq, fit.bias)
-    val label = graft.operators.Classifier.langAgreeLabel(col("text"), col("lang"))
+  /** The held-out gate table of `g`: per-source and '__all__'
+    * accuracy, calibrated-cut accuracy, base rate, AUC and the floor
+    * verdict over the val split. Both held-out gates' one evaluator. */
+  private def heldOut(s: SparkSession, d: String, g: HeldOut): DataFrame = {
+    val fit = trainHeldOut(s, d, g)
+    val cut = heldOutCut(s, d, g)
     val v = Tables.documents(s, d)
       .filter(valBucket === 0)
-      .select(col("source"), logit.as("lg"), label.as("lbl"))
+      .select(col("source"), g.logit(fit).as("lg"), g.label.as("lbl"))
       .localCheckpoint(eager = true) // scored once; two consumers below
     // per-source rows + the '__all__' roll-up the floor verdict
     // anchors on (per-source slices are sparse at spec scale)
@@ -2800,31 +2607,35 @@ object LlmData {
           .as("auc"),
         // floor in exact-arithmetic space: contrib ≥ floor·np·nn
         when(col("tp") * col("tn") > 0L &&
-            col("contrib") >= lit(classifierValFloor)
+            col("contrib") >= lit(g.floor)
               * col("tp").cast("double") * col("tn").cast("double"), 1L)
           .otherwise(0L).as("meets_floor"))
       .orderBy("source")
   }
 
+  private val ClassifierValFit = s"classifierValFit|d$classifierD|epochs16|lr8|bigrams"
+  private val ClassifierValCut = s"$ClassifierValFit|cut"
+
+  private def classifierValGate = HeldOut(ClassifierValFit, ClassifierValCut,
+    Classifier.langAgreeLabel(col("text"), col("lang")), None, classifierValFloor)
+
+  private val classifierVal: Q = (s, d) => heldOut(s, d, classifierValGate)
+
   private def classifierValSql(fit: graft.operators.Classifier.Fit,
                                cut: Long): String =
     s"""WITH ${classifierCtes(fit)},
        |lbl AS (SELECT doc_id,
-       |         CASE WHEN (CASE
-       |          WHEN len(regexp_extract_all(text, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all(text, '\\b(der|die|und|das|ist)\\b'))
-       |           AND len(regexp_extract_all(text, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all(text, '\\b(el|la|los|de|que)\\b'))
-       |           AND len(regexp_extract_all(text, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all(text, '\\b(le|la|les|et|des)\\b'))
-       |          THEN 'en'
-       |          WHEN len(regexp_extract_all(text, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all(text, '\\b(el|la|los|de|que)\\b'))
-       |           AND len(regexp_extract_all(text, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all(text, '\\b(le|la|les|et|des)\\b'))
-       |          THEN 'de'
-       |          WHEN len(regexp_extract_all(text, '\\b(el|la|los|de|que)\\b')) >= len(regexp_extract_all(text, '\\b(le|la|les|et|des)\\b'))
-       |          THEN 'es'
-       |          ELSE 'fr' END) = lang THEN 1 ELSE 0 END AS y,
+       |         CASE WHEN (${langIdCaseSql("text")}) = lang THEN 1 ELSE 0 END AS y,
        |         TRY_CAST('0x' || substr(md5('cvsplit:' || text), 1, 15)
        |           AS BIGINT) % 5 AS vb
        |        FROM documents),
-       |v AS (SELECT lg.source, lg.logit, lbl.y
+       |${heldOutTailSql(cut, classifierValFloor)}""".stripMargin
+
+  /** The held-out oracles' shared tail over `lg` (margins) and `lbl`
+    * (label `y`, val bucket `vb`): the val split, its '__all__'
+    * roll-up, the accuracy / cut / AUC / `floor` table. */
+  private def heldOutTailSql(cut: Long, floor: Double): String =
+    s"""v AS (SELECT lg.source, lg.logit, lbl.y
        |      FROM lg JOIN lbl ON lg.doc_id = lbl.doc_id WHERE lbl.vb = 0),
        |v2 AS (SELECT source, logit, y FROM v
        |       UNION ALL SELECT '__all__', logit, y FROM v),
@@ -2860,7 +2671,7 @@ object LlmData {
        |    THEN u.contrib / (CAST(u.tp AS DOUBLE) * CAST(u.tn AS DOUBLE))
        |    END AS auc,
        |  CAST(CASE WHEN u.tp * u.tn > 0
-       |    AND u.contrib >= $classifierValFloor
+       |    AND u.contrib >= $floor
        |      * CAST(u.tp AS DOUBLE) * CAST(u.tn AS DOUBLE)
        |    THEN 1 ELSE 0 END AS BIGINT) AS meets_floor
        |FROM agg a JOIN aucs u USING (source) ORDER BY a.source""".stripMargin
@@ -2934,107 +2745,15 @@ object LlmData {
   }
 
   private val ClassifierValQFit = s"classifierValQFit|d$classifierD|epochs16|lr8|qcToks"
-
-  private def trainClassifierValQ(s: SparkSession, d: String): graft.operators.Classifier.Fit =
-    stored(s, d, ClassifierValQFit) {
-      val docs = Tables.documents(s, d).withColumn("_lbl", qcLabel)
-      // train-side autoTrainMod — same r19 fix as trainClassifierVal
-      val trainDocs = docs.filter(valBucket =!= 0)
-      graft.operators.Classifier.fit(trainDocs,
-        "doc_id", "text", "_lbl", d = classifierD, epochs = 16, lr = 8.0,
-        trainMod = graft.operators.Classifier.autoTrainMod(trainDocs.count()),
-        bigrams = false, featsCol = Some(qcToks))
-    }
-
   // the calibrated operating cut for the quality-composite gate
   // (r19 — the t_classifier_val discipline carried to the seed whose
-  // floor the task actually supports): chosen on TRAIN only,
-  // interpolated into the oracle as an integer-bucket literal
+  // floor the task actually supports)
   private val ClassifierValQCut = s"$ClassifierValQFit|cut"
 
-  private def trainClassifierValQCut(s: SparkSession, d: String): Long =
-    stored(s, d, ClassifierValQCut) {
-      val fit = trainClassifierValQ(s, d)
-      val logit = T.classifierLogit(qcToks, fit.weightSeq, fit.bias)
-      graft.operators.Classifier.calibrateCut(
-        Tables.documents(s, d).filter(valBucket =!= 0)
-          .select(logit.as("m"), qcLabel.as("y")), "m", "y")
-    }
+  private def classifierValQGate = HeldOut(ClassifierValQFit, ClassifierValQCut,
+    qcLabel, Some(qcToks), classifierValQFloor)
 
-  private val classifierValQ: Q = (s, d) => {
-    val fit = trainClassifierValQ(s, d)
-    val cut = trainClassifierValQCut(s, d)
-    val logit = T.classifierLogit(qcToks, fit.weightSeq, fit.bias)
-    val v = Tables.documents(s, d)
-      .filter(valBucket === 0)
-      .select(col("source"), logit.as("lg"), qcLabel.as("lbl"))
-      .localCheckpoint(eager = true) // scored once; two consumers below
-    val v2 = v.unionAll(v.select(lit("__all__").as("source"),
-      col("lg"), col("lbl")))
-    val acc = v2.groupBy("source")
-      .agg(count(lit(1)).as("n_val"),
-        sum(when((col("lg") >= 0.0d) === (col("lbl") === 1L), 1L)
-          .otherwise(0L)).as("n_correct"),
-        // the CALIBRATED decision (integer-space, hash-exact): keep
-        // iff floor(margin·10) ≥ the train-side cut
-        sum(when((floor(col("lg") * 10.0d).cast("long") >= cut)
-            === (col("lbl") === 1L), 1L)
-          .otherwise(0L)).as("n_cut_correct"),
-        sum(col("lbl")).as("n_pos"))
-    // AUC rank-sum over the margin-frequency frame — the
-    // t_classifier_val machinery verbatim (ShardedWindow prefix sum,
-    // exact half-integer contrib)
-    val mf = v2.groupBy(col("source"), col("lg").as("m"))
-      .agg(sum(col("lbl")).as("np"),
-        (count(lit(1)) - sum(col("lbl"))).as("nn"))
-    val cum = graft.operators.ShardedWindow.runningSum(mf, "source",
-      shard = floor(col("m") * 1024.0d), order = Seq(col("m")),
-      value = col("nn"), out = "cumnn")
-    val auc = cum.groupBy("source")
-      .agg(sum(col("np")).as("tp"), sum(col("nn")).as("tn"),
-        sum(col("np").cast("double")
-          * (col("cumnn").cast("double") - lit(0.5d) * col("nn").cast("double")))
-          .as("contrib"))
-    acc.join(auc, "source")
-      .select(col("source"), col("n_val"), col("n_correct"),
-        (col("n_correct").cast("double") / col("n_val").cast("double"))
-          .as("accuracy"),
-        lit(cut).as("cut_bucket"),
-        (col("n_cut_correct").cast("double") / col("n_val").cast("double"))
-          .as("cut_accuracy"),
-        (greatest(col("n_pos"), col("n_val") - col("n_pos")).cast("double")
-          / col("n_val").cast("double")).as("base_rate"),
-        // the calibrated cut must at least match the majority-class
-        // guesser on unseen docs — exact integer compare (the
-        // t_classifier_val gate verdict, now on the supported seed)
-        when(col("n_cut_correct").cast("double") >=
-            greatest(col("n_pos"), col("n_val") - col("n_pos"))
-              .cast("double"), 1L)
-          .otherwise(0L).as("cut_beats_base"),
-        when(col("tp") * col("tn") > 0L,
-          col("contrib") / (col("tp").cast("double") * col("tn").cast("double")))
-          .as("auc"),
-        when(col("tp") * col("tn") > 0L &&
-            col("contrib") >= lit(classifierValQFloor)
-              * col("tp").cast("double") * col("tn").cast("double"), 1L)
-          .otherwise(0L).as("meets_floor"))
-      .orderBy("source")
-  }
-
-  /** The langId replay CASE (the proven t_langid / t_classifier_val
-    * formulation) as an expression over a `text` column reference. */
-  private def langIdCaseSql(textRef: String): String =
-    s"""(CASE
-       | WHEN len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b'))
-       |  AND len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b'))
-       |  AND len(regexp_extract_all($textRef, '\\b(the|and|of|to|in)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
-       | THEN 'en'
-       | WHEN len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b'))
-       |  AND len(regexp_extract_all($textRef, '\\b(der|die|und|das|ist)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
-       | THEN 'de'
-       | WHEN len(regexp_extract_all($textRef, '\\b(el|la|los|de|que)\\b')) >= len(regexp_extract_all($textRef, '\\b(le|la|les|et|des)\\b'))
-       | THEN 'es'
-       | ELSE 'fr' END)""".stripMargin
+  private val classifierValQ: Q = (s, d) => heldOut(s, d, classifierValQGate)
 
   /** `src` swaps the documents scan (ALT overlay: the val bucket is
     * decided per doc by the cvsplit hash and the output reads ONLY
@@ -3069,7 +2788,7 @@ object LlmData {
        |    + CAST(len(regexp_extract_all(r.text, '\\b(the|a|an|and|or|of|to|in|is|are)\\b')) AS DOUBLE)
        |       / len(rt) * 0.3
        |    + CAST(len(regexp_extract_all(r.text, '[A-Za-z]')) AS DOUBLE) / length(r.text) * 0.4, 6) AS q,
-       |   ${langIdCaseSql("r.text")} AS lid
+       |   (${langIdCaseSql("r.text")}) AS lid
        |  FROM rawt r JOIN wcov USING (doc_id)),
        |stok AS (SELECT doc_id, unnest([
        |   'len:' || CAST(LEAST(length(bin(ntokr)) - 1, 12) AS VARCHAR),
@@ -3099,46 +2818,7 @@ object LlmData {
        |         TRY_CAST('0x' || substr(md5('cvsplit:' || r.text), 1, 15)
        |           AS BIGINT) % 5 AS vb
        |        FROM stats s JOIN rawt r USING (doc_id)),
-       |v AS (SELECT lg.source, lg.logit, lbl.y
-       |      FROM lg JOIN lbl ON lg.doc_id = lbl.doc_id WHERE lbl.vb = 0),
-       |v2 AS (SELECT source, logit, y FROM v
-       |       UNION ALL SELECT '__all__', logit, y FROM v),
-       |agg AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_val,
-       |         CAST(SUM(CASE WHEN (logit >= 0) = (y = 1)
-       |           THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-       |         CAST(SUM(CASE WHEN (CAST(FLOOR(logit * 10) AS BIGINT) >= $cut)
-       |           = (y = 1) THEN 1 ELSE 0 END) AS BIGINT) AS n_cut_correct,
-       |         CAST(SUM(y) AS BIGINT) AS n_pos
-       |        FROM v2 GROUP BY source),
-       |mf AS (SELECT source, logit AS m, CAST(SUM(y) AS BIGINT) AS np,
-       |        CAST(COUNT(*) - SUM(y) AS BIGINT) AS nn
-       |       FROM v2 GROUP BY source, logit),
-       |cum AS (SELECT *, SUM(nn) OVER (PARTITION BY source ORDER BY m
-       |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumnn
-       |        FROM mf),
-       |aucs AS (SELECT source, CAST(SUM(np) AS BIGINT) AS tp,
-       |          CAST(SUM(nn) AS BIGINT) AS tn,
-       |          SUM(CAST(np AS DOUBLE)
-       |            * (CAST(cumnn AS DOUBLE) - 0.5 * CAST(nn AS DOUBLE))) AS contrib
-       |         FROM cum GROUP BY source)
-       |SELECT a.source, a.n_val, a.n_correct,
-       |  CAST(a.n_correct AS DOUBLE) / CAST(a.n_val AS DOUBLE) AS accuracy,
-       |  CAST($cut AS BIGINT) AS cut_bucket,
-       |  CAST(a.n_cut_correct AS DOUBLE) / CAST(a.n_val AS DOUBLE)
-       |    AS cut_accuracy,
-       |  CAST(GREATEST(a.n_pos, a.n_val - a.n_pos) AS DOUBLE)
-       |    / CAST(a.n_val AS DOUBLE) AS base_rate,
-       |  CAST(CASE WHEN CAST(a.n_cut_correct AS DOUBLE)
-       |    >= CAST(GREATEST(a.n_pos, a.n_val - a.n_pos) AS DOUBLE)
-       |    THEN 1 ELSE 0 END AS BIGINT) AS cut_beats_base,
-       |  CASE WHEN u.tp * u.tn > 0
-       |    THEN u.contrib / (CAST(u.tp AS DOUBLE) * CAST(u.tn AS DOUBLE))
-       |    END AS auc,
-       |  CAST(CASE WHEN u.tp * u.tn > 0
-       |    AND u.contrib >= $classifierValQFloor
-       |      * CAST(u.tp AS DOUBLE) * CAST(u.tn AS DOUBLE)
-       |    THEN 1 ELSE 0 END AS BIGINT) AS meets_floor
-       |FROM agg a JOIN aucs u USING (source) ORDER BY a.source""".stripMargin
+       |${heldOutTailSql(cut, classifierValQFloor)}""".stripMargin
 
   // --------------------------------------------------------- t_tokens
   private val tokens: Q = (s, d) => {
@@ -3385,11 +3065,16 @@ object LlmData {
       .orderBy("doc_id")
   }
 
-  private val contaminationSql =
-    """WITH f AS (SELECT doc_id,
-      |    CASE WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 90 THEN 'train'
+  /** The 90/5/5 train/val/test split of a document, from the md5
+    * of `'split:' || text` — the decontamination oracles' one copy. */
+  private val splitCaseSql =
+    """CASE WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 90 THEN 'train'
       |         WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 95 THEN 'val'
-      |         ELSE 'test' END AS split,
+      |         ELSE 'test' END""".stripMargin
+
+  private val contaminationSql =
+    s"""WITH f AS (SELECT doc_id,
+      |    $splitCaseSql AS split,
       |    md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fp
       |   FROM documents),
       |tr AS (SELECT fp, COUNT(*) AS n_train_matches FROM f WHERE split = 'train' GROUP BY fp)
@@ -3427,10 +3112,8 @@ object LlmData {
   }
 
   private val ngramContamSql =
-    """WITH f AS (SELECT doc_id,
-      |    CASE WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 90 THEN 'train'
-      |         WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 95 THEN 'val'
-      |         ELSE 'test' END AS split,
+    s"""WITH f AS (SELECT doc_id,
+      |    $splitCaseSql AS split,
       |    string_split(text, ' ') AS t
       |   FROM documents),
       |g AS (SELECT doc_id, split, array_to_string(t[i:i+4], ' ') AS gram
@@ -3976,7 +3659,9 @@ object LlmData {
       .orderBy("doc_id", "frame_idx")
   }
 
-  private val videoRealSql =
+  /** The generated video corpus's per-doc geometry and clock (`v`)
+    * and one row per frame (`f`): every video oracle's frame table. */
+  private val videoFramesCtes =
     """WITH v AS (SELECT doc_id,
       |    CAST(doc_id % 32 + 8 AS INTEGER) AS width,
       |    CAST(doc_id % 24 + 8 AS INTEGER) AS height,
@@ -3984,7 +3669,10 @@ object LlmData {
       |    (doc_id % 4 + 1) * 1000 AS rate
       |  FROM documents),
       |f AS (SELECT doc_id, width, height, n_frames, rate,
-      |   unnest(generate_series(0, n_frames - 1)) AS frame_idx FROM v)
+      |   unnest(generate_series(0, n_frames - 1)) AS frame_idx FROM v)""".stripMargin
+
+  private val videoRealSql =
+    s"""$videoFramesCtes
       |SELECT doc_id, n_frames, CAST(frame_idx AS INTEGER) AS frame_idx,
       | width, height,
       | FLOOR(CAST((doc_id * 11 + frame_idx * 31) % 256 AS DOUBLE) * 100
@@ -4054,14 +3742,7 @@ object LlmData {
   }
 
   private val videoMjpegSql =
-    """WITH v AS (SELECT doc_id,
-      |    CAST(doc_id % 32 + 8 AS INTEGER) AS width,
-      |    CAST(doc_id % 24 + 8 AS INTEGER) AS height,
-      |    CAST(doc_id % 5 + 2 AS INTEGER) AS n_frames,
-      |    (doc_id % 4 + 1) * 1000 AS rate
-      |  FROM documents),
-      |f AS (SELECT doc_id, width, height, n_frames, rate,
-      |   unnest(generate_series(0, n_frames - 1)) AS frame_idx FROM v)
+    s"""$videoFramesCtes
       |SELECT doc_id, n_frames, CAST(frame_idx AS INTEGER) AS frame_idx,
       | width, height, TRUE AS in_band,
       | FLOOR(CAST(rate AS DOUBLE) / 100 * 1000 + 0.5) / 1000 AS fps_q,
@@ -4130,14 +3811,7 @@ object LlmData {
   }
 
   private val videoMjpegPlaneSql =
-    """WITH v AS (SELECT doc_id,
-      |    CAST(doc_id % 32 + 8 AS INTEGER) AS width,
-      |    CAST(doc_id % 24 + 8 AS INTEGER) AS height,
-      |    CAST(doc_id % 5 + 2 AS INTEGER) AS n_frames,
-      |    (doc_id % 4 + 1) * 1000 AS rate
-      |  FROM documents),
-      |f AS (SELECT doc_id, width, height, n_frames, rate,
-      |   unnest(generate_series(0, n_frames - 1)) AS frame_idx FROM v)
+    s"""$videoFramesCtes
       |SELECT doc_id, n_frames, CAST(frame_idx AS INTEGER) AS frame_idx,
       | width, height, TRUE AS in_band, TRUE AS sx_ok, TRUE AS sy_ok,
       | FLOOR(CAST(rate AS DOUBLE) / 100 * 1000 + 0.5) / 1000 AS fps_q,
@@ -4594,17 +4268,7 @@ object LlmData {
 
   // identical semantics to d_contamination — deliberately: the oracle
   // pins that the bloom-prefiltered plan loses/invents nothing
-  private val bloomContamSql =
-    """WITH f AS (SELECT doc_id,
-      |    CASE WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 90 THEN 'train'
-      |         WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 95 THEN 'val'
-      |         ELSE 'test' END AS split,
-      |    md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fp
-      |   FROM documents),
-      |tr AS (SELECT fp, COUNT(*) AS n_train_matches FROM f WHERE split = 'train' GROUP BY fp)
-      |SELECT f.doc_id, f.split, f.fp, tr.n_train_matches
-      |FROM f JOIN tr USING (fp) WHERE f.split <> 'train'
-      |ORDER BY f.doc_id""".stripMargin
+  private val bloomContamSql = contaminationSql
 
   // ---------------------------------------------------------- t_zipf
   // Zipf coefficient per source: −slope of the least-squares fit of
@@ -4700,22 +4364,9 @@ object LlmData {
       .orderBy("bucket")
   }
 
-  private val blockProfileSql = {
-    val planeCte = Similarity.hyperplanes(6, 64).zipWithIndex.map {
-      case (p, j) =>
-        s"SELECT $j AS j, unnest([${p.mkString(",")}]) AS p, " +
-          "unnest(generate_series(1, 64)) AS i"
-    }.mkString("\nUNION ALL ")
-    s"""WITH flat AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-       |               unnest(generate_series(1, len(embedding))) AS i
-       |              FROM embeddings),
-       |planes AS ($planeCte),
-       |proj AS (SELECT f.vec_id, pl.j, SUM(f.x * pl.p) AS pr
-       |         FROM flat f JOIN planes pl ON f.i = pl.i
-       |         GROUP BY f.vec_id, pl.j),
-       |buckets AS (SELECT vec_id,
-       |              CAST(SUM(CASE WHEN pr > 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
-       |            FROM proj GROUP BY vec_id),
+  private val blockProfileSql =
+    s"""WITH $flatCte,
+       |$semBucketCtes,
        |q AS (SELECT doc_id,
        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
        |       CAST(ROUND(
@@ -4731,7 +4382,6 @@ object LlmData {
        |   / 1000000 AS mean_quality
        |FROM buckets b JOIN q ON q.doc_id = b.vec_id
        |GROUP BY b.bucket ORDER BY b.bucket""".stripMargin
-  }
 
   // ------------------------------------------------ d_neardup_contam
   // FUZZY cross-split decontamination: eval/val docs with a MinHash-
@@ -4762,36 +4412,13 @@ object LlmData {
       .orderBy("eval_id")
   }
 
-  private val neardupContamSql = {
-    val P = Dedup.MinhashP
-    val coeffs = Dedup.minhashCoeffs(16)
-    val mhAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a * x + $b) % $P) AS mh$i"
-    }.mkString(",\n        ")
-    val bandSelects = (0 until 4).map { j =>
-      val cols = (0 until 4).map(r => s"mh${j * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $j AS band, md5(concat_ws('|', $cols)) AS band_hash FROM mh"
-    }.mkString("\n       UNION ALL ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |starts AS (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks),
-       |sh AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM starts),
-       |shx AS (SELECT doc_id,
-       |         TRY_CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $P AS x
-       |        FROM sh),
-       |mh AS (SELECT doc_id,
-       |        $mhAggs
-       |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandSelects),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |          FROM bands a JOIN bands b
-       |            ON a.band = b.band AND a.band_hash = b.band_hash
-       |           AND a.doc_id < b.doc_id),
+  private val neardupContamSql =
+    s"""${minhashBandCtes()},
+       |${minhashPairsCte()},
        |sym AS (SELECT id1 AS eval_id, id2 AS other_id FROM pairs
        |        UNION ALL SELECT id2, id1 FROM pairs),
        |sp AS (SELECT doc_id,
-       |    CASE WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 90 THEN 'train'
-       |         WHEN TRY_CAST('0x' || substr(md5('split:' || text), 1, 15) AS BIGINT) % 100 < 95 THEN 'val'
-       |         ELSE 'test' END AS split
+       |    $splitCaseSql AS split
        |   FROM documents)
        |SELECT y.eval_id, se.split, COUNT(*) AS n_train_neardups
        |FROM sym y JOIN sp se ON se.doc_id = y.eval_id
@@ -4799,7 +4426,6 @@ object LlmData {
        |WHERE se.split <> 'train' AND so.split = 'train'
        |GROUP BY y.eval_id, se.split
        |ORDER BY y.eval_id""".stripMargin
-  }
 
   // ------------------------------------------------- d_source_overlap
   // Pairwise source-overlap matrix: for each ordered source pair,
@@ -5183,8 +4809,8 @@ object LlmData {
     "_store_pq" -> ((s, d) => { trainPq(s, d); () }),
     "_store_pqres" -> ((s, d) => { trainIvfPqResidual(s, d); () }),
     "_store_classifier" -> ((s, d) => { trainClassifier(s, d); () }),
-    "_store_classifierval" -> ((s, d) => { trainClassifierVal(s, d); () }),
-    "_store_classifiervalq" -> ((s, d) => { trainClassifierValQ(s, d); () }),
+    "_store_classifierval" -> ((s, d) => { trainHeldOut(s, d, classifierValGate); () }),
+    "_store_classifiervalq" -> ((s, d) => { trainHeldOut(s, d, classifierValQGate); () }),
     "_store_exacttopk" -> ((s, d) => { exactTop3(s, d); () }),
     "_store_exactfilt" -> ((s, d) => { exactFilteredTop3(s, d); () }),
     "_store_annindex" -> ((s, d) => { annIndexDir(s, d); () }),

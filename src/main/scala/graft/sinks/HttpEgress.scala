@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * envelopes of a live micro-batch that is one task's work arrive on
   * one partition ([[graft.sinks.RestBatcher.envelopes]]), so one task
   * POSTs them all, in the stage that built them. Every task of a JVM
-  * shares one HttpClient per connect timeout ([[client]]): a client
-  * holds a selector thread until it is collected, so one per
-  * partition would pile up threads, and a shared one keeps its
-  * connections open for the next micro-batch. The
+  * shares one HttpClient ([[client]]): a client holds a selector
+  * thread until it is collected, so one per partition would pile up
+  * threads, and a shared one keeps its connections open for the next
+  * micro-batch. Connect and request timeouts are both
+  * [[TimeoutMs]]. The
   * returned frame is exactly the ack shape [[graft.operators.Router.ackLedger]]
   * consumes; a network-level failure (connect/timeout) yields the
   * pseudo-code 599 — retryable, like the reference treating transport
@@ -31,19 +32,17 @@ import org.apache.spark.sql.functions._
   */
 object HttpEgress {
 
-  private val clients = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, HttpClient]()
+  private val TimeoutMs = 10000L
 
-  /** The JVM's one client for `connectTimeoutMs`. */
-  private[graft] def client(connectTimeoutMs: Long): HttpClient =
-    clients.computeIfAbsent(connectTimeoutMs, ms =>
-      HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms)).build())
+  /** The JVM's one egress client. */
+  private lazy val client: HttpClient =
+    HttpClient.newBuilder().connectTimeout(Duration.ofMillis(TimeoutMs)).build()
 
   /** One delivery pass: POST every envelope row, return acks
     * (dest, batch_id, attempt, code, ack_ms). */
   def postEnvelopes(envelopes: DataFrame, destCol: String,
                     batchIdCol: String, bodyCol: String,
-                    urlByDest: Map[String, String], attempt: Int,
-                    timeoutMs: Long = 10000L): DataFrame = {
+                    urlByDest: Map[String, String], attempt: Int): DataFrame = {
     val spark = envelopes.sparkSession
     import spark.implicits._
     envelopes
@@ -57,10 +56,10 @@ object HttpEgress {
             case Some(url) =>
               try {
                 val req = HttpRequest.newBuilder(URI.create(url))
-                  .timeout(Duration.ofMillis(timeoutMs))
+                  .timeout(Duration.ofMillis(TimeoutMs))
                   .header("Content-Type", "application/json")
                   .POST(HttpRequest.BodyPublishers.ofString(body)).build()
-                client(timeoutMs).send(req, HttpResponse.BodyHandlers.discarding())
+                client.send(req, HttpResponse.BodyHandlers.discarding())
                   .statusCode()
               } catch { case _: Exception => 599 } // transport error: retryable
           }
@@ -84,8 +83,7 @@ object HttpEgress {
   def streamDeliver(envelopes: DataFrame, destCol: String,
                     batchIdCol: String, bodyCol: String,
                     urlByDest: Map[String, String],
-                    attemptCol: Option[String] = None,
-                    timeoutMs: Long = 10000L)(
+                    attemptCol: Option[String] = None)(
       ackSink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     envelopes.writeStream.foreachBatch {
@@ -101,15 +99,15 @@ object HttpEgress {
                 .collect().map(_.getInt(0)).sorted
               val pinned = org.apache.spark.sql.graftbridge.ColumnBridge.pinCached(batch)
               val acks = attempts.map(a => postEnvelopes(pinned.filter(col(ac) === a),
-                  destCol, batchIdCol, bodyCol, urlByDest, a, timeoutMs))
+                  destCol, batchIdCol, bodyCol, urlByDest, a))
                 .reduceOption(_ unionByName _)
                 .getOrElse(postEnvelopes(pinned.limit(0), destCol, batchIdCol,
-                  bodyCol, urlByDest, 1, timeoutMs))
+                  bodyCol, urlByDest, 1))
               ackSink(acks, microBatchId)
             } finally batch.unpersist()
           case None =>
             ackSink(postEnvelopes(df.toDF(), destCol, batchIdCol, bodyCol,
-              urlByDest, 1, timeoutMs), microBatchId)
+              urlByDest, 1), microBatchId)
         }
     }
 
@@ -125,7 +123,6 @@ object HttpEgress {
                          batchIdCol: String, bodyCol: String,
                          urlByDest: Map[String, String],
                          maxRetry: Int, baseBackoffMs: Long,
-                         timeoutMs: Long = 10000L,
                          sleeper: Long => Unit = Thread.sleep): DataFrame = {
     import graft.operators.Router
     val keys = Seq(destCol, batchIdCol)
@@ -138,7 +135,7 @@ object HttpEgress {
     var attempt = 1
     while (attempt <= maxRetry && !pending.isEmpty) {
       val got = postEnvelopes(pending, destCol, batchIdCol, bodyCol,
-        urlByDest, attempt, timeoutMs).localCheckpoint(eager = true)
+        urlByDest, attempt).localCheckpoint(eager = true)
       acks = Some(acks.fold(got)(_ unionByName got))
       val retryable = ledgerOf(acks.get)
         .filter(col("state") === "waiting_retry")
@@ -150,6 +147,6 @@ object HttpEgress {
     }
     ledgerOf(acks.getOrElse(
       postEnvelopes(envelopes.limit(0), destCol, batchIdCol, bodyCol,
-        urlByDest, 1, timeoutMs)))
+        urlByDest, 1)))
   }
 }

@@ -37,13 +37,17 @@ class OperatorsSpec extends SparkSpec {
     val expected = df.withColumn("cum", sum(col("v")).over(w))
       .select("source", "row_id", "cum")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    for (shards <- Seq(4, 32)) {
+    for (shards <- Seq(1, 2, 3, 4, 32)) {
       val got = ShardedWindow.runningSum(df, "source",
           ShardedWindow.hashShard60(col("ph"), shards),
           Seq(col("ph"), col("row_id")), col("v"), "cum")
         .select("source", "row_id", "cum")
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(got == expected, s"shards=$shards")
+      // at most 2^ceil(log2 s) shards: a width of 1 is one range
+      val bound = Iterator.iterate(1)(_ * 2).find(_ >= shards).get
+      val used = df.select(ShardedWindow.hashShard60(col("ph"), shards)).distinct().count()
+      assert(used <= bound, s"shards=$shards used $used")
     }
     // hex-prefix shard variant over md5 string keys
     val hexDf = df.withColumn("k", md5(concat(col("row_id").cast("string"))))

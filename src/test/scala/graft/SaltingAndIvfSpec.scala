@@ -120,6 +120,17 @@ class SaltingAndIvfSpec extends SparkSpec {
     assert(ivfRecall >= 0.4, s"IVF recall@3 = $ivfRecall")
   }
 
+  test("recallAt3: hits over each query's exact count, 0 through the left join") {
+    // query 1: 2 exact neighbours, 1 approximate hit → 1/2, not 1/3;
+    // query 2: 3 exact neighbours, no approximate hit → 0 hits, 0.0
+    val exact = Seq((1L, 10L), (1L, 11L), (2L, 20L), (2L, 21L), (2L, 22L))
+      .toDF("qid", "cid")
+    val approx = Seq((1L, 10L), (1L, 12L), (1L, 13L), (2L, 29L)).toDF("qid", "cid")
+    val got = graft.queries.LlmData.recallAt3(exact, approx).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq((1L, 1L, 0.5), (2L, 0L, 0.0)))
+  }
+
   test("s_ivfpq_tuning: full grid, shortlist-monotone recall, floor holds, residual beats raw PQ") {
     val rows = SparkEntry.queries("s_ivfpq_tuning")(spark, sf).collect()
     assert(rows.length == 24, s"expected 8×3 grid, got ${rows.length}")

@@ -16,8 +16,10 @@ import scala.jdk.CollectionConverters._
   * tests), [[graft.operators.Widths]] is the one reader of a width
   * setting, [[graft.sources.Tables.read]] is the one parquet reader
   * (`read.parquet(` and `format("parquet")` reads appear only in
-  * `Tables.scala`), graft reads no session conf of its own, and no
-  * top-level type is left that nothing names. */
+  * `Tables.scala`), graft reads no session conf of its own, no
+  * top-level type is left that nothing names, and no 8-line run of
+  * code occurs twice in a file under `src/main/scala/graft/queries`
+  * (a shared CTE chain or evaluator is built once). */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -180,5 +182,23 @@ class SessionRulesSpec extends SparkSpec {
         }
     }.map { case ((f, _), name) => s"$f: $name" }
     assert(unnamed.isEmpty, s"top-level types nothing names: $unnamed")
+  }
+
+  test("no 8-line run of code occurs twice in a file under src/main/scala/graft/queries") {
+    // per file: drop blank, comment and SQL-comment (`|--`) lines,
+    // collapse whitespace, then every window of 8 kept lines must be
+    // unique; a repeat names both positions
+    val files = Files.walk(Paths.get("src/main/scala/graft/queries")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val clones = files.flatMap { (p: Path) =>
+      val kept = Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+        case (l, i) if { val t = l.trim
+            t.nonEmpty && !Seq("//", "*", "/*", "|--").exists(t.startsWith) } =>
+          (i + 1, l.trim.replaceAll("\\s+", " "))
+      }
+      kept.sliding(8).toSeq.groupBy(_.map(_._2)).values.filter(_.size > 1)
+        .map(_.map(w => s"${p.getFileName}:${w.head._1}").mkString(" = "))
+    }
+    assert(clones.isEmpty, s"${clones.size} repeated 8-line runs:\n${clones.sorted.mkString("\n")}")
   }
 }
