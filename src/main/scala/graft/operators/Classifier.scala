@@ -1,38 +1,37 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions
+import graft.plans.ClassifierKernelUtil
 
 /** In-engine training for the model-based quality filter
   * (TextFunctions.classifierLogit): a logistic head over hashed
   * unigram features, fit with full-batch gradient descent where every
-  * epoch is two distributed partial-agg passes — the DCLM/fastText
-  * seed-classifier recipe expressed as Spark aggregations instead of
-  * an external trainer.
+  * epoch is ONE Spark job — the DCLM/fastText seed-classifier recipe
+  * run in-engine instead of on an external trainer.
   *
-  * Scale shape (100 TB): the feature frame is built ONCE — (doc,
-  * bucket, count) rows, ≤ D per doc after the in-doc pre-aggregation
-  * — hash-partitioned by doc and checkpointed; each epoch then runs
-  *  (1) a margin pass: per-doc Σ cnt·w[b] with the current weights as
-  *      a broadcast literal array — the groupBy(doc) reuses the
-  *      checkpointed partitioning, so no epoch re-shuffles the frame;
-  *  (2) a gradient pass: residuals (a 3-double-per-doc frame, itself
-  *      hash(doc)-partitioned because it derives from the margin
-  *      groupBy) join back CO-PARTITIONED — a shuffled-hash join with
-  *      no exchange on either side and no per-document broadcast —
-  *      then one partial agg onto D buckets.
-  * Driver state is D+1 doubles. Training on a hash-selected sample
-  * (`trainMod`, the kmeans discipline) bounds epoch cost at any
-  * corpus size; scoring stays the row-local fold it always was.
+  * Scale shape (100 TB): the training documents are built ONCE into
+  * one persisted row each — label, feature-stream length, and the
+  * distinct buckets with their counts (≤ D per doc) — and each epoch
+  * folds every partition into D + 3 doubles (per-bucket gradient,
+  * logloss, residual sum, n) with the current weights in the task
+  * closure, summed on the driver: no shuffle, no join, no per-epoch
+  * checkpoint (the shape of MLlib's `GradientDescent`, one
+  * `treeAggregate` per iteration). Driver state is D+1 doubles.
+  * Training on a hash-selected sample (`trainMod`, the kmeans
+  * discipline) bounds epoch cost at any corpus size; scoring stays the
+  * row-local fold it always was.
   *
   * Determinism (the trained-literal oracle discipline): after every
   * update the weights SNAP to the dyadic grid 2⁻²⁰ (multiples of
   * 2⁻²⁰, clamped to [-8, 8]). Two consequences:
-  *  - run-to-run reproducibility: the distributed gradient sums can
-  *    differ by accumulation order at the few-ulp level; the 2⁻²⁰
-  *    grid absorbs that, so refitting yields bit-identical weights
-  *    (spec-pinned);
+  *  - run-to-run reproducibility: the partition sums are added in
+  *    partition-index order, and the 2⁻²⁰ grid absorbs any few-ulp
+  *    difference a different row layout would make, so refitting
+  *    yields bit-identical weights (spec-pinned);
   *  - the scored margin stays EXACT cross-engine: every partial sum
   *    of cnt·w products is a multiple of 2⁻²⁰ with magnitude ≤ 8·n,
   *    representable while n·2²³ < 2⁵³ — any real document — so the
@@ -109,170 +108,87 @@ object Classifier {
         graft.plans.ClassifierFeatures(
           org.apache.spark.sql.graftbridge.ColumnBridge.expression(baseToks)))
       else baseToks)
-    // (doc, bucket, cnt, y, ntok): the in-doc pre-agg collapses token
-    // repeats before anything shuffles. ONE exchange builds the frame
-    // (r21): hash-repartition the raw (id, y, text) rows by doc FIRST
-    // — tokenization then runs at full core count even when the source
-    // scan is a single split (the sf-bench parquet is one row group),
-    // and because hash(_id) clusters every downstream key set
-    // containing _id, the groupBy and the epoch-loop's groupBy/join
-    // all reuse this partitioning with no further exchange. _ntok is
-    // the feature-stream LENGTH, read off the token array row-locally
-    // (identical to the old sum-of-counts-over-window by definition —
-    // every token lands in exactly one bucket), which removes the
-    // full-frame Window sort the old build paid.
-    // Partition count is WORK-adaptive ([[Widths.of]]): the
-    // checkpointed frame is re-read by every margin+gradient pass, so
-    // the fit's work is ~bytes × (epochs+1). A kilobyte gate corpus
-    // stays at ONE partition, where the 17-epoch loop's per-stage
-    // floor is a single tiny task (a 32-way fan-out of the same corpus
-    // measured 2× SLOWER end-to-end — scheduling dominated the
-    // compute); sf0.1's 584 KB corpus at 17 passes fans to 3
-    // (measured below r21's 1-partition time); a decade-scale corpus
-    // reaches the width ceiling. Explicit N, because a column-only
-    // repartition is an AQE coalesce target and epochs then lose the
-    // layout entirely. Only a width that RAISES parallelism
-    // repartitions: a corpus already arriving in >= nPart splits
-    // tokenizes on its natural scan partitions (the 100× replicated
-    // dir lands in 100 — capping it at the derived count halved the
-    // busiest stage's cores), and the kilobyte gate corpus skips the
-    // exchange entirely.
-    // the feature frame is scoped to this fit — capture the
-    // checkpoint's backing RDDs and release them when the fit is
-    // done; Dataset.unpersist is a no-op on a localCheckpoint'd frame
-    // (it only uncaches the CacheManager entry, which a checkpoint
-    // never had), so without the RDD handle the blocks linger until
-    // ContextCleaner GC
+    // Partition count is WORK-adaptive ([[Widths.of]]): every epoch
+    // re-reads the document rows, so the fit's work is ~bytes ×
+    // (epochs+1). A kilobyte gate corpus stays at ONE partition, where
+    // each epoch is a single tiny task; a corpus arriving in fewer
+    // splits than that width (the sf-bench parquet is one row group)
+    // is hash-spread by doc before featurizing, and one already
+    // arriving wider keeps its natural scan partitions.
     val spread = Widths.raise(sample, Widths.of(sample, inflate = epochs + 1), col(idCol))
-    val raised = spread ne sample // raise returns its input otherwise
-    val aggd = spread
-      .select(col(idCol).as("_id"), col(labelCol).cast("double").as("_y"),
-        toks.as("_ta"))
-      .select(col("_id"), col("_y"),
-        size(col("_ta")).cast("double").as("_ntok"),
-        explode(col("_ta")).as("_tok"))
-      .groupBy(col("_id"), col("_y"), col("_ntok"),
-        TextFunctions.featureBucket(col("_tok"), d).as("_b"))
-      .agg(count(lit(1)).cast("double").as("_cnt"))
-    // the checkpointed frame must be hash(_id)-partitioned on BOTH
-    // build paths — the 17-epoch loop's groupBy(_id) and gradient
-    // join ride that layout exchange-free (guide §2.4). On the
-    // repartitioned path the groupBy reuses the explicit hash(_id)
-    // exchange; on the natural-splits path the groupBy exchanged on
-    // all four keys (which does NOT satisfy clustering on _id alone —
-    // pre-r22 every epoch re-exchanged there), so pay ONE compact
-    // feature-frame exchange at build to buy 17 exchange-free epochs.
-    val keyed =
-      if (raised) aggd
-      else aggd.repartition(math.max(1, math.min(sample.rdd.getNumPartitions,
-        Widths.ceiling(docs.sparkSession))), col("_id"))
-    // localCheckpointKeyed, not plain localCheckpoint: under AQE the
-    // checkpoint reports UnknownPartitioning and the epoch loop then
-    // re-exchanges the frame EVERY epoch (observed in the r22 before-
-    // plans) — the keyed wrapper re-labels the checkpoint with its
-    // true hash(_id) layout. Contract holds on both build paths: the
-    // last exchange below is an explicit-numPartitions repartition on
-    // _id (REPARTITION_BY_NUM — AQE never coalesces it) followed only
-    // by partition-local project/explode/agg.
-    val feat = org.apache.spark.sql.graftbridge.ColumnBridge
-      .localCheckpointKeyed(keyed, Seq("_id"))
-    val featRdds =
-      org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(feat)
+    val rows = spread.select(col(labelCol).cast("double"), toks)
+      .queryExecution.toRdd
+      .mapPartitions(_.flatMap(r => docRow(r.getDouble(0), r.getArray(1), d)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-    // n (the training-doc count) rides epoch 0's combined aggregation
-    // as sentinel −3 (resid has exactly one row per doc) instead of a
-    // separate count_distinct job; the epochs == 0 edge (no gradient
-    // job at all) falls back to the explicit count.
-    var n = 0L
-    def requireN(): Unit =
-      require(n > 0, "Classifier.fit: empty training frame")
-
-    var w = Array.fill(d)(0.0)
-    var bias = 0.0
-    val losses = Array.newBuilder[Double]
-
-    // epochs+1 margin passes bracket exactly `epochs` updates:
-    // losses(e) is the mean logloss after e updates, so losses.last
-    // evaluates the FINAL weights (no silently-unmeasured update)
-    for (e <- 0 to epochs) {
-      // weights ride a codegen reference object (BucketWeight), not a
-      // typedlit: at D=8192 the literal array blew janino's method
-      // limits and dropped the whole margin-pass aggregate to
-      // interpreted eval (r16 100× dump log); same arithmetic, so
-      // trained weights are bit-identical
-      val wb = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.plans.BucketWeight(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("_b")),
-          w.toIndexedSeq))
-      val margins = feat.groupBy("_id")
-        .agg((sum(col("_cnt") * wb)
-            / first(col("_ntok")) + lit(bias)).as("_m"),
-          first(col("_y")).as("_y"),
-          first(col("_ntok")).as("_ntok"))
-      // residual r = σ(m) − y; r/ntok is the per-doc factor every
-      // bucket gradient multiplies by its count
-      val residExpr = margins.select(col("_id"),
-        (lit(1.0) / (lit(1.0) + exp(-col("_m"))) - col("_y")).as("_r"),
-        (lit(1.0) / col("_ntok")).as("_inv"),
-        // logloss via the stable form ln(1+e^{-|m|}) + max(0, ∓m)
-        (log(lit(1.0) + exp(-abs(col("_m")))) +
-          when(col("_y") > 0.5, greatest(lit(0.0), -col("_m")))
-            .otherwise(greatest(lit(0.0), col("_m")))).as("_ll"))
-      if (e == epochs) {
-        // final evaluation: only the logloss of the trained weights is
-        // needed — one aggregation straight off the margin pass, no
-        // checkpoint, no gradient job
-        if (n == 0L) { // epochs == 0: no gradient job ever resolved n
-          n = feat.select(count_distinct(col("_id"))).head().getLong(0)
-          requireN()
+      var w = Array.fill(d)(0.0)
+      var bias = 0.0
+      val losses = Array.newBuilder[Double]
+      // epochs+1 passes bracket exactly `epochs` updates: losses(e) is
+      // the mean logloss after e updates, so losses.last evaluates the
+      // FINAL weights (no silently-unmeasured update)
+      for (e <- 0 to epochs) {
+        val (we, be) = (w, bias)
+        // summed in partition-index order, whatever order the tasks
+        // finish in
+        val sums = rows.mapPartitions(it => Iterator(epochSums(it, we, be)))
+          .collect().transpose.map(_.sum)
+        val n = sums.lift(d + 2).getOrElse(0.0)
+        require(n > 0, "Classifier.fit: empty training frame")
+        losses += sums(d) / n
+        if (e < epochs) {
+          w = w.indices.map(b => snap(w(b) - lr * sums(b) / n)).toArray
+          bias = snap(bias - lr * (sums(d + 1) / n))
         }
-        losses += residExpr.agg(sum(col("_ll"))).head().getDouble(0) / n
-      } else {
-        // keyed checkpoint again: resid physically inherits feat's
-        // hash(_id) layout (the margin pass is exchange-free), so the
-        // claim is true and the gradient join sees both sides
-        // co-partitioned
-        val resid = org.apache.spark.sql.graftbridge.ColumnBridge
-          .localCheckpointKeyed(residExpr, Seq("_id"))
-        val residRdds =
-          org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(resid)
-        try {
-          // r22: plain CO-PARTITIONED join, not broadcast(resid) —
-          // resid derives from feat.groupBy(_id), so both sides land
-          // hash(_id) in feat's partition count and the shuffled-hash
-          // join (resid builds: 3 doubles/doc, the narrow side) zips
-          // partitions with NO exchange and NO per-epoch broadcast of
-          // a per-document frame (guide §3.1/§2.4 — the r21 verdict's
-          // one remaining 100-TB scale risk: resid is one row per
-          // training doc, broadcast 17× per fit by construction).
-          // The epoch's logloss/bias sums ride the SAME job as the
-          // bucket gradients (sentinel keys −1/−2 unioned into the
-          // partial agg onto the bucket grid — guide §1.2, remove
-          // passes): ONE aggregation job per epoch where r21 ran a
-          // separate stats job (3 jobs/epoch → 2; the stats collect
-          // was ~a third of the fit's local wall at the gate SFs).
-          val gradRows = feat.join(
-              resid.select("_id", "_r", "_inv").hint("shuffle_hash"), "_id")
-            .select(col("_b"),
-              (col("_r") * col("_inv") * col("_cnt")).as("_x"))
-          val combined = gradRows
-            .unionByName(resid.select(lit(-1L).as("_b"), col("_ll").as("_x")))
-            .unionByName(resid.select(lit(-2L).as("_b"), col("_r").as("_x")))
-            .unionByName(resid.select(lit(-3L).as("_b"), lit(1.0).as("_x")))
-            .groupBy("_b")
-            .agg(sum(col("_x")).as("_g"))
-          val sums = combined
-            .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-          if (e == 0) { n = sums.getOrElse(-3L, 0.0).toLong; requireN() }
-          losses += sums(-1L) / n
-          w = w.indices.map(b =>
-            snap(w(b) - lr * sums.getOrElse(b.toLong, 0.0) / n)).toArray
-          bias = snap(bias - lr * (sums.getOrElse(-2L, 0.0) / n))
-        } finally residRdds.foreach(_.unpersist(blocking = false))
       }
+      Fit(w, bias, losses.result())
+    } finally rows.unpersist(blocking = false)
+  }
+
+  /** One training document: its 0/1 label, the length of its feature
+    * stream, and the distinct buckets its features hash to, each with
+    * its count. */
+  private final case class Doc(y: Double, ntok: Double,
+                               buckets: Array[Int], counts: Array[Int])
+
+  /** `feats` as a [[Doc]], bucketed by the md5-prefix hash the scoring
+    * kernel uses; a null or empty stream (null text) trains nothing. */
+  private def docRow(y: Double, feats: ArrayData, d: Int): Option[Doc] =
+    if (feats == null || feats.numElements() == 0) None
+    else {
+      val bs = (0 until feats.numElements())
+        .map(i => ClassifierKernelUtil.bucket(feats.getUTF8String(i).getBytes, d))
+        .groupMapReduce(identity)(_ => 1)(_ + _).toArray
+      Some(Doc(y, feats.numElements().toDouble, bs.map(_._1), bs.map(_._2)))
     }
-    Fit(w, bias, losses.result())
-    } finally featRdds.foreach(_.unpersist(blocking = false))
+
+  /** One partition's fold at weights `w`, bias `bias`: the gradient per
+    * bucket (Σ r/ntok·cnt, r = σ(m) − y), then the logloss sum, the
+    * residual sum and the document count. */
+  private def epochSums(docs: Iterator[Doc], w: Array[Double],
+                        bias: Double): Array[Double] = {
+    val d = w.length
+    val acc = new Array[Double](d + 3)
+    docs.foreach { doc =>
+      var s = 0.0
+      var i = 0
+      while (i < doc.buckets.length) {
+        s += doc.counts(i).toDouble * w(doc.buckets(i)); i += 1
+      }
+      val m = s / doc.ntok + bias
+      val r = 1.0 / (1.0 + StrictMath.exp(-m)) - doc.y
+      val inv = 1.0 / doc.ntok
+      i = 0
+      while (i < doc.buckets.length) {
+        acc(doc.buckets(i)) += r * inv * doc.counts(i).toDouble; i += 1
+      }
+      // logloss via the stable form ln(1+e^{-|m|}) + max(0, ∓m)
+      acc(d) += StrictMath.log(1.0 + StrictMath.exp(-math.abs(m))) +
+        (if (doc.y > 0.5) math.max(0.0, -m) else math.max(0.0, m))
+      acc(d + 1) += r
+      acc(d + 2) += 1.0
+    }
+    acc
   }
 
   /** The deterministic in-corpus seed label the gate's trained

@@ -133,8 +133,8 @@ object SessionStore {
   /** Run `build` and claim the persistent RDDs it registered: a diff
     * of `SparkContext.getPersistentRDDs` around the build.
     * Intermediates the build itself releases are gone before the
-    * diff, and nested builds (e.g. Classifier.fit's per-epoch
-    * checkpoints) are claimed with their parent. Caveat: a checkpoint
+    * diff, and nested builds (e.g. the fit a held-out cut builds
+    * first) are claimed with their parent. Caveat: a checkpoint
     * created CONCURRENTLY on another thread during a build can be
     * over-claimed (pqCodebooks trains its subspaces in parallel).
     * That is harmless for those: every concurrent training's sample

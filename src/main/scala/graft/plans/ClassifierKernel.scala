@@ -129,55 +129,6 @@ case class ClassifierFeatures(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Native weight lookup w(bucket) with the weights as a CODEGEN
-  * REFERENCE OBJECT instead of a literal array: at D=8192 the
-  * `element_at(typedlit(w), …)` form inlines 8192 doubles into the
-  * generated aggregate, blows janino's method limits (a 10k-line
-  * GeneratedClass, found by the r16 100× dump log), and silently
-  * falls back to interpreted eval for the whole training stage. Same
-  * arithmetic — one array index — so trained weights are bit-
-  * identical (every product/sum in the margin pass is dyadic-exact).
-  * Child is the long bucket (0-based); out-of-range → null, matching
-  * element_at's behavior one-off (fit buckets are pmod-bounded, so
-  * the branch never fires in practice). */
-case class BucketWeight(child: Expression, weights: IndexedSeq[Double])
-    extends UnaryExpression {
-
-  @transient private lazy val wArr: Array[Double] = weights.toArray
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bucket_weight"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bucket_weight requires an integral bucket, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val b = input match {
-      case l: java.lang.Long => l.toInt
-      case i: java.lang.Integer => i.intValue()
-    }
-    if (b < 0 || b >= wArr.length) null else java.lang.Double.valueOf(wArr(b))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("bucketWeights", wArr, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.freshName("bw")
-      s"""int $b = (int) $c;
-         |if ($b < 0 || $b >= $wRef.length) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $wRef[$b]; }
-         |""".stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BucketWeight =
-    copy(child = newChild)
-}
-
 object ClassifierKernelUtil {
 
   private val md5 = new ThreadLocal[MessageDigest] {

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * 64 KB method limit rejects the stage, silently falling back to
   * interpreted projection with per-expression dispatch over 1414
   * DotProducts per row (the r17 100× bench logged exactly this
-  * fallback; the typedlit-at-D=8192 BucketWeight lesson re-applied).
+  * fallback, as a D=8192 typedlit weight array once did for the
+  * classifier's training aggregate).
   * Here the centroid matrix rides `ctx.addReferenceObj` (kilobytes,
   * broadcast with the plan) and the generated code is one static
   * call — small, codegen-stable at ANY cell count, with the scan

@@ -2313,7 +2313,8 @@ object LlmData {
   // Scoring stays a row-local fold per doc — no explode, no shuffle:
   // at 100 TB the classifier is a projection over the corpus scan,
   // exactly like t_quality; training cost is bounded by the epoch
-  // count × two partial-agg passes (timed as _store_classifier).
+  // count × one fold job over the training documents (timed as
+  // _store_classifier).
   // D / epochs / lr chosen by held-out measurement (a grid over
   // (d, epochs, lr, bigrams) at sf0.01): r16 — with the fused
   // ClassifierMargin kernel paying for capacity, the grid re-ran at
@@ -2702,7 +2703,7 @@ object LlmData {
   // half-integer arithmetic. Scale shape at 100 TB: the stat tokens
   // are row-local projections over the same token array the word
   // stream reads; scoring stays one projection, training stays
-  // epochs × two partial-agg passes.
+  // one fold job per epoch.
   private val classifierValQFloor = 0.78125 // 25/32, dyadic
 
   /** Quantized-statistic tokens appended to the word stream — each a

@@ -83,48 +83,4 @@ object ColumnBridge {
         else df
       case _ => df
     }
-
-  /** `localCheckpoint(eager)` that KEEPS the frame's hash
-    * partitioning visible to the planner. Under AQE the checkpointed
-    * plan is an `AdaptiveSparkPlanExec`, whose `outputPartitioning`
-    * reports `UnknownPartitioning` — so a checkpoint taken to anchor
-    * an iterative loop silently drops the layout the loop was meant
-    * to reuse, and every iteration re-exchanges (observed r22: the
-    * classifier epoch loop's margin pass re-shuffled the checkpointed
-    * feature frame every epoch). This wrapper re-labels the
-    * checkpoint's `LogicalRDD` with `HashPartitioning(keyCols, n)`
-    * where n is the checkpoint RDD's real partition count.
-    *
-    * CORRECTNESS CONTRACT (caller's obligation): the frame's physical
-    * layout must genuinely be a hash(keyCols) distribution undisturbed
-    * downstream — i.e. the last exchange below the checkpoint is an
-    * explicit-numPartitions `repartition(n, keyCols…)` (whose
-    * REPARTITION_BY_NUM origin AQE never coalesces) followed only by
-    * partition-local operators (project/filter/aggregate). Claiming a
-    * layout the rows do not have yields silently wrong joins. */
-  def localCheckpointKeyed(df: org.apache.spark.sql.DataFrame,
-                           keyCols: Seq[String])
-      : org.apache.spark.sql.DataFrame = {
-    val cp = df.localCheckpoint(true)
-    cp match {
-      case c: org.apache.spark.sql.classic.Dataset[_] =>
-        c.queryExecution.analyzed match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            val keys = keyCols.map { k =>
-              lr.output.find(_.name == k).getOrElse(throw new
-                IllegalArgumentException(
-                  s"localCheckpointKeyed: no column '$k' in " +
-                    lr.output.map(_.name).mkString(", ")))
-            }
-            val part = org.apache.spark.sql.catalyst.plans.physical
-              .HashPartitioning(keys, lr.rdd.getNumPartitions)
-            val keyed = new org.apache.spark.sql.execution.LogicalRDD(
-              lr.output, lr.rdd, part, lr.outputOrdering, lr.isStreaming,
-              lr.stream)(c.sparkSession, None, None)
-            org.apache.spark.sql.classic.Dataset.ofRows(c.sparkSession, keyed)
-          case _ => cp
-        }
-      case _ => cp
-    }
-  }
 }

@@ -181,6 +181,15 @@ class ClassifierSpec extends SparkSpec {
     assert(sampled.losses.toSeq == manual.losses.toSeq)
   }
 
+  test("a fit runs one job per epoch: at most epochs + 3 jobs at the gate's 16 epochs") {
+    val epochs = 16
+    val (jobs, _) = underGroup {
+      Classifier.fit(docs, "doc_id", "text", "_lbl",
+        d = 8192, epochs = epochs, lr = 8.0, bigrams = true)
+    }
+    assert(jobs <= epochs + 3, s"$jobs jobs for $epochs epochs")
+  }
+
   test("calibrateCut maximizes bucketed accuracy, lowest cut on ties") {
     import spark.implicits._
     // margins bucket to -2, 0, 1; positives concentrate at bucket >= 0

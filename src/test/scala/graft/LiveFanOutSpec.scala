@@ -206,10 +206,14 @@ class LiveFanOutSpec extends SparkSpec {
 
   test("pinCached: a partitioned LogicalRDD's union reads the cache; rows survive unpersist") {
     // the frame foreachBatch hands over after a shuffle, in miniature:
-    // a LogicalRDD that reports hash partitioning on its key
-    val keyed = ColumnBridge.localCheckpointKeyed(
-      spark.range(0, 200, 1, 3).select(col("id"), (col("id") % 7).as("g"))
-        .repartition(4, col("id")), Seq("id")).persist()
+    // a LogicalRDD that reports hash partitioning on its key. Without
+    // AQE a checkpoint keeps the partitioning of its last exchange.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val keyed =
+      try spark.range(0, 200, 1, 3).select(col("id"), (col("id") % 7).as("g"))
+        .repartition(4, col("id")).localCheckpoint().persist()
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     val union3 = (f: DataFrame) =>
       Seq(0L, 1L, 2L).map(g => f.filter(col("g") === g)).reduce(_ unionByName _)
     try {

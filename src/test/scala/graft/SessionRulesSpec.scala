@@ -17,9 +17,11 @@ import scala.jdk.CollectionConverters._
   * setting, [[graft.sources.Tables.read]] is the one parquet reader
   * (`read.parquet(` and `format("parquet")` reads appear only in
   * `Tables.scala`), graft reads no session conf of its own, no
-  * top-level type is left that nothing names, and no 8-line run of
-  * code occurs twice in a file under `src/main/scala/graft/queries`
-  * (a shared CTE chain or evaluator is built once). */
+  * top-level type is left that nothing names, no 8-line run of code
+  * occurs twice in a file under `src/main/scala/graft/queries` (a
+  * shared CTE chain or evaluator is built once), and no main line
+  * constructs a `LogicalRDD` or a `HashPartitioning` (a plan node that
+  * claims a row layout the planner cannot check). */
 class SessionRulesSpec extends SparkSpec {
 
   test("a caller-built session gets the factory session's rows through SparkEntry.queries") {
@@ -182,6 +184,15 @@ class SessionRulesSpec extends SparkSpec {
         }
     }.map { case ((f, _), name) => s"$f: $name" }
     assert(unnamed.isEmpty, s"top-level types nothing names: $unnamed")
+  }
+
+  test("no main line constructs a LogicalRDD or a HashPartitioning") {
+    // a claimed layout the rows do not have gives silently wrong joins
+    val construct = """\bnew\s+[\w.]*\bLogicalRDD\b|\b(?:LogicalRDD|HashPartitioning)\s*\(""".r
+    val sites = mainCode.collect {
+      case (f, l) if construct.findFirstIn(l).isDefined => s"$f: $l"
+    }
+    assert(sites.isEmpty, s"layout claims: $sites")
   }
 
   test("no 8-line run of code occurs twice in a file under src/main/scala/graft/queries") {
